@@ -1,9 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.io.Json.JStr
 object Bench {
+  /** `{"k":v,...}` with compact separators; values are already JSON. */
+  private def obj(kvs: Iterable[(String, Any)]): String =
+    kvs.map { case (k, v) => JStr(k).render + ":" + v }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     def dirBytes(f: java.io.File): Long =
       if (f.isFile) f.length
       else Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
@@ -29,48 +33,9 @@ object Bench {
     // coalesces small stages back down, so the derived count only bites
     // where exchanges are actually heavy — the production posture where
     // shuffle.partitions is a floor, not the working count.
-    val derivedInitialPartitions =
-      math.max(cpus.toLong, inputBytes >> 23).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r4 A/B at sf0.1 (with the family cache barrier below): compressed
-      // 63.6s vs uncompressed 62.6s total — a wash — but compressed keeps
-      // d3/d4 stable (2.7/4.8 vs 3.2/6.6) and is the memory-safe choice at
-      // larger SFs, so it is the default; env-overridable for future A/Bs
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESSED", "true"))
-      // A 122-query battery accumulates driver-side garbage (codegen
-      // classes, broadcast blocks, shuffle registrations) that the
-      // ContextCleaner only reclaims when the driver GCs; the default
-      // 30-minute periodic GC lets that debt land as mid-query pauses
-      // late in the battery (the r10 t23 2.5→11.3 s in-battery
-      // inflation). A tight interval plus the explicit family-barrier
-      // System.gc() below moves reclamation to the barriers.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // A/B seam for the adaptive machinery — measured TWICE in r13, and
-      // AQE stays ON both times. Full-battery A/B at sf0.1 at matched
-      // canaries: 110.1 s on vs 105.3 s off — the ~90 sub-second entries
-      // each shed a little per-stage re-planning overhead — BUT the five
-      // join-heavy entries whose runtime broadcast AQE provides regress
-      // far past the 10% gate without it (t14 +17%, t23 +24%, t36 +33%,
-      // v11 +34%, v12 +18%; confirms the earlier noise-confounded A/B's
-      // per-entry story at clean canaries). A 4% total win that taxes
-      // the scale-bearing joins 20-30% is the wrong trade at every SF,
-      // and at production scale AQE is load-bearing outright (skew
-      // joins, partition coalescing — the d22 sf10 OOM fix rides it).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // A/B seam retained over the derived default above
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          derivedInitialPartitions))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = Session.local(cpus)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      math.max(cpus.toLong, inputBytes >> 23))
     // Contention canary: a fixed pure-CPU probe timed before and after the
     // battery. It reads no files and shuffles one row per core, so any
     // first-vs-last divergence measures machine contention (other processes
@@ -85,9 +50,8 @@ object Bench {
     // not contention; the min of three back-to-back runs is the
     // steady-state number (min-of-2 still flagged a quiet machine at 1.51×
     // once — the first probe's JIT tail).
-    // probe body + tuning history live in graft.testbed.CpuCanary —
-    // the ONE copy shared with the standalone CanaryProbe window-picker
-    def canary(): Double = graft.testbed.CpuCanary.probe(spark, cpus.toInt)
+    // probe body + tuning history live in graft.testbed.CpuCanary
+    def canary(): Double = graft.testbed.CpuCanary.probe(spark, cpus)
     // Warm up until STEADY, not for a fixed count: a single untimed
     // min-of-3 still left enough JIT tail to flag a quiet machine at
     // 1.4-1.6× (r7's false positive — first 0.186 vs last 0.076 with
@@ -98,7 +62,7 @@ object Bench {
     // happened to agree on the JIT tail); the iteration cap keeps a
     // genuinely contended machine (which may never agree) from stalling
     // the bench.
-    val warmRuns = graft.testbed.CpuCanary.warm(spark, cpus.toInt)
+    val warmRuns = graft.testbed.CpuCanary.warm(spark, cpus)
     val canaryFirst = canary()
     // early visibility: the window's health BEFORE the battery spends
     // ~10 min — lets an operator abort a degraded-window recording
@@ -122,7 +86,7 @@ object Bench {
       // as the CPU probe); the repartition exchanges EVERY row with all
       // columns attached, so shuffle bandwidth registers too
       spark.read.parquet(ioPath.getPath)
-        .repartition(cpus.toInt,
+        .repartition(cpus,
           org.apache.spark.sql.functions.col("l_orderkey"))
         .selectExpr(
           "sum(xxhash64(l_partkey, l_quantity, l_returnflag) % 1000000007) as s")
@@ -153,22 +117,14 @@ object Bench {
     // e.g. d12 materializes the shared edge/label cache that d2 then
     // rides, so a per-query number there measures battery position, not
     // operator cost — compare family totals across rounds, or fresh-
-    // session single queries (graft.Profile), never one cached entry.
+    // session single queries (SPARK_GRAFT_ONLY), never one cached entry.
     // The datacube family runs first, then its caches are dropped so the
     // doc battery starts from a clean store (r3's d3/d4 regression was the
     // doc battery inheriting ~2 GB of stale uncompressed cube cache).
-    val docKeys = graft.testbed.DocQueries.queries.keySet
     // SPARK_GRAFT_ONLY=a,b,c: fresh-session timing of a named subset
     // (battery-order cache effects excluded); absent -> full battery,
     // exactly what the round driver runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.toSeq.filter(q => names(q._1))
-      case None => SparkEntry.queries.toSeq
-    }
-    val (docQs, cubeQs) = selected.sortBy(_._1)
-      .partition(q => docKeys.contains(q._1))
+    val (cubeQs, docQs) = SparkEntry.selectedFamilies
     // Mid-battery canary TIMELINE (r18): the endpoint probes alone can
     // miss the window the battery actually ran in — the r18 sf1
     // recording measured first=0.874/last=0.380 ns/row (host calming
@@ -218,9 +174,8 @@ object Bench {
     // w3 joined the list in r15: the battery's most expensive entry runs
     // first in its family (alphabetical) and absorbs the crawl chain's
     // JIT/codegen warm-up; the isolated number is the honest operator cost
-    val retimeNames = sys.env.getOrElse("SPARK_GRAFT_RETIME",
-        "a18_qualifier_prune,d11_dupgram_fraction,d12_dedup_keep,t40_doc_pipeline,w3_crawl_pipeline")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val retimeNames = Seq("a18_qualifier_prune", "d11_dupgram_fraction",
+      "d12_dedup_keep", "t40_doc_pipeline", "w3_crawl_pipeline")
     def retimeOnce(name: String): Double =
       SparkEntry.queries.get(name).map { fn =>
         System.gc()
@@ -233,7 +188,7 @@ object Bench {
         t
       }.getOrElse(-1.0)
     val isolated: Seq[(String, Double)] =
-      if (only.nonEmpty) Seq.empty  // subset runs are already isolated
+      if (SparkEntry.only.nonEmpty) Seq.empty  // subset runs are already isolated
       else retimeNames.filter(SparkEntry.queries.contains)
         .map(name => name -> retimeOnce(name))
     // ---- auto-isolation of in-battery anomalies ---------------------------
@@ -242,8 +197,8 @@ object Bench {
     // official 26.9 s family total did not reproduce — 8.6 s on a judge
     // re-run at a SLOWER canary), and adjudicating it needed a whole
     // fresh battery. Self-adjudicate instead: any entry whose in-battery
-    // time exceeds 2x its PRIOR-ROUND value (canary-scaled, read from the
-    // previous round's bench artifact before this run overwrites it) is
+    // time exceeds 2x its baseline value (canary-scaled, read from the
+    // artifact SPARK_GRAFT_BENCH_PREV names; unset → the gate is off) is
     // re-timed in isolation after the battery, and BOTH numbers ship —
     // a contended-window artifact then carries its own correction.
     // READING the isolated value for CACHE-SHARING entries: the retime
@@ -279,43 +234,14 @@ object Bench {
           .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
         (entries, ns, sf)
       } catch { case scala.util.control.NonFatal(_) => (Map.empty, -1.0, "") }
-    // prior baseline: the newest PRIOR-ROUND artifact under doc/ whose
-    // recorded sf matches this run, never the out path this run will
-    // overwrite (the r17 failure: the on-disk BENCH.json was an earlier
-    // CONTENDED same-round recording, its prev_scaled thresholds ran ~3x
-    // low, and the spurious flags burned the whole retime cap before the
-    // real anomalies were examined). Round-stamped artifacts follow
-    // `doc/BENCH_sf01_r{N}.json` / `doc/BENCH_sf1_r{N}.json`; variants
-    // (contended/quiet/sub) deliberately don't match the pattern. The sf
-    // check reads the candidate's own "sf" field, so a wrong-sf pick is
-    // structurally impossible; env-overridable for ad-hoc comparisons.
-    // the CURRENT round, inferred from the newest driver-written
-    // CORRECTNESS_r{N}.json (written at the END of round N, so during
-    // round N+1 the max is N): candidates are capped STRICTLY BELOW it
-    // (r18 advisory — the newest stamped artifact can be THIS round's
-    // own recording when the official artifact is re-recorded in a
-    // quiet window, and a same-round rerun must not gate against its
-    // own round's numbers). No correctness file → no cap (fresh repo).
-    val currentRound = Option(new java.io.File(".").listFiles)
-      .getOrElse(Array.empty[java.io.File])
-      .flatMap(f => "CORRECTNESS_r([0-9]+)\\.json".r
-        .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      .maxOption.map(_ + 1).getOrElse(Int.MaxValue)
-    val prevPath = sys.env.get("SPARK_GRAFT_BENCH_PREV").getOrElse {
-      val stamped = Option(new java.io.File("doc").listFiles)
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.matches("BENCH_sf[0-9]+_r[0-9]+\\.json"))
-        .filter(f => "_r([0-9]+)\\.json".r.findFirstMatchIn(f.getName)
-          .exists(_.group(1).toInt < currentRound))
-        .sortBy(f => -"_r([0-9]+)\\.json".r.findFirstMatchIn(f.getName)
-          .map(_.group(1).toInt).getOrElse(0))
-      // NO fallback to the out path (r18 review: that would reintroduce
-      // the same-round-contended-baseline failure whenever the sf match
-      // misses — first round at a new SF, or data at a new path); with
-      // no round-stamped baseline the gate simply stays off.
-      stamped.find(f => parsePrev(f.getPath)._3 == sfDir)
-        .map(_.getPath).getOrElse("")
-    }
+    // The baseline is named explicitly, never found: never the out path
+    // this run will overwrite (the r17 failure: the on-disk BENCH.json was
+    // an earlier CONTENDED same-round recording, its prev_scaled
+    // thresholds ran ~3x low, and the spurious flags burned the whole
+    // retime cap before the real anomalies were examined). The sf check
+    // below reads the baseline's own "sf" field, so a wrong-sf baseline
+    // leaves the gate off.
+    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "")
     val (prevQ, prevNs, prevSf) = parsePrev(prevPath)
     // post-battery probe measured HERE (before the gate, after the
     // static retimes) so the gate scales by the same min-of-both
@@ -369,7 +295,7 @@ object Bench {
         t
       }.getOrElse(-1.0)
     val autoIsolated: Seq[(String, Double, Double, Double, Double)] =
-      if (only.nonEmpty || prevQ.isEmpty || prevSf != sfDir) Seq.empty
+      if (SparkEntry.only.nonEmpty || prevQ.isEmpty || prevSf != sfDir) Seq.empty
       else {
         val scaleP = if (prevNs > 0 && nsBattery > 0) nsBattery / prevNs else 1.0
         val flagged = results.flatMap { case (name, cur) =>
@@ -398,16 +324,8 @@ object Bench {
             (name, cur, -1.0, ps, famCanaryOf(name)) }
         retimed ++ unretimed
       }
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v) => q(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => q(k) + ":" + q(v) }
-      .mkString("{", ",", "}")
+    val qs = obj(results)
+    val errJson = obj(errors.map { case (k, v) => k -> JStr(v).render })
     val total = results.map(_._2).filter(_ >= 0).sum
     // canaryLast/nsPerRow are measured above (before the auto-isolation
     // gate, which scales by them). Directional contention rule:
@@ -433,16 +351,13 @@ object Bench {
     val ioMbPerSec =
       if (ioFirst <= 0) -1.0
       else ioBytes / 1048576.0 / math.min(ioFirst, math.max(1e-9, ioLast))
-    val timelineJson = canaryTimeline
-      .map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
+    val timelineJson = obj(canaryTimeline)
     val canaryJson =
       s"""{"first":$canaryFirst,"last":$canaryLast,"contended":$contended,"warmup_runs":$warmRuns,"ns_per_row":$nsPerRow,"ns_per_row_battery":$nsBattery,"timeline":$timelineJson,"io_first":$ioFirst,"io_last":$ioLast,"io_contended":$ioContended,"io_mb_per_sec":$ioMbPerSec}"""
-    val isoJson = isolated.map { case (k, v) => q(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val autoIsoJson = autoIsolated.map { case (k, bat, iso, ps, fc) =>
-      q(k) + ":" +
-        s"""{"battery":$bat,"isolated":$iso,"prev_scaled":$ps,"family_canary":$fc}"""
-    }.mkString("{", ",", "}")
+    val isoJson = obj(isolated)
+    val autoIsoJson = obj(autoIsolated.map { case (k, bat, iso, ps, fc) =>
+      k -> s"""{"battery":$bat,"isolated":$iso,"prev_scaled":$ps,"family_canary":$fc}"""
+    })
     // Cube-battery families (a/g/o/p/s...) run in one block with no
     // per-family barrier, so their totals are per-query sums rather than
     // barrier wall-times — within noise of each other (the doc wall-time
@@ -458,9 +373,7 @@ object Bench {
     cubeFamilyTimes.toSeq.sortBy(_._1).foreach { case (f, t) =>
       familyTimes(f) = familyTimes.getOrElse(f, 0.0) + t
     }
-    val famJson = familyTimes.toSeq.sortBy(_._1)
-      .map { case (k, v) => q(k) + ":" + v }
-      .mkString("{", ",", "}")
+    val famJson = obj(familyTimes.toSeq.sortBy(_._1))
     // Canary-normalized family totals alongside the raw ones: cross-round
     // tables kept needing manual normalization because the official runs
     // land in host windows up to ~1.5x apart (r13 sf1 canary 0.406 vs r15
@@ -475,28 +388,26 @@ object Bench {
     val refNsPerRow = 0.40
     def famNs(f: String): Double = canaryTimeline.getOrElse(f,
       canaryTimeline.getOrElse("cube", nsBattery))
-    val famNormJson = familyTimes.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        val ns = famNs(k)
-        q(k) + ":" + (v * (if (ns > 0) refNsPerRow / ns else 1.0))
-      }
-      .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$famJson,"families_normalized":$famNormJson,"canary_ref_ns_per_row":$refNsPerRow,"isolated":$isoJson,"auto_isolated":$autoIsoJson,"errors":$errJson,"canary":$canaryJson,"sf":"$sfDir"}"""
+    val famNormJson = obj(familyTimes.toSeq.sortBy(_._1).map { case (k, v) =>
+      val ns = famNs(k)
+      k -> v * (if (ns > 0) refNsPerRow / ns else 1.0)
+    })
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$famJson,"families_normalized":$famNormJson,"canary_ref_ns_per_row":$refNsPerRow,"isolated":$isoJson,"auto_isolated":$autoIsoJson,"errors":$errJson,"canary":$canaryJson,"sf":${JStr(sfDir).render}}"""
     println(json)
     // COMPACT summary line, printed LAST (r20 verdict #5): the driver
     // captures a bounded stdout tail (~2000 chars) and the full JSON line
     // above outgrew it rounds ago (every BENCH_r{N}.json since r16 parsed
-    // null). This second line is <= ~1200 chars at the current family
-    // count, so the tail always contains one complete parseable JSON
-    // object; the full per-query map still ships via the line above and
-    // the $outPath file. Same numbers, no methodology change.
-    val compact = s"""{"metric":"total_compact","total_sec":$total,"n":${results.size},"n_errors":${errors.size},"cpus":$cpus,"canary_ns_per_row":$nsPerRow,"canary_battery":$nsBattery,"contended":$contended,"families":$famJson,"sf":"$sfDir","out":"$outPath"}"""
+    // null). This second line carries only scalars, so its length is
+    // bounded whatever the battery holds and the tail always contains one
+    // complete parseable JSON object; the per-query and per-family maps
+    // ship via the line above and the $outPath file.
+    val compact = s"""{"metric":"total_compact","total_sec":$total,"n":${results.size},"n_errors":${errors.size},"cpus":$cpus,"canary_ns_per_row":$nsPerRow,"canary_battery":$nsBattery,"contended":$contended,"sf":${JStr(sfDir).render},"out":${JStr(outPath).render}}"""
     println(compact)
     // The driver captures stdout with a bounded tail, and two rounds in a
     // row (r14, r15) the official BENCH_r{N}.json arrived truncated with
     // the per-query dict unusable. The file write makes the artifact
-    // self-sufficient: BENCH.json at the working directory (repo root
-    // under sbt), env-overridable for ad-hoc runs.
+    // self-sufficient: BENCH.c$cpus.json at the working directory (repo
+    // root under sbt), SPARK_GRAFT_BENCH_OUT overrides it.
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outPath),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit dump: `.explain("formatted")` for selected battery queries.
   * Usage: runMain graft.Explain [sfDir] [query ...]
   */
@@ -9,15 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wanted = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = Session.local()
     val names =
       if (wanted.nonEmpty) wanted
       else Set("a4_global_timeseries", "a8_subtile_agg", "a17_tile_bins",

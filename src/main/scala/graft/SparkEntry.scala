@@ -27,4 +27,19 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     DatacubeQueries.oracles ++ DocQueries.oracles
+
+  /** `SPARK_GRAFT_ONLY=a,b,c` names a subset of the battery (local
+    * iteration on a few entries in a fresh session); absent → all. */
+  val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** The selected entries as (datacube family, doc family), each sorted by
+    * name. Callers run the cube family first and drop its caches before
+    * the doc family, which keeps peak cache memory bounded. */
+  def selectedFamilies: (Seq[(String, Q)], Seq[(String, Q)]) = {
+    val docKeys = DocQueries.queries.keySet
+    val (doc, cube) = queries.toSeq.filter(q => only.forall(_(q._1))).sortBy(_._1)
+      .partition(q => docKeys(q._1))
+    (cube, doc)
+  }
 }

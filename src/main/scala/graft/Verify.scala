@@ -1,27 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.io.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.parquet stores TIMESTAMP(NANOS), which Spark 4
-      // otherwise refuses to read (PARQUET_TYPE_ILLEGAL); read as long nanos.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // compressed caches: the stable + memory-safe configuration (see the
-      // r4 A/B note in Bench); env-overridable for future A/Bs
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESSED", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // A query that errors must be a red row, not a silently vanished one:
     // every failure is recorded in _errors.json alongside the dumps (in r8/r9
@@ -36,41 +21,18 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // SPARK_GRAFT_ONLY=a,b,c: dump a named subset (local iteration on a
-    // single query without paying for the full battery); absent -> all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.toSeq.filter(q => names(q._1))
-      case None => SparkEntry.queries.toSeq
-    }
     // datacube family first, then drop its caches before the doc battery
     // (same family barrier as Bench — keeps peak cache memory bounded)
-    val docKeys = graft.testbed.DocQueries.queries.keySet
-    val (docQs, cubeQs) = selected.sortBy(_._1)
-      .partition(q => docKeys.contains(q._1))
+    val (cubeQs, docQs) = SparkEntry.selectedFamilies
     dump(cubeQs)
     graft.testbed.DatacubeQueries.clearCaches(spark)
     dump(docQs)
     graft.testbed.DocQueries.clearCaches(spark)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
+    // Json.JStr escapes backslash, quote and ALL control chars (<0x20): a
+    // tab or CR in builder-authored SQL would otherwise make the driver's
+    // json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.of(SparkEntry.oracleSql).render)
+    Files.writeString(Paths.get(s"$outDir/_errors.json"), Json.of(errors).render)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -64,7 +64,7 @@ private[pipeline] object KeepJoin {
       broadcastLimit: Long = BroadcastIdLimit,
       bloomLimit: Long = BloomIdLimit
   ): DataFrame = {
-    // A/B seam (the SPARK_GRAFT_AQE convention): force a tier for
+    // A/B seam: force a tier for
     // paired same-host-window measurements — "broadcast" | "bloom" |
     // "plain"; absent = the size gate decides. Measurement seam only;
     // production callers never set it.

@@ -90,109 +90,110 @@ object Pipeline {
     * SEQUENTIALLY (the reference gates annual on monthly completion to
     * bound cluster memory, flows/data_pipeline.py:1063-1069); the validated
     * frame and each temporal cube are cached at the reference's persist
-    * points and unpersisted when their chain ends. */
+    * points and unpersisted when their chain ends or fails. */
   def run(spark: SparkSession, cfg: PipelineConfig): PipelineResult = {
     val raw = Ingest.readData(spark, cfg.dataPaths)
     val vr = Validate(raw, cfg.weightColumn, cfg.fillTimestamp)
     val df = vr.df.cache()
-    val numRows = df.count()
+    try {
+      val numRows = df.count()
 
-    val decisions = configurePipeline(df.columns.toSeq, cfg)
-    val writer = Writer.forDest(cfg.destType, decisions.bucket, cfg.s3Conf)
-    var objects = 0L
+      val decisions = configurePipeline(df.columns.toSeq, cfg)
+      val writer = Writer.forDest(cfg.destType, decisions.bucket, cfg.s3Conf)
+      var objects = 0L
 
-    val qualifierCols = Validate.qualifierColumns(df, vr.weightColumn)
-    val regionCols = Regions.extractRegionColumns(df)
-    val features: Seq[String] =
-      df.select("feature").distinct().collect().map(_.getString(0)).sorted.toSeq
-    // Reference semantics: an empty qualifier_map produces NO qualifier
-    // breakdowns (flows/common.py:342 gates on `feature in qualifier_map`).
-    val requestedQualifierMap: Map[String, Seq[String]] = cfg.qualifierMap
+      val qualifierCols = Validate.qualifierColumns(df, vr.weightColumn)
+      val regionCols = Regions.extractRegionColumns(df)
+      val features: Seq[String] =
+        df.select("feature").distinct().collect().map(_.getString(0)).sorted.toSeq
+      // Reference semantics: an empty qualifier_map produces NO qualifier
+      // breakdowns (flows/common.py:342 gates on `feature in qualifier_map`).
+      val requestedQualifierMap: Map[String, Seq[String]] = cfg.qualifierMap
 
-    // ---- raw data + per-feature counts (A13) ------------------------------
-    val rowsPerFeature: Map[String, Long] =
-      df.groupBy("feature").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val smallFeatures = rowsPerFeature.filter(_._2 <= cfg.rawCountThreshold).keySet
-    if (smallFeatures.nonEmpty) {
-      val rawCols = df.columns.filterNot(_ == "feature").toSeq
-      val rawIdx = rawCols.map(df.schema.fieldIndex)
-      objects += GroupSink.writeGroups(
-        df.filter(col("feature").isin(smallFeatures.toSeq: _*)),
-        keyCols = Seq("feature"), sortCols = Seq("timestamp"),
-        render = (key, rows) => (
-          s"${cfg.modelId}/${cfg.runId}/raw/${key.getString(key.fieldIndex("feature"))}/raw/raw.csv",
-          GroupSink.renderCsv(rawCols, rawIdx, rows)),
-        writer = writer)
-    }
+      // ---- raw data + per-feature counts (A13) ------------------------------
+      val rowsPerFeature: Map[String, Long] =
+        df.groupBy("feature").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val smallFeatures = rowsPerFeature.filter(_._2 <= cfg.rawCountThreshold).keySet
+      if (smallFeatures.nonEmpty) {
+        val rawCols = df.columns.filterNot(_ == "feature").toSeq
+        val rawIdx = rawCols.map(df.schema.fieldIndex)
+        objects += GroupSink.writeGroups(
+          df.filter(col("feature").isin(smallFeatures.toSeq: _*)),
+          keyCols = Seq("feature"), sortCols = Seq("timestamp"),
+          render = (key, rows) => (
+            s"${cfg.modelId}/${cfg.runId}/raw/${key.getString(key.fieldIndex("feature"))}/raw/raw.csv",
+            GroupSink.renderCsv(rawCols, rawIdx, rows)),
+          writer = writer)
+      }
 
-    // ---- region lists + qualifier lists (A14/A15) -------------------------
-    objects += writeRegionLists(df, regionCols, features, cfg, writer)
-    val qualifierCounts = writeQualifierLists(df, qualifierCols, features, cfg, writer)
-    if (qualifierCols.nonEmpty) objects += features.size.toLong * (qualifierCols.size + 1)
+      // ---- region lists + qualifier lists (A14/A15) -------------------------
+      objects += writeRegionLists(df, regionCols, features, cfg, writer)
+      val qualifierCounts = writeQualifierLists(df, qualifierCols, features, cfg, writer)
+      if (qualifierCols.nonEmpty) objects += features.size.toLong * (qualifierCols.size + 1)
 
-    // max_count pruning runs once, before ALL output tasks
-    // (reference: flows/data_pipeline.py:995-996) — bounds every downstream
-    // breakdown (and the driver-side pivot collect) by thresholds.maxCount.
-    val (qualifierMap, prunedQualifierCols) = Qualifiers.applyQualifierCountLimit(
-      requestedQualifierMap, qualifierCols, qualifierCounts, cfg.thresholds.maxCount)
+      // max_count pruning runs once, before ALL output tasks
+      // (reference: flows/data_pipeline.py:995-996) — bounds every downstream
+      // breakdown (and the driver-side pivot collect) by thresholds.maxCount.
+      val (qualifierMap, prunedQualifierCols) = Qualifiers.applyQualifierCountLimit(
+        requestedQualifierMap, qualifierCols, qualifierCounts, cfg.thresholds.maxCount)
 
-    // ---- monthly + annual chains ------------------------------------------
-    var monthTsSize: Map[String, Long] = Map.empty
-    var yearTsSize: Map[String, Long] = Map.empty
-    for (timeRes <- Seq("month", "year")
-         if (timeRes == "month" && decisions.computeMonthly) ||
-           (timeRes == "year" && decisions.computeAnnual)) {
-      val t = Temporal.aggregate(df, timeRes, vr.weightColumn).cache()
-      try {
-        if (decisions.runs(OutputTask.GlobalTimeseries)) {
-          val (written, tsSize) =
-            globalTimeseries(t, prunedQualifierCols, qualifierMap, vr.weightColumn, cfg, timeRes, writer)
-          objects += written
-          if (timeRes == "month") monthTsSize = tsSize else yearTsSize = tsSize
-        }
-        if (decisions.runs(OutputTask.RegionalStats))
-          objects += regionalStats(t, regionCols, vr.weightColumn, cfg, timeRes, writer)
-        if (decisions.runs(OutputTask.RegionalTimeseries))
-          objects += regionalTimeseries(t, regionCols, prunedQualifierCols, qualifierMap,
-            qualifierCounts, vr.weightColumn, cfg, timeRes, writer)
-        if (decisions.runs(OutputTask.RegionalAggregation))
-          objects += regionalAggregation(t, regionCols, prunedQualifierCols, qualifierMap,
-            vr.weightColumn, cfg, timeRes, writer)
-        if (decisions.runs(OutputTask.ComputeTiles)) {
-          // A8: weight forcibly disabled — the tile proto has no wavg
-          val subtiles = subtileAgg(t).cache()
-          try {
-            objects += gridStats(subtiles, cfg, timeRes, writer)
-            objects += Tiling.saveTiles(
-              Tiling.encodeTiles(Tiling.binsPyramid(subtiles)),
-              writer, cfg.modelId, cfg.runId, timeRes)
-          } finally subtiles.unpersist()
-        }
-      } finally t.unpersist()
-    }
+      // ---- monthly + annual chains ------------------------------------------
+      var monthTsSize: Map[String, Long] = Map.empty
+      var yearTsSize: Map[String, Long] = Map.empty
+      for (timeRes <- Seq("month", "year")
+           if (timeRes == "month" && decisions.computeMonthly) ||
+             (timeRes == "year" && decisions.computeAnnual)) {
+        val t = Temporal.aggregate(df, timeRes, vr.weightColumn).cache()
+        try {
+          if (decisions.runs(OutputTask.GlobalTimeseries)) {
+            val (written, tsSize) =
+              globalTimeseries(t, prunedQualifierCols, qualifierMap, vr.weightColumn, cfg, timeRes, writer)
+            objects += written
+            if (timeRes == "month") monthTsSize = tsSize else yearTsSize = tsSize
+          }
+          if (decisions.runs(OutputTask.RegionalStats))
+            objects += regionalStats(t, regionCols, vr.weightColumn, cfg, timeRes, writer)
+          if (decisions.runs(OutputTask.RegionalTimeseries))
+            objects += regionalTimeseries(t, regionCols, prunedQualifierCols, qualifierMap,
+              qualifierCounts, vr.weightColumn, cfg, timeRes, writer)
+          if (decisions.runs(OutputTask.RegionalAggregation))
+            objects += regionalAggregation(t, regionCols, prunedQualifierCols, qualifierMap,
+              vr.weightColumn, cfg, timeRes, writer)
+          if (decisions.runs(OutputTask.ComputeTiles)) {
+            // A8: weight forcibly disabled — the tile proto has no wavg
+            val subtiles = subtileAgg(t).cache()
+            try {
+              objects += gridStats(subtiles, cfg, timeRes, writer)
+              objects += Tiling.saveTiles(
+                Tiling.encodeTiles(Tiling.binsPyramid(subtiles)),
+                writer, cfg.modelId, cfg.runId, timeRes)
+            } finally subtiles.unpersist()
+          }
+        } finally t.unpersist()
+      }
 
-    // ---- summary + results.json -------------------------------------------
-    val summaryValues: Option[Json.JValue] =
-      if (decisions.computeSummary) Some(outputSummary(df, vr.weightColumn)) else None
+      // ---- summary + results.json -------------------------------------------
+      val summaryValues: Option[Json.JValue] =
+        if (decisions.computeSummary) Some(outputSummary(df, vr.weightColumn)) else None
 
-    if (decisions.runs(OutputTask.RecordResults)) {
-      val results = recordResultsJson(
-        numRows = numRows, rowsPerFeature = rowsPerFeature,
-        numMissingTs = vr.numMissingTs, numInvalidTs = vr.numInvalidTs,
-        numMissingVal = vr.numMissingVal, regionColumns = regionCols,
-        features = features, rawCountThreshold = cfg.rawCountThreshold,
-        computeTiles = decisions.runs(OutputTask.ComputeTiles),
-        computeMonthly = decisions.computeMonthly,
-        computeAnnual = decisions.computeAnnual,
-        hasWeights = vr.weightColumn.nonEmpty,
-        monthTsSize = Some(monthTsSize), yearTsSize = Some(yearTsSize),
-        summaryValues = summaryValues)
-      writer.write(results, s"${cfg.modelId}/${cfg.runId}/results/results.json")
-      objects += 1
-    }
-    df.unpersist()
-    PipelineResult(numRows, rowsPerFeature, features, regionCols, objects)
+      if (decisions.runs(OutputTask.RecordResults)) {
+        val results = recordResultsJson(
+          numRows = numRows, rowsPerFeature = rowsPerFeature,
+          numMissingTs = vr.numMissingTs, numInvalidTs = vr.numInvalidTs,
+          numMissingVal = vr.numMissingVal, regionColumns = regionCols,
+          features = features, rawCountThreshold = cfg.rawCountThreshold,
+          computeTiles = decisions.runs(OutputTask.ComputeTiles),
+          computeMonthly = decisions.computeMonthly,
+          computeAnnual = decisions.computeAnnual,
+          hasWeights = vr.weightColumn.nonEmpty,
+          monthTsSize = Some(monthTsSize), yearTsSize = Some(yearTsSize),
+          summaryValues = summaryValues)
+        writer.write(results, s"${cfg.modelId}/${cfg.runId}/results/results.json")
+        objects += 1
+      }
+      PipelineResult(numRows, rowsPerFeature, features, regionCols, objects)
+    } finally df.unpersist()
   }
 
   // ---- stage implementations ----------------------------------------------

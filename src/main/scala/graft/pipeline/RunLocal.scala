@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 import graft.testbed.Datacube
 
 /** Local end-to-end smoke run: materializes the TPC-H-ish datacube mapping
@@ -13,16 +11,7 @@ object RunLocal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft_pipeline_out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = graft.Session.local()
 
     val input = s"$outDir/input"
     val cube = Datacube(spark, sfDir)

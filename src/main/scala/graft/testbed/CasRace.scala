@@ -56,12 +56,7 @@ object CasRace {
   def main(args: Array[String]): Unit = {
     val appendsPerSide = args.headOption.map(_.toInt).getOrElse(20)
     val urlsPerAppend = 30
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("graft-casrace").toString
@@ -130,12 +125,7 @@ object CasRace {
 object CasRaceWriter {
   def main(args: Array[String]): Unit = {
     val Array(dir, nStr, kStr) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     var retries = 0
     (0 until nStr.toInt).foreach { i =>
       retries += CasRace.appendWithRetry(spark, dir,

@@ -2,13 +2,10 @@ package graft.testbed
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE copy of the CPU contention canary shared by [[graft.Bench]]
-  * (recorded into every artifact) and [[CanaryProbe]] (the standalone
-  * window-picker): a fixed pure-CPU probe — no files, one row per core
+/** The CPU contention canary [[graft.Bench]] records into every
+  * artifact: a fixed pure-CPU probe — no files, one row per core
   * shuffled — whose constants have been tuned twice (min-of-2 → min-of-3;
-  * fixed warmup → 10%-convergence loop). Keeping both consumers on this
-  * helper keeps their readings comparable; a diverging copy is exactly
-  * the false-quiet-window failure the r17 SCALE.md note records. */
+  * fixed warmup → 10%-convergence loop). */
 object CpuCanary {
 
   val Rows = 200000000L

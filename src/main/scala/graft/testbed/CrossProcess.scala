@@ -34,12 +34,7 @@ object CrossProcess {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("graft-xproc").toString
@@ -107,12 +102,7 @@ object CrossProcessReader {
     val Array(dir, versionStr, itersStr) = args.take(3)
     val version = versionStr.toLong
     val iters = itersStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     var first: Option[String] = None
     var ok = true
     (1 to iters).foreach { _ =>

@@ -1999,7 +1999,7 @@ object DocQueries {
     // artifacts instead of in-flight rankings). The lexical ranking is
     // query-independent here (one term set), so it broadcasts into
     // every vector query's fusion; both index scans stay pruned
-    // (PlanAudit ir9 note), so serving cost is |terms| + nProbe
+    // (plans/r20/ir9_hybrid_retrieval_after.txt), so serving cost is |terms| + nProbe
     // directory reads — corpus-size-free
     "ir9_hybrid_retrieval" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")

@@ -1,7 +1,5 @@
 package graft.testbed
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: the [[graft.io.Manifest]] metadata plane at 100 TB file
   * counts. A family tree at that scale holds ~10^4–10^5 live files
   * (buckets sized at ~512 MB, compaction bounding per-bucket fan-in),
@@ -13,11 +11,7 @@ import org.apache.spark.sql.SparkSession
   * executors by design. Prints one JSON line per file count. */
 object ManifestScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     for (n <- Seq(10000, 100000, 1000000)) {
       val root = java.nio.file.Files
         .createTempDirectory(s"graft-manscale-$n").toString

@@ -1,6 +1,6 @@
 package graft.testbed
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal data generator: writes a K× copy of an sf directory with
@@ -40,14 +40,7 @@ object ScaleUp {
       case Some(list) => list.split(",").map(_.trim).toSet
       case None => _ => true
     }
-    val spark = SparkSession.builder()
-      .appName("graft-scaleup").master("local[*]")
-      .config("spark.sql.shuffle.partitions", Runtime.getRuntime.availableProcessors())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

@@ -1,6 +1,6 @@
 package graft.testbed
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SCALE rehearsal of the COMPOSED steady-state loop (#18e — all five
@@ -29,18 +29,9 @@ object SteadyStateRehearsal {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "12").toInt
     val compactEvery = sys.env.getOrElse("SPARK_GRAFT_COMPACT_EVERY", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = graft.Session.local()
 
     // discovery universe: every document, with a synthetic unit-ish
     // embedding and a URL derived from its id

@@ -1,7 +1,5 @@
 package graft.testbed
 
-import org.apache.spark.sql.SparkSession
-
 /** High-fan-out tile-sink rehearsal — the reference's ONE published perf
   * number is upload-dominated tile writing (~397k objects in ~1 h,
   * reference flows/data_pipeline.py:114-117), and the repo's GroupSink /
@@ -23,15 +21,7 @@ object TileFanout {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_tile_fanout")
     val crc = args.lift(2).contains("crc")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val t0 = System.nanoTime()
     val tiles = graft.tiles.Tiling.encodeTiles(

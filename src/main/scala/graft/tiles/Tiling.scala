@@ -57,52 +57,6 @@ object Tiling {
       .select("feature", "timestamp", "z", "x", "y", "bin", "s_sum_t_sum", "s_sum_t_mean", "weight")
   }
 
-  /** The same pyramid computed PROGRESSIVELY: level L's cells are the
-    * 2×2-halved aggregation of level L+1's cells (sums re-sum exactly), so
-    * the shuffled volume is Σ|cells_L| ≈ 1.33×|finest| for clustered geo
-    * data versus the explode plan's 9×|subtiles| — the scale path when the
-    * subtile frame is large. Spark's ReuseExchange dedups each level's
-    * shuffle across the union branches, so every level is aggregated once.
-    * Trade-off: (maxPrecision − levelDiff) sequential shuffle stages
-    * instead of one — higher latency floor on small inputs.
-    * Output is identical to [[binsPyramid]] (equivalence-tested).
-    */
-  def binsPyramidProgressive(subtiles: DataFrame,
-                             maxPrecision: Int = Schema.MaxSubtilePrecision,
-                             levelDiff: Int = Schema.LevelDiff): DataFrame = {
-    val grid = 1 << levelDiff
-    var cur = subtiles
-      .filter(col("x") >= 0 && col("y") >= 0)
-      .select(col("feature"), col("timestamp"), col("x").as("px"), col("y").as("py"),
-        col("s_sum_t_sum"), col("s_sum_t_mean"), col("s_count").cast("long").as("weight"))
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (level <- (levelDiff to maxPrecision).reverse) {
-      // the FINEST level aggregates too (keys unchanged, no halving):
-      // duplicate input rows for one subtile must SUM exactly as the
-      // explode plan's groupBy does, or the two plans diverge and
-      // encodeTiles' per-bin map silently drops one duplicate's stats
-      val (kx, ky) =
-        if (level < maxPrecision) (shiftright(col("px"), 1), shiftright(col("py"), 1))
-        else (col("px"), col("py"))
-      cur = cur
-        .groupBy(col("feature"), col("timestamp"), kx.as("hpx"), ky.as("hpy"))
-        .agg(sum("s_sum_t_sum").as("s_sum_t_sum"),
-          sum("s_sum_t_mean").as("s_sum_t_mean"),
-          sum("weight").as("weight"))
-        .withColumnRenamed("hpx", "px").withColumnRenamed("hpy", "py")
-      parts += cur
-        .withColumn("z", lit(level - levelDiff))
-        .withColumn("x", shiftright(col("px"), levelDiff).cast("int"))
-        .withColumn("y", shiftright(col("py"), levelDiff).cast("int"))
-        .withColumn("bin",
-          ((col("px") - shiftleft(col("x"), levelDiff)) +
-            (col("py") - shiftleft(col("y"), levelDiff)) * lit(grid)).cast("int"))
-        .select("feature", "timestamp", "z", "x", "y", "bin",
-          "s_sum_t_sum", "s_sum_t_mean", "weight")
-    }
-    parts.reduce(_.unionByName(_))
-  }
-
   /** Encoded tiles: one row per (feature, timestamp, tile) with the proto
     * bytes. totalBins = 4^levelDiff (the reference's 4^(subtile_z - tile_z),
     * constant because every level pairs with its tile levelDiff up). */

@@ -112,6 +112,23 @@ class PipelineRunSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Writer.forDest("gcs", "gs://bkt") }
   }
 
+  test("a run that fails after caching its input releases the cache") {
+    val outDir = Files.createTempDirectory("grafte2f").toString
+    val input = s"$outDir/input"
+    df("timestamp LONG, country STRING, feature STRING, value DOUBLE",
+      Seq(Row(0L, "A", "F1", 1.0), Row(86400000L, "B", "F1", 2.0)))
+      .write.parquet(input)
+    // the validated frame is cached and counted (so its cache-manager
+    // entry holds a persisted RDD) before the writer is built and throws
+    def cached = spark.sparkContext.getPersistentRDDs.size
+    val before = cached
+    intercept[IllegalArgumentException] {
+      Pipeline.run(spark, PipelineConfig("m5", "r5", Seq(input),
+        destType = "bogus", modelBucket = s"$outDir/bucket"))
+    }
+    assert(cached <= before)
+  }
+
   test("run with no region columns completes and skips regional outputs") {
     val outDir = Files.createTempDirectory("grafte2c").toString
     val input = s"$outDir/input"

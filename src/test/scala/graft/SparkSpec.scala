@@ -30,21 +30,12 @@ object SparkSpec {
   // DAGScheduler stops the context in a new thread) that a plain
   // `lazy val` then serves, stopped, to every remaining suite. Rebuild
   // when the held context is stopped so at most the suite the teardown
-  // landed in is affected, never the rest of the run.
+  // landed in is affected, never the rest of the run. Four cores whatever
+  // the host: the fixtures are a handful of rows, and a fixed partition
+  // count keeps the suites' plans host-independent.
   private var s: SparkSession = null
   def session: SparkSession = synchronized {
-    if (s == null || s.sparkContext.isStopped) s = build()
-    s
-  }
-  private def build(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(s)
+    if (s == null || s.sparkContext.isStopped) s = Session.local(cpus = 4)
     s
   }
 }

@@ -51,27 +51,25 @@ class TilingSpec extends SparkSpec {
       1959 -> (80.0, 40.0, 3.0)))
   }
 
-  test("progressive pyramid equals the explode pyramid at every level") {
+  test("pyramid sums duplicate subtile rows into one row per bin") {
+    // two input rows for the SAME subtile must aggregate into one bin,
+    // or encodeTiles' per-bin map silently drops one duplicate's stats
     val cols = Seq("feature", "timestamp", "z", "x", "y", "bin",
       "s_sum_t_sum", "s_sum_t_mean", "weight")
-    val a = rowSet(Tiling.binsPyramid(subtiles).select(cols.head, cols.tail: _*))
-    val b = rowSet(Tiling.binsPyramidProgressive(subtiles).select(cols.head, cols.tail: _*))
-    assert(a === b)
-    assert(a.nonEmpty)
-  }
-
-  test("progressive pyramid sums duplicate subtile rows like the explode plan") {
-    // two input rows for the SAME subtile: the finest level must aggregate
-    // them (a previously-unaggregated finest level emitted duplicate bins,
-    // and encodeTiles' per-bin map silently dropped one)
-    val dup = subtiles.unionByName(subtiles)
-    val cols = Seq("feature", "timestamp", "z", "x", "y", "bin",
-      "s_sum_t_sum", "s_sum_t_mean", "weight")
-    val a = rowSet(Tiling.binsPyramid(dup).select(cols.head, cols.tail: _*))
-    val b = rowSet(Tiling.binsPyramidProgressive(dup).select(cols.head, cols.tail: _*))
-    assert(a === b)
-    assert(b.map(r => (r(0), r(1), r(2), r(3), r(4), r(5))).size === b.size,
-      "one row per (feature, timestamp, z, x, y, bin)")
+    def pyramid(in: org.apache.spark.sql.DataFrame): Map[Seq[Any], Seq[Any]] = {
+      val rows = Tiling.binsPyramid(in).select(cols.head, cols.tail: _*).collect()
+        .map(_.toSeq)
+      val byKey = rows.map(r => r.take(6) -> r.drop(6)).toMap
+      assert(byKey.size === rows.length, "one row per (feature, timestamp, z, x, y, bin)")
+      byKey
+    }
+    val single = pyramid(subtiles)
+    val doubled = pyramid(subtiles.unionByName(subtiles))
+    assert(single.nonEmpty)
+    assert(doubled === single.view.mapValues(_.map {
+      case d: Double => d * 2
+      case l: Long => l * 2
+    }).toMap)
   }
 
   test("encodeTiles skips bins whose every source value was null") {
