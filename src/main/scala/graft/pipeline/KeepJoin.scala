@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   *     nothing cheaper is exact).
   *
   * All three paths are result-identical (KeepJoinSpec proves it on one
-  * fixture by forcing each tier). */
+  * fixture by forcing each tier through `broadcastLimit` and
+  * `bloomLimit`). */
 private[pipeline] object KeepJoin {
 
   /** Default id-count ceiling for the broadcast tier: 2M ids ≈ 16 MB of
@@ -64,16 +65,6 @@ private[pipeline] object KeepJoin {
       broadcastLimit: Long = BroadcastIdLimit,
       bloomLimit: Long = BloomIdLimit
   ): DataFrame = {
-    // A/B seam: force a tier for
-    // paired same-host-window measurements — "broadcast" | "bloom" |
-    // "plain"; absent = the size gate decides. Measurement seam only;
-    // production callers never set it.
-    val (bLimit, blLimit) = sys.env.get("SPARK_GRAFT_KEEPJOIN") match {
-      case Some("broadcast") => (Long.MaxValue, Long.MaxValue)
-      case Some("bloom") => (0L, Long.MaxValue)
-      case Some("plain") => (0L, 0L)
-      case _ => (broadcastLimit, bloomLimit)
-    }
     val keep = ids.select(col(idColName).as("__graft_keep_id"))
     def plainSemi(c: DataFrame) =
       c.join(keep, corpusIdCol === col("__graft_keep_id"), "left_semi")
@@ -84,10 +75,10 @@ private[pipeline] object KeepJoin {
         case _ => false
       }
     }
-    if (idCount <= bLimit)
+    if (idCount <= broadcastLimit)
       corpus.join(broadcast(keep),
         corpusIdCol === col("__graft_keep_id"), "left_semi")
-    else if (idCount <= blLimit && integralId) {
+    else if (idCount <= bloomLimit && integralId) {
       // bloom_probe is long-keyed (the codegen'd native probe); a
       // non-integral id falls through to the plain semi-join below
       graft.plans.GraftExtensions.register(corpus.sparkSession)

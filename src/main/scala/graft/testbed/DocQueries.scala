@@ -1294,8 +1294,8 @@ object DocQueries {
       // whole-stage codegen + JIT for the bucket/score/dedup pipeline is
       // one-time per JVM PER PLANE COUNT (the plane literals are baked
       // into the generated source), and without this the first query of
-      // each config absorbs its compile (the same attribution hygiene as
-      // the canary's untimed warm-up run)
+      // each config absorbs its compile, charging a one-time JVM cost to
+      // whichever entry happens to run first
       // (tables, planes) pairs: both literals bake into the generated
       // source, so each shipped config warms separately — d16 (8, 4),
       // d8 (8, 7), d10 (8, auto), d7 (12, auto)
