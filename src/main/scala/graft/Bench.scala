@@ -5,13 +5,39 @@ object Bench {
   private def obj(kvs: Iterable[(String, Any)]): String =
     kvs.map { case (k, v) => JStr(k).render + ":" + v }.mkString("{", ",", "}")
 
-  /** One entry's wall seconds (-1 when it failed) and the executor work
-    * that ran while it did. */
-  private final case class Entry(wall: Double, work: graft.obs.Metrics.Totals) {
+  /** One entry's wall seconds (-1 when it failed), the driver thread's CPU
+    * seconds over the same span (planning, codegen, driver-side loops and
+    * collects), and the executor work that ran while it did. */
+  private[graft] final case class Entry(wall: Double, driverCpu: Double,
+                                        work: graft.obs.Metrics.Totals) {
     def cpu: Double = work.cpuNanos / 1e9
-    def json: String = obj(Seq("wall" -> wall, "cpu" -> cpu,
+    def json: String = obj(Seq("wall" -> wall, "cpu" -> cpu, "driver_cpu" -> driverCpu,
       "gc" -> work.gcMillis / 1e3, "shuffle_mb" -> work.shuffleBytes / 1048576.0,
       "spill_mb" -> work.spillBytes / 1048576.0))
+  }
+
+  /** Times one entry's `count()` under a job group named after it, and
+    * returns its wall seconds and driver-thread CPU with the executor work
+    * that ran in it: the difference of the listener totals across the
+    * entry. A failure lands in `errors` and reads as wall -1. */
+  private[graft] def time(spark: org.apache.spark.sql.SparkSession, metrics: graft.obs.Metrics,
+                          errors: scala.collection.mutable.Map[String, String], sfDir: String,
+                          name: String, fn: SparkEntry.Q): Entry = {
+    val sc = spark.sparkContext
+    val thread = java.lang.management.ManagementFactory.getThreadMXBean
+    val before = metrics.drain(sc)
+    sc.setJobGroup(name, name)
+    val cpu0 = thread.getCurrentThreadCpuTime
+    val t0 = System.nanoTime()
+    val wall =
+      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        -1.0
+      }
+      finally sc.clearJobGroup()
+    val driverCpu = (thread.getCurrentThreadCpuTime - cpu0) / 1e9
+    Entry(wall, driverCpu, metrics.drain(sc) - before)
   }
 
   def main(args: Array[String]): Unit = {
@@ -51,24 +77,8 @@ object Bench {
     // A failed query must be visible as a failure, not a fast timing:
     // -1 sec marks it and the error list is emitted alongside.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    /** Times one entry's `count()` under a job group named after it, and
-      * returns its wall seconds with the executor work that ran in it:
-      * the difference of the listener totals across the entry. */
-    def time(name: String, fn: SparkEntry.Q): Entry = {
-      val before = metrics.drain(sc)
-      sc.setJobGroup(name, name)
-      val t0 = System.nanoTime()
-      val wall =
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          -1.0
-        }
-        finally sc.clearJobGroup()
-      Entry(wall, metrics.drain(sc) - before)
-    }
     def run(qs: Seq[(String, SparkEntry.Q)]): Seq[(String, Entry)] =
-      qs.map { case (name, fn) => name -> time(name, fn) }
+      qs.map { case (name, fn) => name -> time(spark, metrics, errors, sfDir, name, fn) }
     // deterministic order: per-query timings comparable across rounds
     // (the first cube-touching query absorbs the cache materialization).
     // Same caveat WITHIN the doc dedup family: alphabetical order means
@@ -118,7 +128,7 @@ object Bench {
       "d12_dedup_keep", "t40_doc_pipeline", "w3_crawl_pipeline")
     def retimeOnce(name: String): Entry = {
       System.gc()
-      val e = time(name, SparkEntry.queries(name))
+      val e = time(spark, metrics, errors, sfDir, name, SparkEntry.queries(name))
       graft.testbed.DatacubeQueries.clearCaches(spark)
       graft.testbed.DocQueries.clearCaches(spark)
       e

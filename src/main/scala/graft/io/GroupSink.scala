@@ -41,7 +41,7 @@ object GroupSink {
     val sorted = df
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions((keyCols ++ sortCols).map(col): _*)
-    val keyIdx = keyCols.map(c => sorted.schema.fieldIndex(c))
+    val keyIdx = keyCols.map(c => sorted.schema.fieldIndex(c)).toArray
 
     sorted.foreachPartition { (rows: Iterator[Row]) =>
       // consecutive-run grouping: rows arrive sorted by key
@@ -49,9 +49,14 @@ object GroupSink {
       while (stream.hasNext) {
         val first = stream.head
         val keyVals = keyIdx.map(first.get)
+        // index loop: the per-row boundary check allocates nothing
+        def sameKey(r: Row): Boolean = {
+          var i = 0
+          while (i < keyIdx.length && r.get(keyIdx(i)) == keyVals(i)) i += 1
+          i == keyIdx.length
+        }
         val group = new Iterator[Row] {
-          def hasNext: Boolean =
-            stream.hasNext && keyIdx.map(stream.head.get) == keyVals
+          def hasNext: Boolean = stream.hasNext && sameKey(stream.head)
           def next(): Row = stream.next()
         }
         val (path, body) = render(first, group)

@@ -34,46 +34,56 @@ case class ValidationResult(
   *  8. `"//"` stripped from region names (object-store path safety);
   *  9. rows with timestamp ≥ int64.max/1e6 counted then dropped.
   *
-  * Scale note: all the counters come from ONE aggregate pass over the frame
-  * (a single job computing every null-count at once), not one pass per
-  * column; the fixes themselves are narrow projections fused by codegen.
+  * Scale note: all the counters (P1's per-column counts and P4/P5/P9)
+  * come from ONE aggregate pass over the input, a single job, not one pass
+  * per column or per step; the fixes themselves are narrow projections
+  * fused by codegen.
   */
 object Validate {
 
   private val ExcludeCols = Set("timestamp", "feature", "value")
   private val LatLngCols = Set("lat", "lng")
 
-  /** Null-or-empty per-column counts in one aggregate pass; returns the set
-    * of columns whose every row is null/whitespace (P1). */
-  def nullOrEmptyCols(df: DataFrame): Seq[String] = {
-    if (df.columns.isEmpty) return Seq.empty
-    val counts = df
-      .select(df.columns.map { c =>
-        val nonEmpty = col(c).isNotNull &&
-          (if (df.schema(c).dataType == StringType) trim(col(c)) =!= "" else lit(true))
-        sum(when(nonEmpty, 1L).otherwise(0L)).as(c)
-      }.toSeq: _*)
-      .head()
-    // sum() over ZERO rows is null — unboxing would NPE; an empty frame's
-    // columns are vacuously all-null, so they count as 0 non-empty rows
-    df.columns.zipWithIndex.collect {
-      case (c, i) if counts.isNullAt(i) || counts.getLong(i) == 0L => c
-    }.toSeq
-  }
-
   def apply(
       input: DataFrame,
       weightColumn: String = "",
       fillTimestamp: Long = 0L
   ): ValidationResult = {
-    // P1: drop all-null columns
-    val dropCols = nullOrEmptyCols(input).filterNot(ExcludeCols.contains)
-    var df = input.drop(dropCols: _*)
-
-    // P2: numeric coercion. try_cast, not cast: Spark 4 defaults ANSI mode
-    // on, where cast THROWS on unparseable strings — try_cast yields null,
+    // P1's per-column counts of rows that are neither null nor whitespace
+    val nonEmpty = input.columns.toSeq.map { c =>
+      val filled = col(c).isNotNull &&
+        (if (input.schema(c).dataType == StringType) trim(col(c)) =!= "" else lit(true))
+      sum(when(filled, 1L).otherwise(0L)).as(c)
+    }
+    // P4/P5/P9 counters, taken BEFORE the infinity scrub: the reference
+    // counts num_missing_val (data_pipeline.py:351) before replacing
+    // infinities with NaN (:363) — an ±inf row is not "missing". They read
+    // the try_cast forms that P2 and the P4 fill apply below, not the raw
+    // columns: a string-typed timestamp column would make a raw >=
+    // comparison an ANSI cast (throws on garbage), and an unparseable
+    // timestamp IS missing — the fill replaces it with fillTimestamp, so it
+    // must be counted. try_cast, not cast: Spark 4 defaults ANSI mode on,
+    // where cast THROWS on unparseable strings — try_cast yields null,
     // matching the reference's pandas to_numeric(errors="coerce").
     def tryDouble(c: String) = expr(s"try_cast(`$c` AS DOUBLE)")
+    val tsCast = expr("try_cast(`timestamp` AS BIGINT)")
+    val counters = Seq(
+      sum(when(tsCast.isNull, 1L).otherwise(0L)).as("missing_ts"),
+      sum(when(tsCast >= Schema.MaxTimestampMs, 1L).otherwise(0L)).as("invalid_ts"),
+      sum(when(tryDouble("value").isNull, 1L).otherwise(0L)).as("missing_val"))
+    // both in ONE aggregate pass over the input
+    val counts: Row = input.select(nonEmpty ++ counters: _*).head()
+    // sum() over ZERO rows is null — unboxing would NPE; an empty frame's
+    // columns are vacuously all-null, so they count as 0 non-empty rows
+    def cnt(i: Int): Long = if (counts.isNullAt(i)) 0L else counts.getLong(i)
+    val n = input.columns.length
+
+    // P1: drop all-null columns
+    val dropCols = input.columns.toSeq.zipWithIndex
+      .collect { case (c, i) if cnt(i) == 0L && !ExcludeCols.contains(c) => c }
+    var df = input.drop(dropCols: _*)
+
+    // P2: numeric coercion (try_cast, as above)
     df = df.withColumn("value", tryDouble("value"))
     // each geo column independently: partial geo data (a lone lat or lng)
     // must still be coerced — it is also excluded from the categorical
@@ -94,23 +104,6 @@ object Validate {
     if (hasWeight)
       df = df.withColumn(weightColumn, coalesce(tryDouble(weightColumn), lit(0.0)))
 
-    // P4/P5/P9 counters in one aggregate pass, BEFORE the infinity scrub:
-    // the reference counts num_missing_val (data_pipeline.py:351) before
-    // replacing infinities with NaN (:363) — an ±inf row is not "missing".
-    // count on the try_cast form, not the raw column: a string-typed
-    // timestamp column would make the raw >= comparison an ANSI cast
-    // (throws on garbage), and an unparseable timestamp IS missing — the
-    // fill below replaces it with fillTimestamp, so it must be counted
-    val tsCast = expr("try_cast(`timestamp` AS BIGINT)")
-    val counterRow: Row = df
-      .agg(
-        sum(when(tsCast.isNull, 1L).otherwise(0L)).as("missing_ts"),
-        sum(when(col("value").isNull, 1L).otherwise(0L)).as("missing_val"),
-        sum(when(tsCast >= Schema.MaxTimestampMs, 1L).otherwise(0L)).as("invalid_ts")
-      )
-      .head()
-    def cnt(i: Int): Long = if (counterRow.isNullAt(i)) 0L else counterRow.getLong(i)
-
     // P7: infinity scrub
     df = df.withColumn("value", when(abs(col("value")) === Double.PositiveInfinity, lit(null)).otherwise(col("value")))
 
@@ -120,10 +113,10 @@ object Validate {
 
     // P4 fill, P9 drop
     df = df
-      .withColumn("timestamp", coalesce(expr("try_cast(`timestamp` AS BIGINT)"), lit(fillTimestamp)))
+      .withColumn("timestamp", coalesce(tsCast, lit(fillTimestamp)))
       .filter(col("timestamp") < Schema.MaxTimestampMs)
 
-    ValidationResult(df, effectiveWeight, cnt(0), cnt(2), cnt(1), dropCols)
+    ValidationResult(df, effectiveWeight, cnt(n), cnt(n + 1), cnt(n + 2), dropCols)
   }
 
   /** P11-adjacent helper: qualifier columns = everything outside the

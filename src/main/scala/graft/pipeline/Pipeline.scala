@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.{GroupSink, Json, Writer}
@@ -104,16 +104,18 @@ object Pipeline {
 
       val qualifierCols = Validate.qualifierColumns(df, vr.weightColumn)
       val regionCols = Regions.extractRegionColumns(df)
-      val features: Seq[String] =
-        df.select("feature").distinct().collect().map(_.getString(0)).sorted.toSeq
+      // every per-feature count and list in one pass; the month and year
+      // bucket counts are the row counts of each feature's global CSV
+      val tsResolutions =
+        if (decisions.runs(OutputTask.GlobalTimeseries)) Seq("month", "year") else Nil
+      val meta = featureMetadata(df, regionCols, qualifierCols, tsResolutions)
+      val features: Seq[String] = meta.map(_.feature).sorted
       // Reference semantics: an empty qualifier_map produces NO qualifier
       // breakdowns (flows/common.py:342 gates on `feature in qualifier_map`).
       val requestedQualifierMap: Map[String, Seq[String]] = cfg.qualifierMap
 
       // ---- raw data + per-feature counts (A13) ------------------------------
-      val rowsPerFeature: Map[String, Long] =
-        df.groupBy("feature").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val rowsPerFeature: Map[String, Long] = meta.map(m => m.feature -> m.rows).toMap
       val smallFeatures = rowsPerFeature.filter(_._2 <= cfg.rawCountThreshold).keySet
       if (smallFeatures.nonEmpty) {
         val rawCols = df.columns.filterNot(_ == "feature").toSeq
@@ -128,8 +130,8 @@ object Pipeline {
       }
 
       // ---- region lists + qualifier lists (A14/A15) -------------------------
-      objects += writeRegionLists(df, regionCols, features, cfg, writer)
-      val qualifierCounts = writeQualifierLists(df, qualifierCols, features, cfg, writer)
+      objects += renderRegionLists(meta, regionCols, cfg, writer)
+      val qualifierCounts = renderQualifierLists(meta, qualifierCols, cfg, writer)
       if (qualifierCols.nonEmpty) objects += features.size.toLong * (qualifierCols.size + 1)
 
       // max_count pruning runs once, before ALL output tasks
@@ -147,19 +149,33 @@ object Pipeline {
         val t = Temporal.aggregate(df, timeRes, vr.weightColumn).cache()
         try {
           if (decisions.runs(OutputTask.GlobalTimeseries)) {
-            val (written, tsSize) =
-              globalTimeseries(t, prunedQualifierCols, qualifierMap, vr.weightColumn, cfg, timeRes, writer)
+            val (written, tsSize) = globalTimeseries(t, prunedQualifierCols, qualifierMap,
+              vr.weightColumn, cfg, timeRes, writer,
+              tsSize = Some(meta.map(m => m.feature -> m.tsSizes(timeRes)).toMap))
             objects += written
             if (timeRes == "month") monthTsSize = tsSize else yearTsSize = tsSize
           }
-          if (decisions.runs(OutputTask.RegionalStats))
-            objects += regionalStats(t, regionCols, vr.weightColumn, cfg, timeRes, writer)
-          if (decisions.runs(OutputTask.RegionalTimeseries))
-            objects += regionalTimeseries(t, regionCols, prunedQualifierCols, qualifierMap,
-              qualifierCounts, vr.weightColumn, cfg, timeRes, writer)
-          if (decisions.runs(OutputTask.RegionalAggregation))
-            objects += regionalAggregation(t, regionCols, prunedQualifierCols, qualifierMap,
-              vr.weightColumn, cfg, timeRes, writer)
+          // one all-levels aggregate feeds the stats and both default passes
+          val regional = Seq(OutputTask.RegionalStats, OutputTask.RegionalTimeseries,
+            OutputTask.RegionalAggregation).exists(decisions.runs)
+          val shared = Option.when(regionCols.nonEmpty && regional) {
+            val (agg, aggCols) = regionalLevels(t, regionCols, vr.weightColumn)
+            (agg.cache(), aggCols)
+          }
+          try {
+            if (decisions.runs(OutputTask.RegionalStats))
+              objects += regionalStats(t, regionCols, vr.weightColumn, cfg, timeRes, writer, shared)
+            if (decisions.runs(OutputTask.RegionalTimeseries))
+              objects += regionalTimeseries(t, regionCols, prunedQualifierCols, qualifierMap,
+                qualifierCounts, vr.weightColumn, cfg, timeRes, writer, shared)
+            if (decisions.runs(OutputTask.RegionalAggregation))
+              objects += regionalAggregation(t, regionCols, prunedQualifierCols, qualifierMap,
+                vr.weightColumn, cfg, timeRes, writer, shared)
+          } finally {
+            // blocking: a lazy release overlaps the next resolution's cube
+            // in the block store and raises the cache peak
+            shared.foreach(_._1.unpersist(blocking = true))
+          }
           if (decisions.runs(OutputTask.ComputeTiles)) {
             // A8: weight forcibly disabled — the tile proto has no wavg
             val subtiles = subtileAgg(t).cache()
@@ -238,7 +254,8 @@ object Pipeline {
   /** A4: global timeseries — default + one breakdown per qualifier. */
   private[graft] def globalTimeseries(
       t: DataFrame, qualifierCols: Seq[String], qualifierMap: Map[String, Seq[String]],
-      weightCol: String, cfg: PipelineConfig, timeRes: String, writer: Writer
+      weightCol: String, cfg: PipelineConfig, timeRes: String, writer: Writer,
+      tsSize: Option[Map[String, Long]] = None
   ): (Long, Map[String, Long]) = {
     var written = 0L
     // default: one global.csv per feature
@@ -250,8 +267,10 @@ object Pipeline {
         s"${cfg.modelId}/${cfg.runId}/$timeRes/${key.getString(key.fieldIndex("feature"))}/timeseries/global/global.csv",
         GroupSink.renderCsv(header, idx, rows)),
       writer)
-    val tsSize: Map[String, Long] =
-      agg.groupBy("feature").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // rows per feature's global.csv; a caller that already counted the
+    // feature's time buckets passes them in and saves this job
+    val sizes: Map[String, Long] = tsSize.getOrElse(
+      agg.groupBy("feature").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
 
     // per qualifier: one wide CSV per (feature, agg column)
     for (q <- qualifierCols) {
@@ -276,24 +295,37 @@ object Pipeline {
         } finally qaggF.unpersist()
       }
     }
-    (written, tsSize)
+    (written, sizes)
   }
+
+  /** The all-levels `(feature, timestamp)` regional aggregate, one
+    * grouping-sets shuffle. [[regionalStats]] and the default passes of
+    * [[regionalTimeseries]] and [[regionalAggregation]] all write from it,
+    * so `run` computes it once per resolution and passes it as `shared`. */
+  private[graft] def regionalLevels(
+      t: DataFrame, regionCols: Seq[String], weightCol: String
+  ): (DataFrame, Seq[String]) =
+    Spatial.aggregateLevels(t, Seq("feature", "timestamp"),
+      regionCols, regionCols.indices, Seq("sum", "mean"), weightCol)
 
   /** A5/A11: regional stats with top-20-capped extrema JSON, ALL admin
     * levels in one grouping-sets shuffle (SURVEY §2.3's flagged idiomatic
     * win over the reference's per-level loop). Scale-safe plan: per-(level,
     * feature) min/max via agg + broadcast join back (no window over a
-    * low-cardinality feature key). */
+    * low-cardinality feature key). `shared` is [[regionalLevels]] of `t`,
+    * already cached by the caller; without it the aggregate is built and
+    * cached here. */
   private[graft] def regionalStats(
       t: DataFrame, regionCols: Seq[String], weightCol: String,
-      cfg: PipelineConfig, timeRes: String, writer: Writer
+      cfg: PipelineConfig, timeRes: String, writer: Writer,
+      shared: Option[(DataFrame, Seq[String])] = None
   ): Long = {
     if (regionCols.isEmpty) return 0L // no admin hierarchy -> no regional outputs
     var written = 0L
-    val (agg0, aggCols0) = Spatial.aggregateLevels(t, Seq("feature", "timestamp"),
-      regionCols, regionCols.indices, Seq("sum", "mean"), weightCol)
+    val (agg0, aggCols0) = shared.getOrElse(regionalLevels(t, regionCols, weightCol))
+    val owned = Option.when(shared.isEmpty)(agg0.cache())
     val aggCols = aggCols0.filterNot(_ == "s_count")
-    val agg = agg0.drop("s_count").cache()
+    val agg = agg0.drop("s_count")
     try {
       val minmax = agg.groupBy("level", "feature").agg(
         aggCols.flatMap(c => Seq(min(c).as(s"mn_$c"), max(c).as(s"mx_$c"))).head,
@@ -341,15 +373,18 @@ object Pipeline {
             body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         },
         writer)
-    } finally agg.unpersist()
+    } finally owned.foreach(_.unpersist())
     written
   }
 
-  /** A6: one timeseries CSV per (feature, region, qualifier value). */
+  /** A6: one timeseries CSV per (feature, region, qualifier value). The
+    * default pass writes from `shared` ([[regionalLevels]] of `t`) when
+    * given. */
   private[graft] def regionalTimeseries(
       t: DataFrame, regionCols: Seq[String], qualifierCols: Seq[String],
       qualifierMap: Map[String, Seq[String]], qualifierCounts: Map[String, Map[String, Long]],
-      weightCol: String, cfg: PipelineConfig, timeRes: String, writer: Writer
+      weightCol: String, cfg: PipelineConfig, timeRes: String, writer: Writer,
+      shared: Option[(DataFrame, Seq[String])] = None
   ): Long = {
     var written = 0L
     val (prunedMap, prunedCols) = Qualifiers.applyQualifierCountLimit(
@@ -368,9 +403,11 @@ object Pipeline {
         prunedMap.collect { case (f, qs) if qs.contains(q) => f }.toSeq)
       val skip = levels.isEmpty || featureFilter.exists(_.isEmpty)
       if (!skip) {
-        val fixed = Seq("feature", "timestamp") ++ qualOpt
-        val (agg, aggCols) =
-          Spatial.aggregateLevels(t, fixed, regionCols, levels, Seq("sum", "mean"), weightCol)
+        val (agg, aggCols) = qualOpt match {
+          case Some(q) => Spatial.aggregateLevels(t, Seq("feature", "timestamp", q),
+            regionCols, levels, Seq("sum", "mean"), weightCol)
+          case None => shared.getOrElse(regionalLevels(t, regionCols, weightCol))
+        }
         val frame = featureFilter match {
           case Some(fs) => agg.filter(col("feature").isin(fs: _*))
           case None => agg
@@ -396,11 +433,14 @@ object Pipeline {
     written
   }
 
-  /** A7: one regions-list CSV per (feature, timestamp[, qualifier]). */
+  /** A7: one regions-list CSV per (feature, timestamp[, qualifier]). The
+    * default pass writes from `shared` ([[regionalLevels]] of `t`) when
+    * given. */
   private[graft] def regionalAggregation(
       t: DataFrame, regionCols: Seq[String], qualifierCols: Seq[String],
       qualifierMap: Map[String, Seq[String]],
-      weightCol: String, cfg: PipelineConfig, timeRes: String, writer: Writer
+      weightCol: String, cfg: PipelineConfig, timeRes: String, writer: Writer,
+      shared: Option[(DataFrame, Seq[String])] = None
   ): Long = {
     if (regionCols.isEmpty) return 0L // no admin hierarchy -> no regional outputs
     var written = 0L
@@ -410,9 +450,11 @@ object Pipeline {
       val featureFilter = qualOpt.map(q =>
         qualifierMap.collect { case (f, qs) if qs.contains(q) => f }.toSeq)
       if (!featureFilter.exists(_.isEmpty)) {
-        val fixed = Seq("feature", "timestamp") ++ qualOpt
-        val (agg, aggCols) = Spatial.aggregateLevels(t, fixed, regionCols,
-          regionCols.indices, Seq("sum", "mean"), weightCol)
+        val (agg, aggCols) = qualOpt match {
+          case Some(q) => Spatial.aggregateLevels(t, Seq("feature", "timestamp", q),
+            regionCols, regionCols.indices, Seq("sum", "mean"), weightCol)
+          case None => shared.getOrElse(regionalLevels(t, regionCols, weightCol))
+        }
         val fr = featureFilter match {
           case Some(fs) => agg.filter(col("feature").isin(fs: _*))
           case None => agg
@@ -499,23 +541,56 @@ object Pipeline {
 
   // ---- metadata artifacts -------------------------------------------------
 
+  /** One feature's metadata: its row count, the sorted distinct region ids
+    * of each present level, the sorted distinct values of each qualifier
+    * column, and its number of time buckets per resolution. */
+  private[graft] final case class FeatureMeta(
+      feature: String, rows: Long, regionLists: Seq[Seq[String]],
+      qualifierLists: Seq[Seq[String]], tsSizes: Map[String, Long])
+
+  /** Every feature's [[FeatureMeta]] from ONE `groupBy("feature")` pass, in
+    * the aggregate's collect order, which is the order `results.json`'s
+    * per-feature maps list features in. A resolution's bucket count is the
+    * number of rows in that feature's global timeseries CSV. */
+  private[graft] def featureMetadata(
+      df: DataFrame, regionCols: Seq[String], qualifierCols: Seq[String],
+      timeResolutions: Seq[String]
+  ): Seq[FeatureMeta] = {
+    def distinctSorted(c: Column) = sort_array(collect_set(c))
+    val aggs = (Seq(count(lit(1))) ++
+      regionCols.indices.map(l => distinctSorted(Regions.joinRegionColumns(regionCols, l))) ++
+      qualifierCols.map(q => distinctSorted(col(q))) ++
+      timeResolutions.map(r => size(collect_set(Temporal.normalizeTime(col("timestamp"), r)))))
+      .zipWithIndex.map { case (a, i) => a.as(s"_m$i") }
+    val (q0, t0) = (2 + regionCols.size, 2 + regionCols.size + qualifierCols.size)
+    df.groupBy("feature").agg(aggs.head, aggs.tail: _*).collect().toSeq.map { r =>
+      FeatureMeta(r.getString(0), r.getLong(1),
+        regionCols.indices.map(l => r.getSeq[String](2 + l)),
+        qualifierCols.indices.map(i => r.getSeq[String](q0 + i)),
+        timeResolutions.zipWithIndex.map { case (res, i) => res -> r.getInt(t0 + i).toLong }.toMap)
+    }
+  }
+
   private[graft] def writeRegionLists(
       df: DataFrame, regionCols: Seq[String], features: Seq[String],
       cfg: PipelineConfig, writer: Writer
+  ): Long =
+    if (regionCols.isEmpty) 0L
+    else renderRegionLists(featureMetadata(df, regionCols, Nil, Nil), regionCols, cfg, writer)
+
+  /** One region_lists.json per feature; returns the objects written. */
+  private def renderRegionLists(
+      meta: Seq[FeatureMeta], regionCols: Seq[String], cfg: PipelineConfig, writer: Writer
   ): Long = {
     if (regionCols.isEmpty) return 0L
-    val aggs = regionCols.indices.map(l =>
-      sort_array(collect_set(Regions.joinRegionColumns(regionCols, l))).as(s"l$l"))
-    val rows = df.groupBy("feature").agg(aggs.head, aggs.tail: _*).collect()
-    rows.foreach { r =>
-      val feature = r.getString(0)
+    meta.foreach { m =>
       val lists = Json.JObj(Schema.RegionLevels.zipWithIndex.map { case (name, l) =>
-        name -> (if (l < regionCols.length) Json.of(r.getSeq[String](l + 1)) else Json.JArr(Nil))
+        name -> (if (l < regionCols.length) Json.of(m.regionLists(l)) else Json.JArr(Nil))
       })
       writer.write(lists.render,
-        s"${cfg.modelId}/${cfg.runId}/raw/$feature/info/region_lists.json")
+        s"${cfg.modelId}/${cfg.runId}/raw/${m.feature}/info/region_lists.json")
     }
-    rows.length.toLong
+    meta.size.toLong
   }
 
   /** Writes per-qualifier value lists + the counts summary; returns
@@ -523,16 +598,18 @@ object Pipeline {
   private[graft] def writeQualifierLists(
       df: DataFrame, qualifierCols: Seq[String], features: Seq[String],
       cfg: PipelineConfig, writer: Writer
+  ): Map[String, Map[String, Long]] =
+    if (qualifierCols.isEmpty) features.map(_ -> Map.empty[String, Long]).toMap
+    else renderQualifierLists(featureMetadata(df, Nil, qualifierCols, Nil), qualifierCols, cfg, writer)
+
+  private def renderQualifierLists(
+      meta: Seq[FeatureMeta], qualifierCols: Seq[String], cfg: PipelineConfig, writer: Writer
   ): Map[String, Map[String, Long]] = {
-    if (qualifierCols.isEmpty) return features.map(_ -> Map.empty[String, Long]).toMap
-    val aggs = qualifierCols.map(q => sort_array(collect_set(col(q))).as(q))
-    val rows = df.groupBy("feature").agg(aggs.head, aggs.tail: _*).collect()
-    rows.map { r =>
-      val feature = r.getString(0)
-      val counts = qualifierCols.zipWithIndex.map { case (q, i) =>
-        val values = r.getSeq[String](i + 1)
+    if (qualifierCols.isEmpty) return meta.map(_.feature -> Map.empty[String, Long]).toMap
+    meta.map { m =>
+      val counts = qualifierCols.zip(m.qualifierLists).map { case (q, values) =>
         writer.write(Json.of(values).render,
-          s"${cfg.modelId}/${cfg.runId}/raw/$feature/info/qualifiers/$q.json")
+          s"${cfg.modelId}/${cfg.runId}/raw/${m.feature}/info/qualifiers/$q.json")
         q -> values.length.toLong
       }.toMap
       writer.write(
@@ -542,8 +619,8 @@ object Pipeline {
             "regional_timeseries_count" -> Json.JLong(cfg.thresholds.regionalTimeseriesCount),
             "regional_timeseries_max_level" -> Json.JLong(cfg.thresholds.regionalTimeseriesMaxLevel))),
           "counts" -> Json.of(counts))).render,
-        s"${cfg.modelId}/${cfg.runId}/raw/$feature/info/qualifier_counts.json")
-      feature -> counts
+        s"${cfg.modelId}/${cfg.runId}/raw/${m.feature}/info/qualifier_counts.json")
+      m.feature -> counts
     }.toMap
   }
 }

@@ -129,6 +129,69 @@ class PipelineRunSpec extends SparkSpec {
     assert(cached <= before)
   }
 
+  /** Weighted regional input without lat/lng: four admin levels, two
+    * qualifier columns, two features over two years. */
+  private def writeRegionalInput(input: String): Unit =
+    df("timestamp LONG, country STRING, admin1 STRING, admin2 STRING, admin3 STRING, " +
+        "feature STRING, value DOUBLE, qa STRING, qb STRING, w DOUBLE",
+      for {
+        (date, i) <- Seq("2022-01-03", "2022-02-10", "2022-02-20", "2023-05-01").zipWithIndex
+        (leaf, j) <- Seq(("A", "AA", "AAA", "AAAA"), ("A", "AA", "AAB", "AABA"),
+          ("A", "AB", "ABA", "ABAA"), ("B", "BA", "BAA", "BAAA")).zipWithIndex
+        feature <- Seq("F1", "F2")
+      } yield Row(ts(date), leaf._1, leaf._2, leaf._3, leaf._4, feature,
+        (i * 4 + j).toDouble, s"a${j % 2}", s"b${i % 3}", 1.0 + j))
+      .write.parquet(input)
+
+  test("a run with regions and qualifiers releases every cache it makes") {
+    val outDir = Files.createTempDirectory("grafte2r").toString
+    val input = s"$outDir/input"
+    writeRegionalInput(input)
+    def cached = spark.sparkContext.getPersistentRDDs.size
+    val before = cached
+    val result = Pipeline.run(spark, PipelineConfig("m6", "r6", Seq(input),
+      weightColumn = "w", qualifierMap = Map("F1" -> Seq("qa"), "F2" -> Seq("qa", "qb")),
+      destType = "file", modelBucket = s"$outDir/bucket"))
+    assert(result.regionColumns === Seq("country", "admin1", "admin2", "admin3"))
+    assert(Files.exists(Paths.get(outDir,
+      "bucket/m6/r6/year/F2/regional/admin3/aggs/1640995200000/default/default.csv")))
+    assert(cached === before)
+  }
+
+  test("a weighted regional run issues at most 45 Spark jobs") {
+    // the shape of the regional fan-out benchmark: an indicator run with
+    // every task selected, four admin levels, qualifier columns but no
+    // breakdown, no lat/lng. It took 63 jobs before the run shared one
+    // regional aggregate per resolution and made one metadata and one
+    // validation pass.
+    val outDir = Files.createTempDirectory("grafte2j").toString
+    val input = s"$outDir/input"
+    writeRegionalInput(input)
+    val cfg = PipelineConfig("m7", "r7", Seq(input), isIndicator = true,
+      weightColumn = "w", destType = "none")
+    val sc = spark.sparkContext
+    val drains = new graft.obs.Metrics
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith("graft.obs.drain."))) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(drains)
+    sc.addSparkListener(counter)
+    try {
+      drains.drain(sc)
+      jobs.set(0)
+      Pipeline.run(spark, cfg)
+      drains.drain(sc) // every job start of the run has reached the bus
+    } finally {
+      sc.removeSparkListener(counter)
+      sc.removeSparkListener(drains)
+    }
+    info(s"${jobs.get} jobs")
+    assert(jobs.get <= 45)
+  }
+
   test("run with no region columns completes and skips regional outputs") {
     val outDir = Files.createTempDirectory("grafte2c").toString
     val input = s"$outDir/input"

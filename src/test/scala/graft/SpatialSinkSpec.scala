@@ -86,6 +86,26 @@ class SpatialSinkSpec extends SparkSpec {
         "1,186.0,93.0,4.8,2.4,2\n")
   }
 
+  test("sink runs split on null keys and on a change in the last key column only") {
+    val dir = Files.createTempDirectory("graftsinkkeys").toString
+    val in = df("k1 STRING, k2 STRING, v INT", Seq(
+      Row("a", "x", 1), Row("a", "x", 2), Row("a", "y", 3), Row("a", null, 4),
+      Row(null, "x", 5), Row(null, null, 6), Row(null, null, 7), Row("b", "y", 8)))
+    // one partition, so adjacent groups meet inside one sorted run
+    val conf = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val n = try GroupSink.writeGroups(in, Seq("k1", "k2"), Seq("v"),
+      (key, rows) => (s"${key.getString(0)}_${key.getString(1)}.csv",
+        rows.map(_.getInt(2)).mkString(",").getBytes("UTF-8")),
+      FileWriter(dir))
+    finally spark.conf.set("spark.sql.shuffle.partitions", conf)
+    val got = Files.list(Paths.get(dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(p => p.getFileName.toString -> Files.readString(p)).toMap
+    assert(got === Map("a_x.csv" -> "1,2", "a_y.csv" -> "3", "a_null.csv" -> "4",
+      "null_x.csv" -> "5", "null_null.csv" -> "6,7", "b_y.csv" -> "8"))
+    assert(n === 6L)
+  }
+
   test("csv header cells escape data-derived names like body cells") {
     // pivoted qualifier VALUES become column names — a comma in one must
     // quote, or the header has more columns than every data row
