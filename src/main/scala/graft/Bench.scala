@@ -1,5 +1,6 @@
 package graft
 import graft.io.Json.JStr
+import graft.testbed.Fixtures
 object Bench {
   /** `{"k":v,...}` with compact separators; values are already JSON. */
   private def obj(kvs: Iterable[(String, Any)]): String =
@@ -77,61 +78,29 @@ object Bench {
     // A failed query must be visible as a failure, not a fast timing:
     // -1 sec marks it and the error list is emitted alongside.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def run(qs: Seq[(String, SparkEntry.Q)]): Seq[(String, Entry)] =
-      qs.map { case (name, fn) => name -> time(spark, metrics, errors, sfDir, name, fn) }
-    // deterministic order: per-query timings comparable across rounds
-    // (the first cube-touching query absorbs the cache materialization).
-    // Same caveat WITHIN the doc dedup family: alphabetical order means
-    // e.g. d12 materializes the shared edge/label cache that d2 then
-    // rides, so a per-query number there measures battery position, not
-    // operator cost — compare family totals across rounds, or fresh-
-    // session single queries (SPARK_GRAFT_ONLY), never one cached entry.
-    // The datacube family runs first, then its caches are dropped so the
-    // doc battery starts from a clean store (r3's d3/d4 regression was the
-    // doc battery inheriting ~2 GB of stale uncompressed cube cache).
-    // SPARK_GRAFT_ONLY=a,b,c: fresh-session timing of a named subset
-    // (battery-order cache effects excluded); absent -> full battery,
-    // exactly what the round driver runs.
-    val (cubeQs, docQs) = SparkEntry.selectedFamilies
-    val cubeResults = run(cubeQs)
-    graft.testbed.DatacubeQueries.clearCaches(spark)
-    // The doc battery runs as prefix FAMILIES (d, g, ir, m, o, t, v) with a
-    // cache-drop + GC barrier between them: every shared materialization
-    // (jaccard edges, CC labels, classifier model) lives within one prefix,
-    // so the barrier costs only a table re-cache (the tables are row-tiny at
-    // bench SFs) while keeping cache pressure and cleaner debt from one
-    // family from landing as mid-query GC pauses in a later one — the r10
-    // in-battery variance (same code: 232 s pre-run vs 342 s official,
-    // t23 2.5 s vs 11.3 s).
-    def familyOf(name: String): String = name.takeWhile(!_.isDigit)
-    val docResults = docQs.groupBy(q => familyOf(q._1)).toSeq.sortBy(_._1).flatMap { case (_, qs) =>
-      val rs = run(qs)
-      graft.testbed.DocQueries.clearCaches(spark)
+    // Deterministic order. Within a family the first entry to touch a
+    // shared fixture pays its build (d2 builds the edges d12 rides), so
+    // compare family totals, or fresh-session single entries
+    // (SPARK_GRAFT_ONLY=a,b,c), never one cached entry. Each family runs
+    // in its own fixture scope, so it starts from a clean store (the doc
+    // battery once inherited ~2 GB of stale cube cache), and a GC at its
+    // start keeps the last family's cleaner debt from landing as GC pauses
+    // mid-entry (t23 once read 2.5 s in one run and 11.3 s in the next).
+    val results = SparkEntry.eachFamily(spark, errors) { qs =>
       System.gc()
-      rs
-    }
-    val results = (cubeResults ++ docResults).sortBy(_._1)
-    // Known battery-order cache absorbers, re-timed AFTER the battery from
-    // a cleared-cache, settled state (same conditions as a fresh-session
-    // SPARK_GRAFT_ONLY run). Their in-battery numbers measure position —
-    // a18 absorbs a17's 534k-row eviction/GC wake (17.1 s in-battery vs
-    // 1.1 s isolated in the r9 audit), d11/d12 absorb or ride the shared
-    // CC/edge materializations, t40 (multi-checkpoint pipeline) eats
-    // whatever GC debt the t family accrued before it (12.0 s in the r12
-    // official run vs 2.8 s quiet — the variance class that cost r12 a
-    // phantom regression) — so the honest per-operator cost is
-    // published alongside, not instead of, the battery numbers.
-    // w3 joined the list in r15: the battery's most expensive entry runs
-    // first in its family (alphabetical) and absorbs the crawl chain's
-    // JIT/codegen warm-up; the isolated number is the honest operator cost
+      qs.map { case (name, fn) => name -> time(spark, metrics, errors, sfDir, name, fn) }
+    }.flatten.sortBy(_._1)
+    // Entries whose in-battery number measures their position, re-timed
+    // after the battery, each in its own scope (the conditions of a
+    // fresh-session SPARK_GRAFT_ONLY run): a18 absorbs a17's eviction and
+    // GC wake (17.1 s in the battery vs 1.1 s alone), d11/d12 absorb or
+    // ride the shared CC/edge fixtures, t40 eats the t family's GC debt
+    // (12.0 s vs 2.8 s), and w3 absorbs the crawl chain's JIT warm-up.
     val retimeNames = Seq("a18_qualifier_prune", "d11_dupgram_fraction",
       "d12_dedup_keep", "t40_doc_pipeline", "w3_crawl_pipeline")
-    def retimeOnce(name: String): Entry = {
+    def retimeOnce(name: String): Entry = Fixtures.scope(spark, errors, name) {
       System.gc()
-      val e = time(spark, metrics, errors, sfDir, name, SparkEntry.queries(name))
-      graft.testbed.DatacubeQueries.clearCaches(spark)
-      graft.testbed.DocQueries.clearCaches(spark)
-      e
+      time(spark, metrics, errors, sfDir, name, SparkEntry.queries(name))
     }
     val isolated: Seq[(String, Entry)] =
       if (SparkEntry.only.nonEmpty) Seq.empty  // subset runs are already isolated
@@ -147,13 +116,10 @@ object Bench {
     // Executor CPU does not count time spent waiting for a core, so unlike
     // the wall total it is comparable across host windows.
     val cpuSec = ok.map(_._2.cpu).sum
-    // Family totals are per-query wall sums, for the cube block (no
-    // per-family barrier) and the doc families alike: a barrier wall-time
-    // would also count the metric drains between entries. Emitting ALL
-    // families makes cross-round family comparison cover the datacube,
-    // graph, and curation families too, not just the doc battery. "s"
+    // Family totals are per-entry wall sums by name prefix (a scope's wall
+    // time would also count its release and the metric drains); "s"
     // merges s4 (cube) into the doc-side s family.
-    val familyTimes = ok.groupBy(r => familyOf(r._1)).toSeq.sortBy(_._1)
+    val familyTimes = ok.groupBy(r => SparkEntry.familyOf(r._1)).toSeq.sortBy(_._1)
       .map { case (f, rs) => f -> rs.map(_._2.wall).sum }
     val json = obj(Seq("metric" -> JStr("total").render, "value" -> total,
       "unit" -> JStr("sec").render, "cpu_sec" -> cpuSec,

@@ -1,8 +1,10 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.testbed.{DatacubeQueries, DocQueries}
+import graft.testbed.{DatacubeQueries, DocQueries, Fixtures}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -33,13 +35,26 @@ object SparkEntry {
   val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
-  /** The selected entries as (datacube family, doc family), each sorted by
-    * name. Callers run the cube family first and drop its caches before
-    * the doc family, which keeps peak cache memory bounded. */
-  def selectedFamilies: (Seq[(String, Q)], Seq[(String, Q)]) = {
+  /** The name's prefix before its first digit: "ir" for "ir6_seen_set_probe". */
+  def familyOf(name: String): String = name.takeWhile(!_.isDigit)
+
+  /** The selected entries by family, in run order: the datacube battery
+    * as one family, "cube", then each doc prefix family (d, g, ir, m, ...),
+    * each sorted by name. Every fixture is used inside one family. */
+  def selectedFamilies: Seq[(String, Seq[(String, Q)])] = {
     val docKeys = DocQueries.queries.keySet
     val (doc, cube) = queries.toSeq.filter(q => only.forall(_(q._1))).sortBy(_._1)
       .partition(q => docKeys(q._1))
-    (cube, doc)
+    ("cube" -> cube) +: doc.groupBy(q => familyOf(q._1)).toSeq.sortBy(_._1)
   }
+
+  /** Runs `run` on each selected family in turn, each inside its own
+    * [[Fixtures.scope]]: one family's fixtures and pins are released before
+    * the next family starts, and a family that leaves any behind lands in
+    * `errors` as `<family>:leak`. */
+  def eachFamily[A](spark: SparkSession, errors: mutable.Map[String, String])(
+      run: Seq[(String, Q)] => A): Seq[A] =
+    selectedFamilies.map { case (family, qs) =>
+      Fixtures.scope(spark, errors, family)(run(qs))
+    }
 }

@@ -21,13 +21,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // datacube family first, then drop its caches before the doc battery
-    // (same family barrier as Bench — keeps peak cache memory bounded)
-    val (cubeQs, docQs) = SparkEntry.selectedFamilies
-    dump(cubeQs)
-    graft.testbed.DatacubeQueries.clearCaches(spark)
-    dump(docQs)
-    graft.testbed.DocQueries.clearCaches(spark)
+    // one fixture scope per family, as in Bench: peak cache memory stays
+    // at one family's, and a family that leaves a pin is an error
+    SparkEntry.eachFamily(spark, errors)(dump)
     // Json.JStr escapes backslash, quote and ALL control chars (<0x20): a
     // tab or CR in builder-authored SQL would otherwise make the driver's
     // json.load fail and silently zero the round's correctness.

@@ -230,9 +230,12 @@ object Pipeline {
       summaryValues: Option[Json.JValue]): String = {
     val regionLevelsOut =
       regionColumns ++ (if (computeTiles) Seq("grid data") else Nil)
+    // by feature, as the reference's groupby lists them: collect order
+    // varies with the shuffle partition count
+    def byFeature(m: Map[String, Long]) = Json.of(scala.collection.immutable.TreeMap.from(m))
     val dataInfo = Seq(
       "num_rows" -> Json.JLong(numRows),
-      "num_rows_per_feature" -> Json.of(rowsPerFeature),
+      "num_rows_per_feature" -> byFeature(rowsPerFeature),
       "num_missing_ts" -> Json.JLong(numMissingTs),
       "num_invalid_ts" -> Json.JLong(numInvalidTs),
       "num_missing_val" -> Json.JLong(numMissingVal),
@@ -244,8 +247,8 @@ object Pipeline {
       "has_annual" -> Json.JBool(computeAnnual),
       "has_weights" -> Json.JBool(hasWeights)
     ) ++
-      (if (computeMonthly) monthTsSize.map("month_timeseries_size" -> Json.of(_)) else None) ++
-      (if (computeAnnual) yearTsSize.map("year_timeseries_size" -> Json.of(_)) else None)
+      (if (computeMonthly) monthTsSize.map("month_timeseries_size" -> byFeature(_)) else None) ++
+      (if (computeAnnual) yearTsSize.map("year_timeseries_size" -> byFeature(_)) else None)
     Json.JObj(
       Seq("data_info" -> Json.JObj(dataInfo)) ++
         summaryValues.map("output_agg_values" -> _)).render
@@ -527,7 +530,8 @@ object Pipeline {
       writer)
   }
 
-  /** A12: output summary values (tiny — collected). */
+  /** A12: output summary values (tiny — collected); NaN where a feature
+    * has no non-null value to aggregate. */
   private def outputSummary(df: DataFrame, weightCol: String): Json.JValue = {
     val t = Temporal.aggregate(df, "all", weightCol)
     val (agg, aggCols) =
@@ -535,7 +539,10 @@ object Pipeline {
     val cols = aggCols.filterNot(_ == "s_count")
     Json.JArr(agg.drop("s_count").orderBy("feature").collect().toSeq.map { r =>
       Json.JObj(("name" -> Json.JStr(r.getString(r.fieldIndex("feature")))) +:
-        cols.map(c => c -> Json.JDouble(r.getDouble(r.fieldIndex(c)))))
+        cols.map { c =>
+          val i = r.fieldIndex(c)
+          c -> Json.JDouble(if (r.isNullAt(i)) Double.NaN else r.getDouble(i))
+        })
     })
   }
 
@@ -549,8 +556,7 @@ object Pipeline {
       qualifierLists: Seq[Seq[String]], tsSizes: Map[String, Long])
 
   /** Every feature's [[FeatureMeta]] from ONE `groupBy("feature")` pass, in
-    * the aggregate's collect order, which is the order `results.json`'s
-    * per-feature maps list features in. A resolution's bucket count is the
+    * the aggregate's collect order. A resolution's bucket count is the
     * number of rows in that feature's global timeseries CSV. */
   private[graft] def featureMetadata(
       df: DataFrame, regionCols: Seq[String], qualifierCols: Seq[String],

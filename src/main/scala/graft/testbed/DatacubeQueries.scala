@@ -31,38 +31,23 @@ object DatacubeQueries {
     case _        => unix_millis(col("ts").cast(TimestampType))
   }
 
-  /** Per-session caches: the base datacube frame and each temporal cube are
-    * materialized once and reused by every query in the battery — mirroring
-    * the reference pipeline, which persists the temporally-aggregated frame
-    * and fans ~10 outputs off it (flows/data_pipeline.py:409,454,554,613).
+  /** Fixtures: the base datacube frame and each temporal cube are
+    * materialized once and reused by every query of the cube family —
+    * mirroring the reference pipeline, which persists the temporally-aggregated
+    * frame and fans ~10 outputs off it (flows/data_pipeline.py:409,454,554,613).
     * Without this, every query would re-run the join+groupBy over the full
     * input; at 100 TB that recompute tax dominates the whole job. */
-  private val baseCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val cubeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String, Boolean), DataFrame]
-
   private[graft] def baseCube(spark: SparkSession, dir: String): DataFrame =
-    baseCache.getOrElseUpdate((spark, dir), Datacube(spark, dir).cache())
+    Fixtures.value(spark, dir, "_cube")(Datacube(spark, dir).cache())
 
-  /** Unpersist and forget every cached cube for `spark`. Bench/Verify call
-    * this between query families so the doc battery doesn't inherit the
-    * datacube battery's cache pressure (the r3 d3/d4 timing artifact). */
-  def clearCaches(spark: SparkSession): Unit = {
-    baseCache.filterInPlace { case ((s, _), df) =>
-      if (s eq spark) { df.unpersist(); false } else true }
-    cubeCache.filterInPlace { case ((s, _, _, _), df) =>
-      if (s eq spark) { df.unpersist(); false } else true }
-  }
-
-  /** Temporally-aggregated cube (A1), cached per (session, dir, res, weighted). */
+  /** Temporally-aggregated cube (A1), one per (session, dir, res, weighted). */
   def temporalCube(spark: SparkSession, dir: String, timeRes: String,
                    weighted: Boolean = false): DataFrame =
-    cubeCache.getOrElseUpdate((spark, dir, timeRes, weighted), {
+    Fixtures.value(spark, dir, s"_cube_${timeRes}_$weighted") {
       val cube0 = baseCube(spark, dir)
       val cube = if (weighted) cube0 else cube0.drop("weight")
       Temporal.aggregate(cube, timeRes, if (weighted) "weight" else "").cache()
-    })
+    }
 
   /** DuckDB mirror of [[temporalCube]] as CTE `t`. */
   def temporalCubeSql(timeRes: String, weighted: Boolean = false): String = {

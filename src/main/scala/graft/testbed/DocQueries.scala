@@ -19,26 +19,10 @@ object DocQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
   private def table(s: SparkSession, dir: String, name: String): DataFrame =
-    cache.getOrElseUpdate((s, dir, name),
-      s.read.parquet(s"$dir/$name.parquet").cache())
+    Fixtures.value(s, dir, name)(s.read.parquet(s"$dir/$name.parquet").cache())
 
-  /** Unpersist and forget every cached frame for `spark` (see
-    * DatacubeQueries.clearCaches). Checkpoint-backed frames (the CC
-    * results) need [[Dedup.release]] — plain unpersist() is a no-op on
-    * them, and without the release every battery run would leak one
-    * persisted label frame per CC invocation for the JVM lifetime. */
-  def clearCaches(spark: SparkSession): Unit = {
-    cache.filterInPlace { case ((s, _, _), df) =>
-      if (s eq spark) { df.unpersist(); Dedup.release(df); false } else true }
-    modelCache.filterInPlace { case ((s, _), _) => !(s eq spark) }
-    chainCache.filterInPlace { case ((s, _, _), df) =>
-      if (s eq spark) { Dedup.release(df); false } else true }
-  }
-
-  /** m8/m9 image corpus, cached across the battery (m8 hashes it, m9
+  /** m8/m9 image corpus, cached for the m family (m8 hashes it, m9
     * pair-joins it — the PNG encode runs once). Group g = doc_id/4 owns a
     * 32-byte pattern table derived from md5(g) ++ md5(g||"b") — md5 so
     * the DuckDB oracle rebuilds the exact bytes, TWO digests so the
@@ -61,7 +45,7 @@ object DocQueries {
   }
 
   private def imagePayloads(s: SparkSession, dir: String): DataFrame =
-    cache.getOrElseUpdate((s, dir, "_image_payloads"), {
+    Fixtures.value(s, dir, "_image_payloads") {
       import s.implicits._
       table(s, dir, "documents").select(col("doc_id")).as[Long]
         .mapPartitions { it =>
@@ -92,7 +76,7 @@ object DocQueries {
           }
         }
         .toDF("doc_id", "payload").cache()
-    })
+    }
 
   /** m10/m11 audio corpus, cached like [[imagePayloads]] and built from
     * the SAME md5 group tables: 244 16-bit PCM samples per doc (window w
@@ -104,7 +88,7 @@ object DocQueries {
     * signs), v2 +100 on one interior window's 4 samples (flips <= 2
     * bits), v3 unrelated pattern; doc_id % 97 == 0 rows are undecodable. */
   private def audioPayloads(s: SparkSession, dir: String): DataFrame =
-    cache.getOrElseUpdate((s, dir, "_audio_payloads"), {
+    Fixtures.value(s, dir, "_audio_payloads") {
       import s.implicits._
       table(s, dir, "documents").select(col("doc_id")).as[Long]
         .mapPartitions { it =>
@@ -130,14 +114,19 @@ object DocQueries {
           }
         }
         .toDF("doc_id", "payload").cache()
-    })
+    }
 
-  /** Exact-Jaccard >= 0.8 pair graph, cached across the battery (d2 emits
+  /** Exact-Jaccard >= 0.8 pair graph, cached for the d family (d2 emits
     * it, d4 clusters it — the shingle co-occurrence join runs once). */
   private def jaccardEdges(s: SparkSession, dir: String): DataFrame =
-    cache.getOrElseUpdate((s, dir, "_jaccard_edges"),
+    Fixtures.value(s, dir, "_jaccard_edges")(
       Dedup.jaccardPairs(table(s, dir, "documents"), "doc_id", "text",
         n = 3, minJaccard = 0.8).cache())
+
+  /** Connected components of [[jaccardEdges]] (checkpoint-backed), shared
+    * by d4, d12 and d20. */
+  private def ccLabels(s: SparkSession, dir: String): DataFrame =
+    Fixtures.value(s, dir, "_cc_labels")(Dedup.connectedComponents(jaccardEdges(s, dir)))
 
   /** GD iterations for the t30/t31 classifier battery entries AND their
     * unrolled DuckDB mirror. 8 is past convergence on the sf corpora
@@ -150,28 +139,23 @@ object DocQueries {
     * 1 + iters full-corpus aggregations, so the two battery entries must
     * share one model (the d12/d13 shared-materialization pattern) — the
     * model itself is 18 doubles of driver-side metadata. */
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Classifier.LogisticModel]
   private def classifierModel(s: SparkSession, dir: String): Classifier.LogisticModel =
-    modelCache.getOrElseUpdate((s, dir),
+    Fixtures.value(s, dir, "_classifier")(
       Classifier.trainLogistic(table(s, dir, "documents"), "text",
         iters = ClassifierIters, lr = 4.0))
 
-  /** Shared ANN result chains, cached per (session, sfdir, key): the v
-    * battery's recall/fusion entries judge the SAME approximate and exact
+  /** Shared ANN result chains, one per (session, sfdir, key): the v
+    * family's recall/fusion entries judge the SAME approximate and exact
     * top-k frames the base entries produce, so each chain (driver Lloyd +
     * encode + score jobs) derives ONCE and its query-batch-sized result
     * (nQueries × k rows — metadata, not corpus) checkpoints for every
     * consumer. The d2/d4 + t30/t31 shared-materialization pattern; the
     * reference pipeline likewise persists one aggregated frame and fans
-    * its outputs off it (SURVEY §2.3). First caller in battery order pays
-    * the build — family totals, not single entries, are the honest
-    * cross-round comparison (see the battery-order note above). */
-  private val chainCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+    * its outputs off it (SURVEY §2.3). The family's first caller pays
+    * the build, so family totals are the honest comparison. */
   private def chain(s: SparkSession, dir: String, key: String)(
       mk: => DataFrame): DataFrame =
-    chainCache.getOrElseUpdate((s, dir, key), mk.localCheckpoint())
+    Fixtures.value(s, dir, key)(mk.localCheckpoint())
 
   private def q20(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "embeddings").filter(col("vec_id") < 20)
@@ -205,7 +189,7 @@ object DocQueries {
   /** The ir-family shared SERVE chains (r20 opt, guide §2.4 — the same
     * v-family pattern [[pq3]]/[[ann3]] use): ir9's hybrid fusion reads
     * the IDENTICAL bm25 and IVF+PQ serve calls ir1/ir4 already time, so
-    * each serve runs ONCE per battery and ir9 times the fusion. Both
+    * each serve runs ONCE per family and ir9 times the fusion. Both
     * results are query-batch-sized rank frames (20/60 rows — metadata),
     * and the serve cost stays measured in its own entry (ir1/ir4 run
     * before ir9 in battery order). Results are bit-identical: the chain
@@ -222,31 +206,18 @@ object DocQueries {
   /** The persisted inverted text index serving ir1/ir2, built once per
     * (session, sf-dir) into a temp directory — the index BUILD is the
     * ingest-time cost (one tokenize + one aggregation), amortized across
-    * every query that serves from it, exactly the deployment shape. The
-    * path cache is driver metadata (the index lives on disk), so the
-    * family cache barrier doesn't force a rebuild. */
-  private val indexDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
+    * every query that serves from it, exactly the deployment shape. */
   private def textIndexDir(s: SparkSession, dir: String): String =
-    indexDirCache.getOrElseUpdate((s, dir), {
-      val ix = java.nio.file.Files.createTempDirectory("graft-ir-index").toString
-      graft.io.TextIndex.writeIndex(table(s, dir, "documents"), "doc_id", "text", ix)
-      ix
-    })
+    Fixtures.dir(s, dir, "ir-index")(
+      graft.io.TextIndex.writeIndex(table(s, dir, "documents"), "doc_id", "text", _))
 
   /** The persisted IVF+PQ index serving ir4 (built by ir3's first touch,
     * then shared) — the v11 geometry (16 cells, 4×16 codes, 2 Lloyd
-    * passes), so the index-served search mirrors v11's oracle exactly.
-    * Path cache is driver metadata like [[textIndexDir]]. */
-  private val ivfPqDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
+    * passes), so the index-served search mirrors v11's oracle exactly. */
   private def ivfPqIndexDir(s: SparkSession, dir: String): String =
-    ivfPqDirCache.getOrElseUpdate((s, dir), {
-      val ix = java.nio.file.Files.createTempDirectory("graft-ivfpq-index").toString
+    Fixtures.dir(s, dir, "ivfpq-index")(
       Similarity.ivfPqIndexWrite(table(s, dir, "embeddings"), "vec_id",
-        "embedding", ix, dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
-      ix
-    })
+        "embedding", _, dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2))
 
   /** The ir10 drift-gauge LEDGER: two committed batch entries of
     * per-query recall rows ([[Similarity.ivfPqIndexDriftGauge]] over
@@ -254,11 +225,8 @@ object DocQueries {
     * per maintenance batch), so the battery exercises the
     * ledger→decision fold ([[graft.streaming.Streaming
     * .gaugeLedgerDecision]]) end-to-end against real ledger bytes. */
-  private val gaugeLedgerCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private def gaugeLedgerDir(s: SparkSession, dir: String): String =
-    gaugeLedgerCache.getOrElseUpdate((s, dir), {
-      val ld = java.nio.file.Files.createTempDirectory("graft-gauge-ledger").toString
+    Fixtures.dir(s, dir, "gauge-ledger") { ld =>
       val emb = table(s, dir, "embeddings")
       Seq(0, 1).foreach { i =>
         Similarity.ivfPqIndexDriftGauge(s, ivfPqIndexDir(s, dir),
@@ -268,26 +236,21 @@ object DocQueries {
           .write.mode("overwrite").parquet(s"$ld/batch_id=$i")
         graft.io.Commit.mark(s, s"$ld/batch_id=$i")
       }
-      ld
-    })
+    }
 
   /** The persisted MinHash band index serving ir5 — the d17 corpus split
     * (reference < 250) built as write(< 150) + append(150..249), so the
     * battery's oracle gate exercises the APPEND face too: a probe over
     * the appended index must equal d17's in-flight result exactly. */
-  private val bandDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private def bandIndexDir(s: SparkSession, dir: String): String =
-    bandDirCache.getOrElseUpdate((s, dir), {
-      val ix = java.nio.file.Files.createTempDirectory("graft-band-index").toString
+    Fixtures.dir(s, dir, "band-index") { ix =>
       val docs = table(s, dir, "documents")
       graft.io.BandIndex.writeIndex(docs.filter(col("doc_id") < 150),
         "doc_id", "text", ix, n = 3, numHashes = 64, bands = 16)
       graft.io.BandIndex.appendToIndex(
         docs.filter(col("doc_id") >= 150 && col("doc_id") < 250),
         "doc_id", "text", ix)
-      ix
-    })
+    }
 
   /** The ir6 URL universe: one synthetic URL per document, derived from
     * doc_id arithmetic so the DuckDB oracle restates it exactly. The id
@@ -303,28 +266,21 @@ object DocQueries {
     * (doc_id % 10 < 6), built as write(% 10 < 3) + append(3 <= % 10 < 6)
     * so the battery's oracle gate exercises the APPEND face too (the
     * bandIndexDir discipline). */
-  private val seenDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private def seenSetDir(s: SparkSession, dir: String): String =
-    seenDirCache.getOrElseUpdate((s, dir), {
-      val ix = java.nio.file.Files.createTempDirectory("graft-seen-set").toString
+    Fixtures.dir(s, dir, "seen-set") { ix =>
       val u = urlUniverse(s, dir)
       graft.io.SeenSet.writeSet(u.filter(col("doc_id") % 10 < 3), "url", ix)
       graft.io.SeenSet.appendToSet(
         u.filter(col("doc_id") % 10 >= 3 && col("doc_id") % 10 < 6), "url", ix)
-      ix
-    })
+    }
 
   /** The persisted bucket-partitioned corpus store serving ir7 — built
     * write(doc_id % 3 == 0) + upsert(% 5 == 0, text amended) +
     * delete(% 7 == 0), so BOTH maintenance faces sit inside the oracle
     * gate: replaced rows must carry the new text, new keys must appear,
     * deleted keys must not resurrect from their bucket directories. */
-  private val storeDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private def corpusStoreDir(s: SparkSession, dir: String): String =
-    storeDirCache.getOrElseUpdate((s, dir), {
-      val ix = java.nio.file.Files.createTempDirectory("graft-corpus-store").toString
+    Fixtures.dir(s, dir, "corpus-store") { ix =>
       val docs = table(s, dir, "documents").select("doc_id", "text")
       graft.io.CorpusStore.write(docs.filter(col("doc_id") % 3 === 0),
         "doc_id", ix)
@@ -333,15 +289,12 @@ object DocQueries {
         "doc_id", ix)
       graft.io.CorpusStore.delete(
         docs.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id", ix)
-      ix
-    })
+    }
 
   /** The t37/t38 learned BPE merge table, shared like the classifier
     * model (metadata: 3 string pairs). */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, String)]]
   private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeCache.getOrElseUpdate((s, dir),
+    Fixtures.value(s, dir, "_bpe_merges")(
       graft.operators.Bpe.learnMerges(table(s, dir, "documents"), "text", rounds = 3)
         .orderBy("round").collect().toSeq
         .map(r => (r.getString(1), r.getString(2))))
@@ -1210,14 +1163,6 @@ object DocQueries {
       graft.pipeline.CrawlPipelineConfig(dedupUrl = true, nearMaxHamming = 10))
   }
 
-  /** The one shared crawl run w3 and w4 both read: each entry stays
-    * independently hash-matched against its own oracle, but the ~8 s
-    * pipeline (two WARC parses + gzip + HTML strip + simhash + CC at
-    * sf0.1) executes ONCE per battery instead of once per entry — the
-    * two frames go through the battery cache so clearCaches releases
-    * them. run() materializes `summary` eagerly (the funnel agg job);
-    * `kept` is lazy, so w4 still pays — and its timing still measures —
-    * the second WARC read + semi-join. */
   /** The w6/w9 Crawl-delay robots fixture: an evilbot group with a
     * punitive delay graftbot must NOT pick up, a graftbot-specific
     * override on host 5 (delay 7), '*' delays of k+1 elsewhere, and no
@@ -1257,30 +1202,27 @@ object DocQueries {
     }.toDF("host", "robots_txt")
   }
 
+  /** The one shared crawl run w3 and w4 both read: each entry stays
+    * independently hash-matched against its own oracle, but the ~8 s
+    * pipeline (two WARC parses + gzip + HTML strip + simhash + CC at
+    * sf0.1) executes ONCE per family instead of once per entry.
+    * run() materializes `summary` eagerly (the funnel agg job);
+    * `kept` is lazy, so w4 still pays — and its timing still measures —
+    * the second WARC read + semi-join. */
   private def crawlShared(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val sKey = (s, dir, "_crawl_summary")
-    val kKey = (s, dir, "_crawl_kept")
-    (cache.get(sKey), cache.get(kKey)) match {
-      case (Some(sum), Some(kept)) => (sum, kept)
-      case _ =>
-        val res = crawlRun(s, dir)
-        val sum = res.summary.cache()
-        val kept = res.kept.cache()
-        cache.put(sKey, sum); cache.put(kKey, kept)
-        (sum, kept)
+      : (DataFrame, DataFrame) =
+    Fixtures.value(s, dir, "_crawl") {
+      val res = crawlRun(s, dir)
+      (res.summary.cache(), res.kept.cache())
     }
-  }
 
   // ---- the battery --------------------------------------------------------
 
   def queries: Map[String, Q] = Map(
-    // D00: runs FIRST in the sorted doc battery (d00 < d10) and
-    // materializes the two shared corpus caches every doc query reads, so
-    // later per-query bench times are true query times instead of the
-    // first d-query silently absorbing the parquet scan + cache build
-    // (the a00_cube_warmup convention, extended to the doc tables).
-    // Verifiable in its own right: the corpus row counts.
+    // D00: runs FIRST in the d family (d00 < d10) and materializes the
+    // two corpus tables its entries read, so the first d-query does not
+    // absorb the parquet scan + cache build (the a00_cube_warmup
+    // convention). Verifiable in its own right: the corpus row counts.
     "d00_corpus_warmup" -> ((s, dir) => {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -1353,17 +1295,13 @@ object DocQueries {
           n = 3, minContainment = 0.8)
         .orderBy("doc_a", "doc_b")),
 
-    // D4: duplicate clusters over the exact-Jaccard pair graph. The CC
-    // result is checkpoint-backed, so it goes through the battery cache:
-    // repeated calls reuse it and clearCaches releases its persisted RDD.
-    "d4_dedup_clusters" -> ((s, dir) =>
-      cache.getOrElseUpdate((s, dir, "_cc_labels"),
-        Dedup.connectedComponents(jaccardEdges(s, dir))).orderBy("doc_id")),
+    // D4: duplicate clusters over the exact-Jaccard pair graph
+    "d4_dedup_clusters" -> ((s, dir) => ccLabels(s, dir).orderBy("doc_id")),
 
     // D6: same clustering contract via large-star/small-star (O(log n)
     // rounds — the planetary-scale path); same oracle as d4
     "d6_dedup_clusters_star" -> ((s, dir) =>
-      cache.getOrElseUpdate((s, dir, "_cc_labels_star"),
+      Fixtures.value(s, dir, "_cc_labels_star")(
         Dedup.connectedComponentsStar(jaccardEdges(s, dir))).orderBy("doc_id")),
 
     // D3: MinHash-LSH candidate pairs (64 hashes, 16 bands x 4)
@@ -1834,13 +1772,6 @@ object DocQueries {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      // pre-touch the shared table cache on the DRIVER thread (r20
-      // advice): TrieMap.getOrElseUpdate does not guarantee single
-      // evaluation of the by-name builder, so concurrent first-touch
-      // from the futures below could evaluate read.parquet(...).cache()
-      // more than once (benign today, but the once-only contract should
-      // hold by construction, not by luck)
-      table(s, dir, "documents"); table(s, dir, "embeddings")
       val fText = Future {
         val textIx = textIndexDir(s, dir)
         graft.io.Manifest.readSubtree(s, textIx,
@@ -2304,11 +2235,10 @@ object DocQueries {
 
     // D12: the user-facing end of near-dedup — the corpus with every
     // >=0.8-Jaccard cluster reduced to its min-id canonical (reuses the
-    // battery-cached edge graph + labels)
+    // family's cached edge graph + labels)
     "d12_dedup_keep" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
-      val labels = cache.getOrElseUpdate((s, dir, "_cc_labels"),
-        Dedup.connectedComponents(jaccardEdges(s, dir)))
+      val labels = ccLabels(s, dir)
       Dedup.keepCanonical(docs, "doc_id", labels)
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
@@ -2319,8 +2249,7 @@ object DocQueries {
     // instead of its lowest-id one; rides the same cached labels
     "d20_dedup_keep_best" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
-      val labels = cache.getOrElseUpdate((s, dir, "_cc_labels"),
-        Dedup.connectedComponents(jaccardEdges(s, dir)))
+      val labels = ccLabels(s, dir)
       Dedup.keepBestQuality(docs, "doc_id", labels,
           TextFunctions.textStats("text").getField("quality_score"))
         .select("doc_id", "lang", "source")

@@ -21,7 +21,7 @@ class BandIndexSpec extends SparkSpec {
   private lazy val batch = docs.filter(col("doc_id") >= 250)
 
   test("probe equals in-flight incrementalNearDup") {
-    val dir = Files.createTempDirectory("graft-band").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-band").toFile.getAbsolutePath
     BandIndex.writeIndex(reference, "doc_id", "text", dir,
       n = 3, numHashes = 64, bands = 16)
     val fromIndex = BandIndex.probe(spark, dir, batch, "doc_id", "text")
@@ -35,7 +35,7 @@ class BandIndexSpec extends SparkSpec {
   test("append equals full rebuild, and the probe scan is bucket-pruned") {
     // build on the first half of the reference, append the second half —
     // the probe must then equal the full-rebuild index AND the in-flight op
-    val dirApp = Files.createTempDirectory("graft-band-app").toFile.getAbsolutePath
+    val dirApp = SparkSpec.tempDir("graft-band-app").toFile.getAbsolutePath
     BandIndex.writeIndex(reference.filter(col("doc_id") < 120),
       "doc_id", "text", dirApp, n = 3, numHashes = 64, bands = 16)
     BandIndex.appendToIndex(
@@ -48,7 +48,7 @@ class BandIndexSpec extends SparkSpec {
 
     // pruning pin needs a probe whose bands cover FEWER buckets than exist:
     // one tiny batch (1 doc = 16 bands) against a high-bucket index
-    val dirP = Files.createTempDirectory("graft-band-prune").toFile.getAbsolutePath
+    val dirP = SparkSpec.tempDir("graft-band-prune").toFile.getAbsolutePath
     BandIndex.writeIndex(reference, "doc_id", "text", dirP,
       n = 3, numHashes = 64, bands = 16, buckets = 256)
     val tiny = batch.orderBy("doc_id").limit(1)
@@ -76,7 +76,7 @@ class BandIndexSpec extends SparkSpec {
   test("probe resolves signature parameters from the layout") {
     // non-default geometry: 32 hashes x 8 bands — a caller-side default
     // would band differently and the candidate set would diverge
-    val dir = Files.createTempDirectory("graft-band-m").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-band-m").toFile.getAbsolutePath
     BandIndex.writeIndex(reference, "doc_id", "text", dir,
       n = 2, numHashes = 32, bands = 8)
     val fromIndex = BandIndex.probe(spark, dir, batch, "doc_id", "text")
@@ -90,12 +90,12 @@ class BandIndexSpec extends SparkSpec {
     // before any reference doc. Probe must serve an EMPTY candidate set
     // (schema sidecar, not an inference error); append is the first
     // content and the grown index equals a from-scratch build.
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-zero").toString
+    val dir = SparkSpec.tempDir("graft-band-zero").toString
     BandIndex.writeIndex(reference.limit(0), "doc_id", "text", dir)
     assert(BandIndex.probe(spark, dir, batch, "doc_id", "text").isEmpty,
       "an empty index must probe empty, not throw")
     BandIndex.appendToIndex(reference, "doc_id", "text", dir)
-    val dirRef = java.nio.file.Files.createTempDirectory("graft-band-zero-f").toString
+    val dirRef = SparkSpec.tempDir("graft-band-zero-f").toString
     BandIndex.writeIndex(reference, "doc_id", "text", dirRef)
     assert(rowSet(BandIndex.probe(spark, dir, batch, "doc_id", "text"))
       === rowSet(BandIndex.probe(spark, dirRef, batch, "doc_id", "text")),

@@ -36,7 +36,7 @@ class CompactSpec extends SparkSpec {
   }
 
   test("text index: three appends fragment, compaction consolidates the batch tags") {
-    val dir = Files.createTempDirectory("graft-cmp-ti").toString
+    val dir = SparkSpec.tempDir("graft-cmp-ti").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 100), "doc_id", "text",
       dir, buckets = 8)
     Seq((100, 200), (200, 300), (300, 400)).foreach { case (a, b) =>
@@ -70,7 +70,7 @@ class CompactSpec extends SparkSpec {
     // crash after the consolidated tag committed but before the old tags
     // were deleted: every posting exists twice; the search faces must
     // serve the same results, and the next compact must converge
-    val dir = Files.createTempDirectory("graft-cmp-ti-torn").toString
+    val dir = SparkSpec.tempDir("graft-cmp-ti-torn").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 150), "doc_id", "text",
       dir, buckets = 8)
     TextIndex.appendToIndex(
@@ -97,7 +97,7 @@ class CompactSpec extends SparkSpec {
   }
 
   test("band index: compaction removes replay duplicates and keeps probe exact") {
-    val dir = Files.createTempDirectory("graft-cmp-bi").toString
+    val dir = SparkSpec.tempDir("graft-cmp-bi").toString
     BandIndex.writeIndex(docs.filter(col("doc_id") < 150), "doc_id", "text", dir)
     val delta = docs.filter(col("doc_id") >= 150 && col("doc_id") < 250)
     BandIndex.appendToIndex(delta, "doc_id", "text", dir)
@@ -123,7 +123,7 @@ class CompactSpec extends SparkSpec {
 
   test("seen set: compaction shrinks re-appended urls, membership unchanged") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cmp-ss").toString
+    val dir = SparkSpec.tempDir("graft-cmp-ss").toString
     def url(i: Int) = s"http://x${i % 5}.com/p/$i"
     SeenSet.writeSet((0 until 200).map(url).toDF("url"), "url", dir,
       buckets = 16)
@@ -148,7 +148,7 @@ class CompactSpec extends SparkSpec {
     // the BucketRewrite journal under Compact: hand-craft the committed
     // journal a crashed compaction would leave, delete the bucket the
     // commit lost, and the next probe must serve as if nothing happened
-    val dir = Files.createTempDirectory("graft-cmp-torn").toString
+    val dir = SparkSpec.tempDir("graft-cmp-torn").toString
     def url(i: Int) = s"http://t${i % 3}.com/p/$i"
     SeenSet.writeSet((0 until 120).map(url).toDF("url"), "url", dir,
       buckets = 8)
@@ -177,7 +177,7 @@ class CompactSpec extends SparkSpec {
     // the single-level compactTree (band index): a one-doc append
     // fragments only the buckets ITS bands hash to — the others must
     // keep their exact files
-    val dir = Files.createTempDirectory("graft-cmp-sel").toString
+    val dir = SparkSpec.tempDir("graft-cmp-sel").toString
     BandIndex.writeIndex(docs.filter(col("doc_id") < 100), "doc_id", "text",
       dir, buckets = 16)
     BandIndex.appendToIndex(docs.filter(col("doc_id") === 100),

@@ -13,7 +13,7 @@ class CorpusExportSpec extends SparkSpec {
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   test("export round-trips every row and the manifest counts the shards") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-export").toString
+    val dir = SparkSpec.tempDir("graft-export").toString
     val manifest = CorpusExport.exportShards(docs, "doc_id", dir, nShards = 8,
       profileCols = Seq("doc_id", "lang"))
     val back = CorpusExport.readShards(spark, dir)
@@ -31,8 +31,8 @@ class CorpusExportSpec extends SparkSpec {
   }
 
   test("shard assignment is content-addressed: re-export lands identically") {
-    val d1 = java.nio.file.Files.createTempDirectory("graft-export1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft-export2").toString
+    val d1 = SparkSpec.tempDir("graft-export1").toString
+    val d2 = SparkSpec.tempDir("graft-export2").toString
     CorpusExport.exportShards(docs, "doc_id", d1, 4, Seq("doc_id"))
     CorpusExport.exportShards(docs.orderBy(rand(7)), "doc_id", d2, 4, Seq("doc_id"))
     val s1 = spark.read.parquet(s"$d1/data").select("doc_id", "shard")

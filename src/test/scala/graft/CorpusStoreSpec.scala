@@ -20,7 +20,7 @@ class CorpusStoreSpec extends SparkSpec {
     .select("doc_id", "text")
 
   private def newStore(buckets: Int = 16): String = {
-    val dir = Files.createTempDirectory("graft-cstore").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-cstore").toFile.getAbsolutePath
     CorpusStore.write(docs.filter(col("doc_id") % 3 === 0), "doc_id", dir,
       buckets)
     dir
@@ -98,7 +98,7 @@ class CorpusStoreSpec extends SparkSpec {
     // takes the buckets' files out of the live set immediately (the
     // read must not resurrect them); the DIRECTORIES hold the retired
     // files for pinned readers until vacuum, which prunes them.
-    val dir = Files.createTempDirectory("graft-cstore-e").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-cstore-e").toFile.getAbsolutePath
     val small = docs.filter(col("doc_id") < 20)
     CorpusStore.write(small, "doc_id", dir, buckets = 4)
     CorpusStore.delete(small.select("doc_id"), "doc_id", dir)
@@ -118,7 +118,7 @@ class CorpusStoreSpec extends SparkSpec {
 
   test("time travel: every keyed rewrite commits a readable version; vacuum expires it loudly") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cstore-tt").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-cstore-tt").toFile.getAbsolutePath
     val base = (0L until 60L).map(i => (i, s"v0-$i")).toDF("doc_id", "text")
     CorpusStore.write(base, "doc_id", dir, buckets = 8) // v1
     CorpusStore.upsert(
@@ -208,7 +208,7 @@ class CorpusStoreSpec extends SparkSpec {
 
   test("curation batch: gate installs, decay evicts, replay is a no-op") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cstore-c").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-cstore-c").toFile.getAbsolutePath
     // seed: prose that passes the gate (20-80 tokens, TTR >= 0.4,
     // stopwords present, no punctuation, avg token length in 3-6)
     def good(i: Long) = (i, "the quick brown fox jumps over a lazy dog " +
@@ -255,7 +255,7 @@ class CorpusStoreSpec extends SparkSpec {
     // may still fail transiently on a file the overwrite just replaced
     // — the documented cross-process reader contract — so only
     // successful reads are asserted; losing ROWS is the defect.)
-    val dir = Files.createTempDirectory("graft-cstore-conc").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-cstore-conc").toFile.getAbsolutePath
     def gen(v: Int) = spark.range(100)
       .select(col("id").as("doc_id"),
         concat(lit(s"v$v-"), col("id")).as("text"))

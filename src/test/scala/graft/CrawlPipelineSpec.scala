@@ -171,8 +171,7 @@ class CrawlPipelineSpec extends SparkSpec {
   }
 
   test("reliable checkpointDir: identical results, pins land as parquet") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-crawl-ckpt").toString
+    val dir = SparkSpec.tempDir("graft-crawl-ckpt").toString
     val files = Seq(
       (0L, Warc.build(Seq(page("http://x.com/p0", html(goodText))))),
       (1L, Warc.build(Seq(page("http://x.com/p1", html(goodText))))),

@@ -50,8 +50,7 @@ class DocPipelineSpec extends SparkSpec {
   }
 
   test("reliable checkpointDir: identical funnel and kept set") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-doc-ckpt").toString
+    val dir = SparkSpec.tempDir("graft-doc-ckpt").toString
     def run(ckpt: Option[String]) = DocPipeline.run(docs, "doc_id", "text",
       Some(evalSet), DocPipelineConfig(dedupNear = true, checkpointDir = ckpt))
     val local = run(None)

@@ -65,10 +65,9 @@ class FusedPassesSpec extends SparkSpec {
   }
 
   test("results.json sizes and the metadata lists equal the per-pass values") {
-    val out = Files.createTempDirectory("graftfp").toString
+    val out = SparkSpec.tempDir("graftfp").toString
     input.write.parquet(s"$out/input")
-    // an indicator run: the output summary is not computed (it cannot
-    // render the all-null feature's null aggregates)
+    // an indicator run: the output summary is not computed
     Pipeline.run(spark, PipelineConfig("m", "r", Seq(s"$out/input"), isIndicator = true,
       fillTimestamp = fill, weightColumn = "w", destType = "file", indicatorBucket = s"$out/bucket"))
     def read(rel: String): String = Files.readString(Paths.get(out, "bucket/m/r", rel))
@@ -116,6 +115,19 @@ class FusedPassesSpec extends SparkSpec {
     }
   }
 
+  test("a model run writes results.json with NaN for the all-null feature's aggregates") {
+    val out = SparkSpec.tempDir("graftfpm").toString
+    input.write.parquet(s"$out/input")
+    Pipeline.run(spark, PipelineConfig("m", "r", Seq(s"$out/input"),
+      fillTimestamp = fill, weightColumn = "w", destType = "file", modelBucket = s"$out/bucket"))
+    val results = Files.readString(Paths.get(out, "bucket/m/r/results/results.json"))
+    def summary(feature: String): Seq[String] =
+      s"""\\{"name": "$feature", ([^}]*)\\}""".r.findFirstMatchIn(results)
+        .getOrElse(fail(results)).group(1).split(", ").toSeq.map(_.split(": ")(1))
+    assert(summary("F2").nonEmpty && summary("F2").forall(_ == "NaN"), results)
+    assert(summary("F1").forall(_ != "NaN"), results)
+  }
+
   test("the shared regional aggregate writes what each regional task's own pass writes") {
     val vr = Validate(input, "w", fill)
     val t = Temporal.aggregate(vr.df, "month", vr.weightColumn).cache()
@@ -128,7 +140,7 @@ class FusedPassesSpec extends SparkSpec {
           Pipeline.regionalTimeseries(t, regionCols, Nil, Map.empty, Map.empty, "w", cfg, "month", w, shared) +
           Pipeline.regionalAggregation(t, regionCols, Nil, Map.empty, "w", cfg, "month", w, shared)
       }
-      val (own, fused) = (Files.createTempDirectory("graftfo"), Files.createTempDirectory("graftff"))
+      val (own, fused) = (SparkSpec.tempDir("graftfo"), SparkSpec.tempDir("graftff"))
       val ownN = writeAll(own.toString, None)
       val (agg, aggCols) = Pipeline.regionalLevels(t, regionCols, "w")
       val fusedN = try writeAll(fused.toString, Some((agg.cache(), aggCols))) finally agg.unpersist()

@@ -62,8 +62,8 @@ class HybridRetrievalSpec extends SparkSpec {
       }.flatten
 
   test("hybrid fusion: both index scans stay bucket/cell-pruned; rrf re-derives") {
-    val textDir = Files.createTempDirectory("graft-hyb-text").toString
-    val vecDir = Files.createTempDirectory("graft-hyb-vec").toString
+    val textDir = SparkSpec.tempDir("graft-hyb-text").toString
+    val vecDir = SparkSpec.tempDir("graft-hyb-vec").toString
     TextIndex.writeIndex(docs, "doc_id", "text", textDir, buckets = 16)
     Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", vecDir,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)

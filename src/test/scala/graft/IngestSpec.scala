@@ -79,7 +79,7 @@ class IngestSpec extends SparkSpec {
 
     // full readData through the download machinery, with file:// URLs
     // standing in for http(s) (zero-egress test environment)
-    val dir = Files.createTempDirectory("graftdl")
+    val dir = SparkSpec.tempDir("graftdl")
     val a = df("timestamp LONG, feature STRING, value DOUBLE", Seq(Row(1L, "F", 4.5)))
     a.coalesce(1).write.parquet(s"$dir/remote.parquet")
     val onePart = Files.list(java.nio.file.Paths.get(s"$dir/remote.parquet"))
@@ -90,7 +90,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("round-trip through parquet files (S1)") {
-    val dir = Files.createTempDirectory("graftingest").toString
+    val dir = SparkSpec.tempDir("graftingest").toString
     val a = df("timestamp LONG, feature STRING, value DOUBLE", Seq(Row(1L, "F", 1.0)))
     a.write.parquet(s"$dir/part1.parquet")
     a.write.parquet(s"$dir/part2.parquet")

@@ -18,7 +18,7 @@ class IvfIndexSpec extends SparkSpec {
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   test("index probe equals in-flight IVF and prunes to the probed cells") {
-    val dir = Files.createTempDirectory("graft-ivf").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivf").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb, "vec_id", "embedding", dir, nCentroids = 16)
     val queries = emb.filter(col("vec_id") < 5)
 
@@ -57,7 +57,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("refined index seed matches the refined in-flight variant") {
-    val dir = Files.createTempDirectory("graft-ivf-r").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivf-r").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb, "vec_id", "embedding", dir,
       nCentroids = 16, refineIters = 2)
     val queries = emb.filter(col("vec_id") < 5)

@@ -45,7 +45,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("index serve equals in-flight IVF+PQ and prunes to the probed cells") {
-    val dir = Files.createTempDirectory("graft-ivfpq").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivfpq").toFile.getAbsolutePath
     Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", dir,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
     val queries = emb.filter(col("vec_id") < 5)
@@ -87,7 +87,7 @@ class IvfPqIndexSpec extends SparkSpec {
     // the FAISS add() contract: train() frozen at build, the delta
     // quantized against the STORED artifacts (append == rebuild is
     // deliberately NOT the contract here — a rebuild would re-train)
-    val dir = Files.createTempDirectory("graft-ivfpq-app").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivfpq-app").toFile.getAbsolutePath
     val half = emb.filter(col("vec_id") < 150)
     val delta = emb.filter(col("vec_id") >= 150)
     Similarity.ivfPqIndexWrite(half, "vec_id", "embedding", dir,
@@ -141,7 +141,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("compaction defragments appended cells without changing serving") {
-    val dir = Files.createTempDirectory("graft-ivfpq-cmp").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivfpq-cmp").toFile.getAbsolutePath
     Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") < 100),
       "vec_id", "embedding", dir,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
@@ -176,7 +176,7 @@ class IvfPqIndexSpec extends SparkSpec {
     // corpus and the same nProbe, the gauge's approx side encodes
     // exactly the codes the index holds, so the gauge must equal
     // recallAtK(index-served, brute-force) computed independently
-    val dir = Files.createTempDirectory("graft-ivfpq-drift").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivfpq-drift").toFile.getAbsolutePath
     Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", dir,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
     val queries = emb.filter(col("vec_id") < 8)
@@ -211,7 +211,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("rebuild swaps atomically: torn windows heal, readers never see halves") {
-    val dir = Files.createTempDirectory("graft-ivfpq-rb").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivfpq-rb").toFile.getAbsolutePath
     val half = emb.filter(col("vec_id") < 150)
     Similarity.ivfPqIndexWrite(half, "vec_id", "embedding", dir,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
@@ -225,7 +225,7 @@ class IvfPqIndexSpec extends SparkSpec {
     Similarity.ivfPqIndexRebuild(emb, "vec_id", "embedding", dir,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
     assert(!new java.io.File(s"$dir.swap").exists(), "swap tree cleaned up")
-    val fresh = Files.createTempDirectory("graft-ivfpq-rb-f").toFile.getAbsolutePath
+    val fresh = SparkSpec.tempDir("graft-ivfpq-rb-f").toFile.getAbsolutePath
     Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", fresh,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
     val v2 = serve()
@@ -270,7 +270,7 @@ class IvfPqIndexSpec extends SparkSpec {
     // the committed swap; the shared per-tree lock serializes the
     // delete-then-rename, so the second entrant re-checks and no-ops —
     // unlocked, both would run it and delete BOTH copies of the index
-    val dir = Files.createTempDirectory("graft-ivfpq-race").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivfpq-race").toFile.getAbsolutePath
     Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") < 150),
       "vec_id", "embedding", dir,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
@@ -295,7 +295,7 @@ class IvfPqIndexSpec extends SparkSpec {
       && !new java.io.File(s"$dir.swap").exists(),
       "exactly one completion: target present, swap consumed")
     // and the swapped-in index serves whole (== a fresh full build)
-    val fresh = Files.createTempDirectory("graft-ivfpq-race-f").toFile.getAbsolutePath
+    val fresh = SparkSpec.tempDir("graft-ivfpq-race-f").toFile.getAbsolutePath
     Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", fresh,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
     assert(rowSet(Similarity.ivfPqIndexTopK(spark, dir, queries,
@@ -305,7 +305,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("an empty training corpus fails loudly at build, not obscurely later") {
-    val dir = Files.createTempDirectory("graft-ivfpq-zero").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivfpq-zero").toFile.getAbsolutePath
     val e = intercept[IllegalArgumentException] {
       Similarity.ivfPqIndexWrite(emb.limit(0), "vec_id", "embedding", dir,
         dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
@@ -324,7 +324,7 @@ class IvfPqIndexSpec extends SparkSpec {
 
   test("serving resolves parameters from the layout, not the caller") {
     // a non-default geometry: the meta sidecar must carry it to the probe
-    val dir = Files.createTempDirectory("graft-ivfpq-m8").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-ivfpq-m8").toFile.getAbsolutePath
     Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", dir,
       dims = 64, nCentroids = 8, m = 8, codes = 8, iters = 1)
     val queries = emb.filter(col("vec_id") < 3)

@@ -16,7 +16,7 @@ import graft.operators.TileMath
 class LayoutSpec extends SparkSpec {
 
   test("z-clustered files own disjoint ranges and parent scans prune") {
-    val dir = Files.createTempDirectory("graft-layout").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-layout").toFile.getAbsolutePath
     val grid = for (x <- 0 until 64; y <- 0 until 64) yield Row(x.toLong, y.toLong)
     val in = df("x LONG, y LONG", grid)
       .withColumn("z", TileMath.zorder(col("x"), col("y")))

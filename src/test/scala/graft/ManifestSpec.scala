@@ -20,7 +20,7 @@ class ManifestSpec extends SparkSpec {
 
   test("a reader pinned on v(N) survives a compaction commit of v(N+1), bit-identical") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-pin").toString
+    val dir = SparkSpec.tempDir("graft-man-pin").toString
     def url(i: Int) = s"http://pin${i % 7}.org/p/$i"
     SeenSet.writeSet((0 until 300).map(url).toDF("url"), "url", dir,
       buckets = 8)
@@ -61,7 +61,7 @@ class ManifestSpec extends SparkSpec {
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(400)
     val queries = emb.limit(8)
-    val dir = Files.createTempDirectory("graft-man-gen").toString
+    val dir = SparkSpec.tempDir("graft-man-gen").toString
     Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", dir,
       dims = 32, nCentroids = 8, m = 4, codes = 8)
     val vN = Manifest.current(spark, dir).get
@@ -97,7 +97,7 @@ class ManifestSpec extends SparkSpec {
   }
 
   test("ledger consolidation is snapshot-committed: pinned totals and live totals agree") {
-    val dir = Files.createTempDirectory("graft-man-led").toString
+    val dir = SparkSpec.tempDir("graft-man-led").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", dir, buckets = 8)
     TextIndex.appendToIndex(docs.filter(col("doc_id") % 2 === 1),
@@ -118,7 +118,7 @@ class ManifestSpec extends SparkSpec {
 
   test("orphan files of a torn run are invisible to every snapshot; vacuum sweeps them") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-orph").toString
+    val dir = SparkSpec.tempDir("graft-man-orph").toString
     def url(i: Int) = s"http://orph.org/p/$i"
     SeenSet.writeSet((0 until 100).map(url).toDF("url"), "url", dir,
       buckets = 4)
@@ -148,7 +148,7 @@ class ManifestSpec extends SparkSpec {
     // leaves a pinned reader's file list intact until vacuum.
     import spark.implicits._
     import graft.io.CorpusStore
-    val dir = Files.createTempDirectory("graft-man-store").toString
+    val dir = SparkSpec.tempDir("graft-man-store").toString
     val base = (0L until 100L).map(i => (i, s"v0-$i")).toDF("doc_id", "text")
     CorpusStore.write(base, "doc_id", dir, buckets = 8)
     val vN = Manifest.current(spark, dir).get
@@ -181,7 +181,7 @@ class ManifestSpec extends SparkSpec {
     // on disk, the current version serves the replacement, and the
     // orphan sweep reclaims the un-ledgered files without the ledger.
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-lost").toString
+    val dir = SparkSpec.tempDir("graft-man-lost").toString
     def url(i: Int) = s"http://lost.org/p/$i"
     SeenSet.writeSet((0 until 200).map(url).toDF("url"), "url", dir,
       buckets = 4)
@@ -215,7 +215,7 @@ class ManifestSpec extends SparkSpec {
 
   test("version commits are atomic names: temp files and foreign names are ignored") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-atom").toString
+    val dir = SparkSpec.tempDir("graft-man-atom").toString
     SeenSet.writeSet((0 until 10).map(i => s"u$i").toDF("url"), "url", dir,
       buckets = 2)
     val v1 = Manifest.current(spark, dir).get
@@ -241,7 +241,7 @@ class ManifestSpec extends SparkSpec {
     // scope over a sidecar fails here, not in production.
     import spark.implicits._
     import graft.io.{BandIndex, CorpusStore}
-    def mkDir(p: String) = Files.createTempDirectory(p).toString
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
     def exists(p: String) = new java.io.File(p).exists()
 
     // SeenSet: meta/ immutable, bloom/ merge-only

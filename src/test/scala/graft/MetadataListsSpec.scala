@@ -35,7 +35,7 @@ class MetadataListsSpec extends SparkSpec {
   }
 
   test("region_lists.json carries all four levels with __-joined ancestor chains") {
-    val dir = Files.createTempDirectory("graftml").toString
+    val dir = SparkSpec.tempDir("graftml").toString
     Pipeline.writeRegionLists(base, Regions.extractRegionColumns(base), Seq("A", "B"),
       PipelineConfig("mid-1", "rid-1", Seq("unused")), FileWriter(dir))
 
@@ -53,7 +53,7 @@ class MetadataListsSpec extends SparkSpec {
   }
 
   test("qualifier lists, counts file, and returned counts match the reference") {
-    val dir = Files.createTempDirectory("graftml").toString
+    val dir = SparkSpec.tempDir("graftml").toString
     val counts = Pipeline.writeQualifierLists(base,
       Validate.qualifierColumns(base, ""), Seq("A", "B"),
       PipelineConfig("mid-1", "rid-1", Seq("unused")), FileWriter(dir))

@@ -25,7 +25,7 @@ import graft.pipeline.{OutputTask, Pipeline, PipelineConfig}
 class ParameterMatrixSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graftpm$tag").toString
+    SparkSpec.tempDir(s"graftpm$tag").toString
 
   private def p(parts: String*): Path = Paths.get(parts.head, parts.tail: _*)
 
@@ -40,15 +40,19 @@ class ParameterMatrixSpec extends SparkSpec {
     "timestamp LONG, country STRING, admin1 STRING, lat DOUBLE, lng DOUBLE, " +
       "feature STRING, value DOUBLE, qual1 STRING"
 
-  test("set 0: geo tiling data with all output tasks selected") {
-    val out = tmp("geo")
+  /** Set 0's input, written under `out`, and its config. */
+  private def geoConfig(out: String): PipelineConfig = {
     val input = s"$out/input"
     df(geoSchema, geoRows).write.parquet(input)
-    val cfg = PipelineConfig("geo-test-data", "test-run-1", Seq(input),
+    PipelineConfig("geo-test-data", "test-run-1", Seq(input),
       qualifierMap = Map("F1" -> Seq("qual1")),
       selectedOutputTasks = OutputTask.All,
       destType = "file", modelBucket = s"$out/bucket")
-    val r = Pipeline.run(spark, cfg)
+  }
+
+  test("set 0: geo tiling data with all output tasks selected") {
+    val out = tmp("geo")
+    val r = Pipeline.run(spark, geoConfig(out))
     assert(r.numRows === 5)
     val b = s"$out/bucket/geo-test-data/test-run-1"
     assert(Files.exists(p(b, "month/F1/timeseries/global/global.csv")))
@@ -59,6 +63,21 @@ class ParameterMatrixSpec extends SparkSpec {
     // an explicit all-five selection still records results (the skip matrix
     // treats it as "everything", reference configure_pipeline)
     assert(Files.exists(p(b, "results/results.json")))
+  }
+
+  test("set 0: results.json is byte-identical at 1 and 7 shuffle partitions") {
+    // AQE would coalesce the 7 partitions of these few rows back to one
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    def results(partitions: Int): String = {
+      spark.conf.set(keys(0), partitions.toLong)
+      spark.conf.set(keys(1), false)
+      val out = tmp(s"geo$partitions")
+      Pipeline.run(spark, geoConfig(out))
+      Files.readString(p(s"$out/bucket/geo-test-data/test-run-1", "results/results.json"))
+    }
+    try assert(results(1) === results(7))
+    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("set 2: indicator with multi-qualifier map lands in the indicator bucket") {

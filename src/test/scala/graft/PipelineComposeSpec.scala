@@ -132,8 +132,8 @@ class PipelineComposeSpec extends SparkSpec {
     assert(addedKept.count() > 0, "fixture produced no added keepers")
 
     // text index: standing build + loop-driven append == full rebuild
-    val dirA = java.nio.file.Files.createTempDirectory("graft-loop-ti-a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft-loop-ti-b").toString
+    val dirA = SparkSpec.tempDir("graft-loop-ti-a").toString
+    val dirB = SparkSpec.tempDir("graft-loop-ti-b").toString
     graft.io.TextIndex.writeIndex(standingKept, "doc_id", "text", dirA, buckets = 16)
     graft.io.TextIndex.appendToIndex(addedKept, "doc_id", "text", dirA)
     graft.io.TextIndex.writeIndex(res.keptNext, "doc_id", "text", dirB, buckets = 16)
@@ -144,8 +144,8 @@ class PipelineComposeSpec extends SparkSpec {
       "appended text index diverged from a rebuild over keptNext")
 
     // band index: same contract through BandIndex.appendToIndex
-    val dirC = java.nio.file.Files.createTempDirectory("graft-loop-bi-a").toString
-    val dirD = java.nio.file.Files.createTempDirectory("graft-loop-bi-b").toString
+    val dirC = SparkSpec.tempDir("graft-loop-bi-a").toString
+    val dirD = SparkSpec.tempDir("graft-loop-bi-b").toString
     graft.io.BandIndex.writeIndex(standingKept, "doc_id", "text", dirC)
     graft.io.BandIndex.appendToIndex(addedKept, "doc_id", "text", dirC)
     graft.io.BandIndex.writeIndex(res.keptNext, "doc_id", "text", dirD)
@@ -181,7 +181,7 @@ class PipelineComposeSpec extends SparkSpec {
         .filter(!coalesce(col("keep"), lit(false))).select("doc_id"))
     assert(deltaKept.count() > 0 && evictIds.count() > 0,
       "fixture must exercise both the upsert and the evict path")
-    val dirE = java.nio.file.Files.createTempDirectory("graft-loop-cs").toString
+    val dirE = SparkSpec.tempDir("graft-loop-cs").toString
     graft.io.CorpusStore.write(standingKept, "doc_id", dirE, buckets = 8)
     graft.io.CorpusStore.upsert(deltaKept, "doc_id", dirE)
     graft.io.CorpusStore.delete(evictIds, "doc_id", dirE)

@@ -13,7 +13,7 @@ import graft.pipeline.{Pipeline, PipelineConfig}
 class PipelineRunSpec extends SparkSpec {
 
   test("end-to-end run materializes the reference tree and results.json") {
-    val outDir = Files.createTempDirectory("grafte2e").toString
+    val outDir = SparkSpec.tempDir("grafte2e").toString
     val input = s"$outDir/input"
     df(
       "timestamp LONG, country STRING, admin1 STRING, lat DOUBLE, lng DOUBLE, " +
@@ -74,7 +74,7 @@ class PipelineRunSpec extends SparkSpec {
   test("object-store sink (S6): Hadoop FS path produces a byte-identical tree") {
     // file:/ through HadoopFsWriter exercises the same FileSystem code path
     // a real s3a:// destination takes (create/close per object)
-    val outDir = Files.createTempDirectory("grafts6").toString
+    val outDir = SparkSpec.tempDir("grafts6").toString
     val input = s"$outDir/input"
     df(
       "timestamp LONG, country STRING, admin1 STRING, feature STRING, value DOUBLE",
@@ -113,7 +113,7 @@ class PipelineRunSpec extends SparkSpec {
   }
 
   test("a run that fails after caching its input releases the cache") {
-    val outDir = Files.createTempDirectory("grafte2f").toString
+    val outDir = SparkSpec.tempDir("grafte2f").toString
     val input = s"$outDir/input"
     df("timestamp LONG, country STRING, feature STRING, value DOUBLE",
       Seq(Row(0L, "A", "F1", 1.0), Row(86400000L, "B", "F1", 2.0)))
@@ -144,7 +144,7 @@ class PipelineRunSpec extends SparkSpec {
       .write.parquet(input)
 
   test("a run with regions and qualifiers releases every cache it makes") {
-    val outDir = Files.createTempDirectory("grafte2r").toString
+    val outDir = SparkSpec.tempDir("grafte2r").toString
     val input = s"$outDir/input"
     writeRegionalInput(input)
     def cached = spark.sparkContext.getPersistentRDDs.size
@@ -164,7 +164,7 @@ class PipelineRunSpec extends SparkSpec {
     // breakdown, no lat/lng. It took 63 jobs before the run shared one
     // regional aggregate per resolution and made one metadata and one
     // validation pass.
-    val outDir = Files.createTempDirectory("grafte2j").toString
+    val outDir = SparkSpec.tempDir("grafte2j").toString
     val input = s"$outDir/input"
     writeRegionalInput(input)
     val cfg = PipelineConfig("m7", "r7", Seq(input), isIndicator = true,
@@ -193,7 +193,7 @@ class PipelineRunSpec extends SparkSpec {
   }
 
   test("run with no region columns completes and skips regional outputs") {
-    val outDir = Files.createTempDirectory("grafte2c").toString
+    val outDir = SparkSpec.tempDir("grafte2c").toString
     val input = s"$outDir/input"
     df("timestamp LONG, lat DOUBLE, lng DOUBLE, feature STRING, value DOUBLE",
       Seq(
@@ -214,7 +214,7 @@ class PipelineRunSpec extends SparkSpec {
   }
 
   test("indicator run with selected tasks skips summary, tiles and results") {
-    val outDir = Files.createTempDirectory("grafte2b").toString
+    val outDir = SparkSpec.tempDir("grafte2b").toString
     val input = s"$outDir/input"
     df("timestamp LONG, country STRING, feature STRING, value DOUBLE",
       Seq(Row(0L, "A", "F1", 1.0), Row(86400000L, "B", "F1", 2.0)))

@@ -37,7 +37,7 @@ class PipelineStagesSpec extends SparkSpec {
   private def cfg = PipelineConfig("model-id-1", "run-id-1", Seq("unused"))
 
   test("regional timeseries: one CSV per (feature, region) with golden values") {
-    val dir = Files.createTempDirectory("graftrts").toString
+    val dir = SparkSpec.tempDir("graftrts").toString
     Pipeline.regionalTimeseries(fixture, regionCols, Seq.empty, Map.empty,
       Map.empty, "", cfg, "month", FileWriter(dir))
 
@@ -64,7 +64,7 @@ class PipelineStagesSpec extends SparkSpec {
   }
 
   test("regional stats: extrema entries match the reference goldens") {
-    val dir = Files.createTempDirectory("graftstats").toString
+    val dir = SparkSpec.tempDir("graftstats").toString
     // extended fixture with a third timestamp, as in the reference test
     val in = df(schema, fixture.collect().toSeq ++ Seq(
       Row(2L, "A", "AA", "AAA", "AAAA", "F1", 20.0, 10.0),
@@ -104,7 +104,7 @@ class PipelineStagesSpec extends SparkSpec {
   }
 
   test("regional stats: extrema lists are capped at 20 rows") {
-    val dir = Files.createTempDirectory("graftcap").toString
+    val dir = SparkSpec.tempDir("graftcap").toString
     val rows = (1 to 22).map(t =>
       Row(t.toLong, "A", "AA", "AAA", "AAAA", "F2", 10.0, 2.0))
     Pipeline.regionalStats(df(schema, rows), regionCols, "", cfg, "year", FileWriter(dir))
@@ -116,7 +116,7 @@ class PipelineStagesSpec extends SparkSpec {
   }
 
   test("regional timeseries qualifier suppression above max level") {
-    val dir = Files.createTempDirectory("graftsupp").toString
+    val dir = SparkSpec.tempDir("graftsupp").toString
     val in = fixture.withColumn("qual1", org.apache.spark.sql.functions.lit("qx"))
     Pipeline.regionalTimeseries(in, regionCols, Seq("qual1"),
       Map("F1" -> Seq("qual1"), "F2" -> Seq("qual1")),

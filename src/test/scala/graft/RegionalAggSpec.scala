@@ -29,7 +29,7 @@ class RegionalAggSpec extends SparkSpec {
   private def run(t: org.apache.spark.sql.DataFrame, timeRes: String,
                   qualifierCols: Seq[String], qualifierMap: Map[String, Seq[String]],
                   modelId: String): String = {
-    val dir = Files.createTempDirectory("graftral").toString
+    val dir = SparkSpec.tempDir("graftral").toString
     Pipeline.regionalAggregation(t, Regions.extractRegionColumns(t), qualifierCols,
       qualifierMap, "", PipelineConfig(modelId, "r", Seq("unused")), timeRes, FileWriter(dir))
     dir

@@ -35,7 +35,7 @@ class SeenSetSpec extends SparkSpec {
     b.join(seen.select(col("url").as("__s")), col("url") === col("__s"), "left_anti")
 
   test("probeNovel equals the plain anti-join exactly") {
-    val dir = Files.createTempDirectory("graft-seen").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-seen").toFile.getAbsolutePath
     SeenSet.writeSet(seenUrls, "url", dir)
     val novel = SeenSet.probeNovel(spark, dir, batch, "url")
     val exact = exactNovel(seenUrls, batch)
@@ -49,7 +49,7 @@ class SeenSetSpec extends SparkSpec {
   }
 
   test("append equals full rebuild; appending the novel sliver closes the loop") {
-    val dirApp = Files.createTempDirectory("graft-seen-app").toFile.getAbsolutePath
+    val dirApp = SparkSpec.tempDir("graft-seen-app").toFile.getAbsolutePath
     val first = urlUniverse(docs.filter(col("doc_id") < 120), 30)
     val second = urlUniverse(
       docs.filter(col("doc_id") >= 120 && col("doc_id") < 250), 30)
@@ -70,7 +70,7 @@ class SeenSetSpec extends SparkSpec {
   test("confirm scan is bucket-pruned and Bloom-prefiltered") {
     // a 1-URL probe against a high-bucket set: the claimed sliver hashes
     // into at most one bucket, so the urls/ scan must read < buckets dirs
-    val dirP = Files.createTempDirectory("graft-seen-prune").toFile.getAbsolutePath
+    val dirP = SparkSpec.tempDir("graft-seen-prune").toFile.getAbsolutePath
     SeenSet.writeSet(seenUrls, "url", dirP, buckets = 256)
     val one = seenUrls.orderBy("url").limit(1)
     val probed = SeenSet.probeNovel(spark, dirP, one, "url")
@@ -99,7 +99,7 @@ class SeenSetSpec extends SparkSpec {
     // that window deletes the only copy. The store is the source of
     // truth — storedBloom must rebuild (same geometry + same elements =
     // bit-identical filter), persist the rebuilt copy, and probe exactly
-    val dir = Files.createTempDirectory("graft-seen-torn").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-seen-torn").toFile.getAbsolutePath
     SeenSet.writeSet(seenUrls, "url", dir)
     val exact = rowSet(exactNovel(seenUrls, batch))
     // simulate the torn overwrite: the commit marker (and data) gone
@@ -123,7 +123,7 @@ class SeenSetSpec extends SparkSpec {
   test("probe resolves buckets from the layout; edge cases") {
     // non-default bucket count: a caller-side default would compute wrong
     // bucket ids and the pruned confirm would miss seen URLs
-    val dir = Files.createTempDirectory("graft-seen-m").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-seen-m").toFile.getAbsolutePath
     SeenSet.writeSet(seenUrls, "url", dir, buckets = 17, fpp = 0.2)
     val novel = SeenSet.probeNovel(spark, dir, batch, "url")
     assert(rowSet(novel) === rowSet(exactNovel(seenUrls, batch)))
@@ -144,8 +144,8 @@ class SeenSetSpec extends SparkSpec {
     // footer) or with a committed-but-empty file set. Either used to
     // throw on EVERY later batch (schema inference / null max),
     // bricking the face until manual cleanup; it must read as -1.
-    val dir = Files.createTempDirectory("graft-seen-wm").toFile.getAbsolutePath
-    val novelDir = Files.createTempDirectory("graft-seen-wm-n").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-seen-wm").toFile.getAbsolutePath
+    val novelDir = SparkSpec.tempDir("graft-seen-wm-n").toFile.getAbsolutePath
     SeenSet.writeSet(seenUrls, "url", dir)
     assert(SeenSet.dedupBatch(batch, "url", dir, novelDir, 0L))
     val emitted = rowSet(spark.read.parquet(s"$novelDir/batch_id=0").select("url"))
@@ -181,7 +181,7 @@ class SeenSetSpec extends SparkSpec {
     // the crawl fleet's bootstrap: nothing seen yet. The empty set must
     // probe (all novel — no inference error on the empty urls tree),
     // take the feedback append, and then behave like any standing set.
-    val dir = Files.createTempDirectory("graft-seen-zero").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft-seen-zero").toFile.getAbsolutePath
     SeenSet.writeSet(seenUrls.limit(0), "url", dir)
     assert(rowSet(SeenSet.probeNovel(spark, dir, batch, "url"))
       === rowSet(batch), "against an empty set the whole batch is novel")

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,6 +28,26 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  private val tempDirs = {
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+    sys.addShutdownHook(q.forEach { d =>
+      try {
+        val walk = Files.walk(d)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+        finally walk.close()
+      } catch { case NonFatal(_) => } // best effort: a spec may have deleted it
+    })
+    q
+  }
+
+  /** A fresh temp directory `<prefix>*`, deleted with its contents when the
+    * JVM exits. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
   // SELF-HEALING accessor (r20 verdict #1): one driver run died mid-suite
   // with "Job cancelled because SparkContext was shut down" — an async
   // context teardown (RejectedExecutionException in TaskSchedulerImpl →

@@ -65,7 +65,7 @@ class SpatialSinkSpec extends SparkSpec {
   }
 
   test("one global.csv object per feature with pandas-compatible bytes") {
-    val dir = Files.createTempDirectory("graftsink").toString
+    val dir = SparkSpec.tempDir("graftsink").toString
     val (agg, aggCols) = Spatial.aggregate(input, Seq("feature", "timestamp"), Seq("sum", "mean"))
     val header = "timestamp" +: aggCols
     val idx = header.map(agg.schema.fieldIndex)
@@ -87,7 +87,7 @@ class SpatialSinkSpec extends SparkSpec {
   }
 
   test("sink runs split on null keys and on a change in the last key column only") {
-    val dir = Files.createTempDirectory("graftsinkkeys").toString
+    val dir = SparkSpec.tempDir("graftsinkkeys").toString
     val in = df("k1 STRING, k2 STRING, v INT", Seq(
       Row("a", "x", 1), Row("a", "x", 2), Row("a", "y", 3), Row("a", null, 4),
       Row(null, "x", 5), Row(null, null, 6), Row(null, null, 7), Row("b", "y", 8)))

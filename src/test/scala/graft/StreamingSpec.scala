@@ -66,7 +66,7 @@ class StreamingSpec extends SparkSpec {
     // the stream picks them up incrementally, state survives via the
     // checkpoint, results append to a parquet sink
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graftstream").toString
+    val root = SparkSpec.tempDir("graftstream").toString
     val (in, out, chk) = (s"$root/in", s"$root/out", s"$root/chk")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
 
@@ -779,8 +779,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.io.BandIndex
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val ixDir = java.nio.file.Files.createTempDirectory("graft-sband").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-sband-ck").toString
+    val ixDir = SparkSpec.tempDir("graft-sband").toString
+    val ckDir = SparkSpec.tempDir("graft-sband-ck").toString
     BandIndex.writeIndex(docs.filter(col("doc_id") < 100), "doc_id", "text",
       ixDir, n = 3, numHashes = 64, bands = 16)
     val rows = docs.filter(col("doc_id") >= 100 && col("doc_id") < 250)
@@ -794,7 +794,7 @@ class StreamingSpec extends SparkSpec {
     finally q.stop()
 
     val probeBatch = docs.filter(col("doc_id") >= 250)
-    val rbDir = java.nio.file.Files.createTempDirectory("graft-sband-rb").toString
+    val rbDir = SparkSpec.tempDir("graft-sband-rb").toString
     BandIndex.writeIndex(docs.filter(col("doc_id") < 250), "doc_id", "text",
       rbDir, n = 3, numHashes = 64, bands = 16)
     val rebuilt = rowSet(BandIndex.probe(spark, rbDir, probeBatch, "doc_id", "text"))
@@ -842,9 +842,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.io.SeenSet
     def url(i: Int) = s"http://s${i % 5}.com/p/$i"
-    val seenDir = java.nio.file.Files.createTempDirectory("graft-sseen").toString
-    val novelDir = java.nio.file.Files.createTempDirectory("graft-snovel").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-sseen-ck").toString
+    val seenDir = SparkSpec.tempDir("graft-sseen").toString
+    val novelDir = SparkSpec.tempDir("graft-snovel").toString
+    val ckDir = SparkSpec.tempDir("graft-sseen-ck").toString
     SeenSet.writeSet((0 until 150).map(url).toDF("url"), "url", seenDir)
     // overlapping batches: 100..250 (50 seen), 200..350 (50 repeat batch
     // 1), 100..400 (everything repeats except 350..399); batch 0 also
@@ -934,8 +934,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.io.TextIndex
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val ixDir = java.nio.file.Files.createTempDirectory("graft-sti").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-sti-ck").toString
+    val ixDir = SparkSpec.tempDir("graft-sti").toString
+    val ckDir = SparkSpec.tempDir("graft-sti-ck").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 100), "doc_id", "text",
       ixDir, buckets = 16)
     val rows = docs.filter(col("doc_id") >= 100 && col("doc_id") < 250)
@@ -949,7 +949,7 @@ class StreamingSpec extends SparkSpec {
     try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
 
-    val rbDir = java.nio.file.Files.createTempDirectory("graft-sti-rb").toString
+    val rbDir = SparkSpec.tempDir("graft-sti-rb").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 250), "doc_id", "text",
       rbDir, buckets = 16)
     val terms = Seq("the", "and", "table")
@@ -1021,8 +1021,8 @@ class StreamingSpec extends SparkSpec {
     def prose(i: Long) = "the quick brown fox jumps over a lazy dog " +
       "while many other animals watch from their warm homes and some " +
       "birds fly across the evening sky toward distant hills " + i
-    val storeDir = java.nio.file.Files.createTempDirectory("graft-cur").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-cur-ck").toString
+    val storeDir = SparkSpec.tempDir("graft-cur").toString
+    val ckDir = SparkSpec.tempDir("graft-cur-ck").toString
     // seed snapshot: ids 0-9, all passing
     val seed = (0L until 10L).map(i => (i, prose(i)))
     CorpusStore.write(seed.toDF("doc_id", "text"), "doc_id", storeDir,
@@ -1102,7 +1102,7 @@ class StreamingSpec extends SparkSpec {
     def text(i: Long) = if (i % 9 == 0) "zz qq" else prose(i)
     def url(i: Long) = s"http://h${i % 7}.example/d/$i"
     def row(i: Long) = (url(i), i, text(i))
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
     val seenDir = mkDir("graft-ss-seen"); val novelDir = mkDir("graft-ss-novel")
     val storeDir = mkDir("graft-ss-store"); val bandDir = mkDir("graft-ss-band")
     val textDir = mkDir("graft-ss-text"); val ckDir = mkDir("graft-ss-ck")
@@ -1220,7 +1220,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.Similarity
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
     val ixDir = mkDir("graft-svec"); val ckDir = mkDir("graft-svec-ck")
     val gaugeDir = mkDir("graft-svec-gauge")
     Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") < 100),
@@ -1325,7 +1325,8 @@ class StreamingSpec extends SparkSpec {
     def uprose(i: Long) = "the " + (0 until 10).map(tok(i, _)).mkString(" ") +
       " and some " + (10 until 18).map(tok(i, _)).mkString(" ") + " from here"
     def url(i: Long) = s"http://nd${i % 5}.example/d/$i"
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // a subdir, so the sinks' `<dir>.curated` siblings land inside the temp dir
+    def mkDir(p: String) = java.nio.file.Files.createDirectory(SparkSpec.tempDir(p).resolve("d")).toString
     val seenDir = mkDir("graft-nd-seen"); val novelDir = mkDir("graft-nd-novel")
     val storeDir = mkDir("graft-nd-store"); val bandDir = mkDir("graft-nd-band")
     val textDir = mkDir("graft-nd-text"); val ckDir = mkDir("graft-nd-ck")
@@ -1420,7 +1421,8 @@ class StreamingSpec extends SparkSpec {
       " and some " + (10 until 18).map(tok(i, _)).mkString(" ") + " from here"
     def url(i: Long) = s"http://dz${i % 5}.example/d/$i"
     def row(i: Long) = (url(i), i, uprose(i))
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // a subdir, so the sinks' `<dir>.curated` siblings land inside the temp dir
+    def mkDir(p: String) = java.nio.file.Files.createDirectory(SparkSpec.tempDir(p).resolve("d")).toString
     val seenDir = mkDir("graft-dz-seen"); val novelDir = mkDir("graft-dz-novel")
     val storeDir = mkDir("graft-dz-store"); val bandDir = mkDir("graft-dz-band")
     val textDir = mkDir("graft-dz-text")
@@ -1483,7 +1485,8 @@ class StreamingSpec extends SparkSpec {
     }
     for (seed <- Seq(7L, 23L)) {
       val rng = new scala.util.Random(seed)
-      def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+      // a subdir, so the sinks' `<dir>.curated` siblings land inside the temp dir
+      def mkDir(p: String) = java.nio.file.Files.createDirectory(SparkSpec.tempDir(p).resolve("d")).toString
       val seenDir = mkDir("graft-cr-seen"); val novelDir = mkDir("graft-cr-novel")
       val storeDir = mkDir("graft-cr-store"); val bandDir = mkDir("graft-cr-band")
       val textDir = mkDir("graft-cr-text")
@@ -1564,7 +1567,7 @@ class StreamingSpec extends SparkSpec {
       (0 until 16).map(j => math.sin(i * 31.0 + j * 7.0))
     def url(i: Long) = s"http://v${i % 7}.example/d/$i"
     def row(i: Long) = (url(i), i, text(i), embv(i))
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
     val seenDir = mkDir("graft-ve-seen"); val novelDir = mkDir("graft-ve-novel")
     val storeDir = mkDir("graft-ve-store"); val bandDir = mkDir("graft-ve-band")
     val textDir = mkDir("graft-ve-text"); val vecDir = mkDir("graft-ve-vec")
@@ -1687,7 +1690,7 @@ class StreamingSpec extends SparkSpec {
     import graft.io.{BandIndex, CorpusStore, SeenSet, TextIndex}
     // unit semantics first: cutoff = min(face watermarks) - retain;
     // a never-applied face (watermark -1) disables GC outright
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
     val f1 = mkDir("graft-ret-f1"); val f2 = mkDir("graft-ret-f2")
     val em = mkDir("graft-ret-em")
     (0L until 10L).foreach(i => Seq(i).toDF("x")
@@ -1753,7 +1756,7 @@ class StreamingSpec extends SparkSpec {
       else s"short note ${i} about the item and its many uses here"
     def url(i: Long) = s"http://g${i % 3}.example/d/$i"
     def row(i: Long) = (url(i), i, text(i))
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
     val seenDir = mkDir("graft-qg-seen"); val novelDir = mkDir("graft-qg-novel")
     val storeDir = mkDir("graft-qg-store"); val bandDir = mkDir("graft-qg-band")
     val textDir = mkDir("graft-qg-text")
@@ -1822,7 +1825,7 @@ class StreamingSpec extends SparkSpec {
     def url(i: Long) = s"http://h${i % 5}.example/d/$i"
     def row(i: Long, drifted: Boolean) =
       (url(i), i, prose(i), emb(i, drifted))
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
     val seenDir = mkDir("graft-au-seen"); val novelDir = mkDir("graft-au-novel")
     val storeDir = mkDir("graft-au-store"); val bandDir = mkDir("graft-au-band")
     val textDir = mkDir("graft-au-text"); val vecDir = mkDir("graft-au-vec")
@@ -1957,7 +1960,7 @@ class StreamingSpec extends SparkSpec {
     def url(i: Long) = s"http://t${i % 5}.example/d/$i"
     def row(i: Long, drifted: Boolean) =
       (url(i), i, prose(i), emb(i, drifted))
-    def mkDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
     val seenDir = mkDir("graft-tg-seen"); val novelDir = mkDir("graft-tg-novel")
     val storeDir = mkDir("graft-tg-store"); val bandDir = mkDir("graft-tg-band")
     val textDir = mkDir("graft-tg-text"); val vecDir = mkDir("graft-tg-vec")

@@ -50,7 +50,7 @@ class SubtileSpec extends SparkSpec {
         Row("F2", 0L, 14, 9632, 7755, 120.0, 60.0, 2L),
         Row("F2", 1L, 14, 10041, 7726, 80.0, 40.0, 3L),
         Row("F2", 1L, 14, 9632, 7755, 90.0, 1.8, 2L)))
-    val dir = java.nio.file.Files.createTempDirectory("graftgrid").toString
+    val dir = SparkSpec.tempDir("graftgrid").toString
     val n = Pipeline.gridStats(subtiles,
       graft.pipeline.PipelineConfig("model-id-1", "run-id-1", Seq("unused")),
       "month", graft.io.FileWriter(dir))

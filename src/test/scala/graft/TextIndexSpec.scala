@@ -14,7 +14,7 @@ class TextIndexSpec extends SparkSpec {
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   test("bm25SearchIndex equals bm25Search bit-for-bit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-textindex").toString
+    val dir = SparkSpec.tempDir("graft-textindex").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 32)
     val terms = Seq("hash", "join", "merge")
     val fromIndex = TextIndex.bm25SearchIndex(spark, dir, terms, k = 15, buckets = 32)
@@ -26,7 +26,7 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("the postings scan is pruned to the probed buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-textindex2").toString
+    val dir = SparkSpec.tempDir("graft-textindex2").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 32)
     val q = TextIndex.bm25SearchIndex(spark, dir, Seq("hash"), k = 5, buckets = 32)
     // AQE wraps finished stages in QueryStageExec leaves (the IvfIndexSpec
@@ -54,7 +54,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("appendToIndex: incremental add equals re-indexing the full corpus") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-textindex4").toString
+    val dir = SparkSpec.tempDir("graft-textindex4").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 250), "doc_id", "text",
       dir, buckets = 16)
     TextIndex.appendToIndex(docs.filter(col("doc_id") >= 250), "doc_id", "text",
@@ -68,7 +68,7 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("phraseSearchIndex equals the corpus-scan phraseSearch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-textindex5").toString
+    val dir = SparkSpec.tempDir("graft-textindex5").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 16)
     for (phrase <- Seq(Seq("table", "table"), Seq("fast", "key"),
         Seq("value", "table", "part"), Seq("no-such-term", "table"))) {
@@ -86,7 +86,7 @@ class TextIndexSpec extends SparkSpec {
     // stats sidecar now records the layout and every entry point resolves
     // through it
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-textindex6").toString
+    val dir = SparkSpec.tempDir("graft-textindex6").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 250), "doc_id", "text",
       dir, buckets = 16)
     // deliberately wrong bucket counts everywhere downstream
@@ -107,7 +107,7 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("a disjoint query over the same index finds its own postings") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-textindex3").toString
+    val dir = SparkSpec.tempDir("graft-textindex3").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 8)
     val out = TextIndex.bm25SearchIndex(spark, dir, Seq("customer"), k = 3, buckets = 8)
       .collect()
@@ -127,7 +127,7 @@ class TextIndexSpec extends SparkSpec {
     // postings (healed at read) and double-count the BM25 normalizers
     // (NOT healed — a second random-tag stats row). The content-derived
     // tag makes the retry overwrite its own leaves and stats row.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ti-retry").toString
+    val dir = SparkSpec.tempDir("graft-ti-retry").toString
     val base = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 5 =!= 0)
     val delta = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 5 === 0)
     TextIndex.writeIndex(base, "doc_id", "text", dir, buckets = 16)
@@ -137,7 +137,7 @@ class TextIndexSpec extends SparkSpec {
     assert(search(dir, 16) === once,
       "a retried append must not change tf or the stats ledger")
     // and both equal the from-scratch index (normalizers counted once)
-    val dirFull = java.nio.file.Files.createTempDirectory("graft-ti-retry-f").toString
+    val dirFull = SparkSpec.tempDir("graft-ti-retry-f").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dirFull, buckets = 16)
     assert(once === search(dirFull, 16))
   }
@@ -149,7 +149,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("compact folds the stats ledger to one row; search unchanged") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-ti-ledger").toString
+    val dir = SparkSpec.tempDir("graft-ti-ledger").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") % 3 === 0),
       "doc_id", "text", dir, buckets = 8)
     TextIndex.appendToIndex(docs.filter(col("doc_id") % 3 === 1),
@@ -174,7 +174,7 @@ class TextIndexSpec extends SparkSpec {
   test("a torn ledger swap recovers: committed completes, uncommitted drops") {
     import org.apache.spark.sql.functions.{col, size}
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ti-swap").toString
+    val dir = SparkSpec.tempDir("graft-ti-swap").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 8)
     // the ledger SWAP protocol belongs to the pre-manifest legacy
     // layout (manifest trees consolidate by snapshot commit and never
@@ -221,7 +221,7 @@ class TextIndexSpec extends SparkSpec {
     // the old corpus's totals (and possibly bucket count) OVER the fresh
     // ledger — silently corrupting every score
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ti-stale").toString
+    val dir = SparkSpec.tempDir("graft-ti-stale").toString
     TextIndex.writeIndex(docs.filter(
       org.apache.spark.sql.functions.col("doc_id") < 100),
       "doc_id", "text", dir, buckets = 8)
@@ -233,7 +233,7 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 8)
     assert(!new java.io.File(s"$dir/stats.swap").exists(),
       "the rebuild must drop the stale committed swap")
-    val dirRef = java.nio.file.Files.createTempDirectory("graft-ti-stale-f").toString
+    val dirRef = SparkSpec.tempDir("graft-ti-stale-f").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dirRef, buckets = 8)
     assert(search(dir, 8) === search(dirRef, 8),
       "the rebuilt index must serve its own totals, not the resurrection")
@@ -244,7 +244,7 @@ class TextIndexSpec extends SparkSpec {
     // any document does. Every face must work — search serves EMPTY
     // (schema sidecar, not an inference error), append is the first
     // content, and the grown index equals a from-scratch build.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ti-zero").toString
+    val dir = SparkSpec.tempDir("graft-ti-zero").toString
     TextIndex.writeIndex(docs.limit(0), "doc_id", "text", dir, buckets = 8)
     assert(TextIndex.bm25SearchIndex(spark, dir,
       Seq("hash"), k = 5, buckets = 8).isEmpty,
@@ -253,7 +253,7 @@ class TextIndexSpec extends SparkSpec {
       Seq("hash", "join"), buckets = 8).isEmpty)
     val half = docs.filter(org.apache.spark.sql.functions.col("doc_id") < 150)
     TextIndex.appendToIndex(half, "doc_id", "text", dir)
-    val dirRef = java.nio.file.Files.createTempDirectory("graft-ti-zero-f").toString
+    val dirRef = SparkSpec.tempDir("graft-ti-zero-f").toString
     TextIndex.writeIndex(half, "doc_id", "text", dirRef, buckets = 8)
     assert(search(dir, 8) === search(dirRef, 8),
       "empty-then-append must equal the from-scratch build")

@@ -25,7 +25,7 @@ class TilingSpec extends SparkSpec {
       Row("F2", 1L, 14, 9632, 7755, 90.0, 1.8, 2L)))
 
   private lazy val outDir: String = {
-    val dir = Files.createTempDirectory("grafttiles").toString
+    val dir = SparkSpec.tempDir("grafttiles").toString
     Tiling.saveTiles(Tiling.encodeTiles(Tiling.binsPyramid(subtiles)),
       FileWriter(dir), "model-id-1", "run-id-1", "month")
     dir

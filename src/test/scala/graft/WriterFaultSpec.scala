@@ -16,7 +16,7 @@ import graft.io.{FileWriter, GroupSink, Writer}
 class WriterFaultSpec extends SparkSpec {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-writerfault").toString
+    SparkSpec.tempDir("graft-writerfault").toString
 
   private def input = df("feature STRING, timestamp LONG, value DOUBLE", Seq(
     Row("rain", 1L, 1.0), Row("rain", 2L, 2.0),
@@ -108,8 +108,8 @@ class WriterFaultSpec extends SparkSpec {
 
   test("HadoopFsWriter rawLocal: same bytes, no .crc sidecars, file: only") {
     import java.nio.file.{Files, Paths}
-    val checked = Files.createTempDirectory("graft-wf-crc").toString
-    val raw = Files.createTempDirectory("graft-wf-raw").toString
+    val checked = SparkSpec.tempDir("graft-wf-crc").toString
+    val raw = SparkSpec.tempDir("graft-wf-raw").toString
     val body = "tile-bytes".getBytes("UTF-8")
     graft.io.HadoopFsWriter(s"file:$checked").write(body, "a/t.bin")
     graft.io.HadoopFsWriter(s"file:$raw", rawLocal = true).write(body, "a/t.bin")

@@ -20,7 +20,7 @@ class WriterS3Spec extends SparkSpec {
     "fs.s3a.impl.disable.cache" -> "true")
 
   test("pipeline output family lands the reference tree through s3a://") {
-    val outDir = Files.createTempDirectory("grafts3").toString
+    val outDir = SparkSpec.tempDir("grafts3").toString
     val input = s"$outDir/input"
     df(
       "timestamp LONG, country STRING, admin1 STRING, lat DOUBLE, lng DOUBLE, " +
@@ -74,7 +74,7 @@ class WriterS3Spec extends SparkSpec {
   test("s3Conf overrides reach the executor-side FileSystem resolution") {
     // without the fs.s3a.impl override there is no s3a connector on this
     // classpath at all — a successful write IS the proof the conf landed
-    val outDir = Files.createTempDirectory("grafts3conf").toString
+    val outDir = SparkSpec.tempDir("grafts3conf").toString
     val w = graft.io.Writer.forDest("s3", s"s3a://bkt$outDir", s3Conf)
     w.write("hello", "a/b/c.txt")
     assert(Files.readString(Paths.get(s"$outDir/a/b/c.txt")) === "hello")

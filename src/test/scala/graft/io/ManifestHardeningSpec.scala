@@ -33,7 +33,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
 
   test("a concurrent same-number commit is detected, rolled back, and loud") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-race").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-race").toString
     SeenSet.writeSet((0 until 30).map(i => s"http://race/$i").toDF("url"),
       "url", dir, buckets = 2)
     val v1 = Manifest.current(spark, dir).get
@@ -71,7 +71,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
     // files, drops empty — so the loser's retry against the winner's
     // commit is exactly the union both schedules would have produced.
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-cas").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-cas").toString
     SeenSet.writeSet((0 until 30).map(i => s"http://cas/$i").toDF("url"),
       "url", dir, buckets = 2)
     val v1 = Manifest.current(spark, dir).get
@@ -110,7 +110,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
     // still commutes — file-set disjointness alone would false-abort
     // exactly the daemon-beside-stream fleet the feature exists for.
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-casfull").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-casfull").toString
     SeenSet.writeSet((0 until 20).map(i => s"http://full/$i").toDF("url"),
       "url", dir, buckets = 1)
     val v1 = Manifest.current(spark, dir).get
@@ -137,7 +137,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
     // is deliberately NOT the rule (a full-rewrite compaction is
     // disjoint too, and commutes — see the previous test).
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-casflip").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-casflip").toString
     SeenSet.writeSet((0 until 20).map(i => s"http://flip/$i").toDF("url"),
       "url", dir, buckets = 2)
     val v1 = Manifest.current(spark, dir).get
@@ -162,7 +162,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
     // committer crashed AFTER its rename but BEFORE its sibling
     // re-list/rollback. Reads must not maxBy-tie-break silently.
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-twin").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-twin").toString
     SeenSet.writeSet((0 until 20).map(i => s"http://twin/$i").toDF("url"),
       "url", dir, buckets = 2)
     val v1 = Manifest.current(spark, dir).get
@@ -194,7 +194,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
 
   test("vacuum retention: a retained version time-travels after vacuum; an expired one fails loudly") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-retain").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-retain").toString
     val base = (0L until 120L).map(i => (i, s"v0-$i")).toDF("doc_id", "text")
     CorpusStore.write(base, "doc_id", dir, buckets = 8) // v1
     CorpusStore.upsert(
@@ -231,7 +231,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
 
   test("vacuum orphan grace: a fresh orphan is deferred, an aged one is swept") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-grace").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-grace").toString
     def url(i: Int) = s"http://grace.org/p/$i"
     SeenSet.writeSet((0 until 80).map(url).toDF("url"), "url", dir,
       buckets = 4)
@@ -265,7 +265,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
 
   test("empty mutations do not churn manifest versions") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-man-empty").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-empty").toString
     def url(i: Int) = s"http://empty.org/p/$i"
     SeenSet.writeSet((0 until 50).map(url).toDF("url"), "url", dir,
       buckets = 4)
@@ -281,7 +281,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
       "an empty micro-batch must not commit a new version")
     // same for the text index (which would otherwise write a 0-row
     // stats ledger row)
-    val tdir = Files.createTempDirectory("graft-man-empty-ti").toString
+    val tdir = graft.SparkSpec.tempDir("graft-man-empty-ti").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 100),
       "doc_id", "text", tdir, buckets = 8)
     val tvs = Manifest.versions(spark, tdir)
@@ -299,7 +299,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
     // CorpusStore.readVersion — record the version an eval ran
     // against, and the exact postings AND normalizers re-serve until
     // vacuum's retention expires the version
-    val dir = Files.createTempDirectory("graft-man-vsearch").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-vsearch").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 200),
       "doc_id", "text", dir, buckets = 8)
     val vPin = Manifest.current(spark, dir).get.version
@@ -337,7 +337,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
   }
 
   test("a retried index append never deletes a committed attempt's files (pinned reader safe)") {
-    val dir = Files.createTempDirectory("graft-man-retry").toString
+    val dir = graft.SparkSpec.tempDir("graft-man-retry").toString
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val delta = docs.filter(col("doc_id") % 5 === 0)
     TextIndex.writeIndex(base, "doc_id", "text", dir, buckets = 8)

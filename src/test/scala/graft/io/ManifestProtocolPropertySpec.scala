@@ -46,7 +46,7 @@ class ManifestProtocolPropertySpec extends graft.SparkSpec {
   test("random op sequences hold the snapshot contract against the model (3 seeds x 120 steps)") {
     for (seed <- Seq(7, 101, 4242)) {
       val rnd = new scala.util.Random(seed)
-      val root = Files.createTempDirectory(s"graft-man-prop-$seed").toString
+      val root = graft.SparkSpec.tempDir(s"graft-man-prop-$seed").toString
       var counter = 0
       def freshFiles(k: Int): Seq[String] = (0 until k).map { _ =>
         counter += 1
