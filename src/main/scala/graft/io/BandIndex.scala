@@ -73,7 +73,6 @@ object BandIndex {
     require(bands >= 1 && numHashes % bands == 0,
       s"numHashes=$numHashes must divide into bands=$bands")
     val spark = reference.sparkSession
-    BucketRewrite.dropJournal(spark, s"$dir/bands")
     Watermark.clear(spark, dir)
     // fresh build → fresh snapshot lineage (v1 committed below)
     Manifest.reset(spark, dir)
@@ -97,17 +96,14 @@ object BandIndex {
     Manifest.initFromListing(spark, dir, Seq("bands")): Unit
   }
 
-  /** The bands tree: manifest trees serve through the committed
-    * snapshot (maintenance commits never invalidate an executing
-    * read — see [[Manifest]]); legacy trees keep the day-zero-safe
-    * listing read ([[Layout.sidecarRead]]). */
+  private val BuildFace = "BandIndex.writeIndex"
+
+  /** The bands tree through the committed snapshot (maintenance commits
+    * never invalidate an executing read — see [[Manifest]]), typed by
+    * the schema sidecar so a day-zero index serves empty. */
   private def bandsFrame(spark: SparkSession, dir: String): DataFrame =
-    Manifest.current(spark, dir) match {
-      case Some(snap) =>
-        Manifest.readSubtree(spark, dir, snap, "bands",
-          Layout.sidecarSchema(spark, s"$dir/schema"))
-      case None => Layout.sidecarRead(spark, s"$dir/bands", s"$dir/schema")
-    }
+    Manifest.readSubtree(spark, dir, Manifest.live(spark, dir, BuildFace),
+      "bands", Some(spark.read.parquet(s"$dir/schema").schema))
 
   private def storedMeta(spark: SparkSession, dir: String): (Int, Int, Int, Int) = {
     val r = spark.read.parquet(s"$dir/meta")
@@ -126,22 +122,16 @@ object BandIndex {
       delta: DataFrame, idCol: String, textCol: String, dir: String
   ): Unit = {
     val spark = delta.sparkSession
-    // recover BEFORE appending (the SeenSet.appendToSet reasoning)
-    BucketRewrite.recover(spark, s"$dir/bands", "band_bucket",
-      manifestRoot = Some(dir))
+    Manifest.live(spark, dir, BuildFace): Unit // fail before writing
     val (n, numHashes, bands, buckets) = storedMeta(spark, dir)
     // before/after listing brackets the append so the manifest commit
     // adds precisely this write's files (see SeenSet.appendToSet)
-    val before =
-      if (Manifest.exists(spark, dir))
-        Manifest.listFiles(spark, dir, "bands").toSet
-      else Set.empty[String]
+    val before = Manifest.listFiles(spark, dir, "bands").toSet
     bandRows(delta, idCol, textCol, n, numHashes, bands, buckets, "ref_id")
       .repartition(col("band_bucket"))
       .write.mode("append").partitionBy("band_bucket").parquet(s"$dir/bands")
-    if (Manifest.exists(spark, dir))
-      Manifest.commitAdd(spark, dir,
-        Manifest.listFiles(spark, dir, "bands").filterNot(before), Nil): Unit
+    Manifest.commitAdd(spark, dir,
+      Manifest.listFiles(spark, dir, "bands").filterNot(before), Nil): Unit
   }
 
   /** Physically reclaim superseded bytes ([[Manifest.vacuum]]) on the
@@ -179,9 +169,9 @@ object BandIndex {
     * to one file. */
   def compact(spark: SparkSession, dir: String,
       casRetries: Int = 0): Compact.CompactStats =
-    Compact.compactTree(spark, s"$dir/bands", "band_bucket",
+    Compact.compactTree(spark, dir, BuildFace, s"$dir/bands", "band_bucket",
       dedupCols = Some(Seq("ref_id", "band", "band_hash")),
-      manifestRoot = Some(dir), casRetries = casRetries)
+      casRetries = casRetries)
 
   /** Candidate (batch, reference) near-dup pairs against the persisted
     * index: the batch's band stream is computed in-flight (with the
@@ -217,8 +207,9 @@ object BandIndex {
       spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, textCol: String
   ): (DataFrame, DataFrame) = {
-    BucketRewrite.recover(spark, s"$dir/bands", "band_bucket",
-      manifestRoot = Some(dir))
+    // resolved before the batch pin below, so a manifest-less dir fails
+    // with nothing to release
+    val standing = bandsFrame(spark, dir)
     val (n, numHashes, bands, buckets) = storedMeta(spark, dir)
     // eager localCheckpoint: the band frame feeds TWO executions (the
     // bucket collect below and the served join) and the batch's
@@ -240,7 +231,7 @@ object BandIndex {
     // same partitioning: one sliver shuffle total, what the join alone
     // would cost (when AQE instead broadcasts the sliver, the exchange
     // is the broadcast's input — still one, still sliver-sized)
-    val ref = bandsFrame(spark, dir)
+    val ref = standing
       .filter(col("band_bucket").isin(probed.toIndexedSeq: _*))
       .select(col("ref_id"), col("band"), col("band_hash"))
       .repartition(col("band"), col("band_hash"))

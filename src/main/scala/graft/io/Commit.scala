@@ -5,30 +5,19 @@ import org.apache.spark.sql.SparkSession
 /** Engine-owned commit sentinel: a zero-byte `_GRAFT_COMMIT` file the
   * writer creates itself AFTER a directory's content write returns.
   *
-  * Why not the committer's `_SUCCESS`: every crash-recovery gate in
-  * this package (the [[BucketRewrite]] journal, [[SeenSet]]'s torn-emit
-  * and Bloom-recovery checks) used to key on `_SUCCESS`, which only
-  * exists when `mapreduce.fileoutputcommitter.marksuccessfuljobs` is
-  * true AND the committer in use writes it — cloud-optimized committers
-  * may not. Under such a config a COMMITTED journal would read as
-  * uncommitted and be silently dropped on recover, permanently losing
-  * the bucket the journal exists to protect (r17 advisory). Creating
-  * our own marker removes the config dependency: the sentinel exists
-  * iff the writer's own control flow reached the line after the write,
-  * on any filesystem and committer.
+  * Why not the committer's `_SUCCESS`: it only exists when
+  * `mapreduce.fileoutputcommitter.marksuccessfuljobs` is true AND the
+  * committer in use writes it — cloud-optimized committers may not.
+  * Creating our own marker removes the config dependency: the sentinel
+  * exists iff the writer's own control flow reached the line after the
+  * write, on any filesystem and committer. Every directory gated on
+  * [[isCommitted]] (the seen set's Bloom sidecar and emit dirs, the
+  * curated verdict dirs, the gauge ledger's entries) is written through
+  * [[mark]], so the sentinel alone decides.
   *
-  * MIGRATION (r18 review finding): state written by the pre-sentinel
-  * code carries only `_SUCCESS`, so [[isCommitted]] honors it as a
-  * LEGACY marker alongside the sentinel. This is sound, not a
-  * reintroduction of the config dependency: a directory holding
-  * `_SUCCESS` is by construction fully committed (the committer writes
-  * it last), so honoring it can never mark torn content committed —
-  * the sentinel exists for configs where `_SUCCESS` is absent, and
-  * there the sentinel alone decides.
-  *
-  * The underscore prefix keeps both invisible to Spark's file-source
+  * The underscore prefix keeps it invisible to Spark's file-source
   * listing. An `overwrite`-mode rewrite of the directory deletes the
-  * old markers with the old content, so a torn rewrite reads
+  * old marker with the old content, so a torn rewrite reads
   * uncommitted — exactly the semantics the gates need. */
 private[graft] object Commit {
 
@@ -45,98 +34,18 @@ private[graft] object Commit {
       .create(new org.apache.hadoop.fs.Path(s"$dir/$Marker"), true)
       .close()
 
-  /** True iff the writer marked `dir` committed — by the engine-owned
-    * sentinel, or by the committer's own `_SUCCESS` (legacy state from
-    * the pre-sentinel code; see the migration note above). */
-  def isCommitted(spark: SparkSession, dir: String): Boolean = {
-    val fs = fsOf(spark, dir)
-    fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$Marker")) ||
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"))
-  }
+  /** True iff the writer marked `dir` committed with the sentinel. */
+  def isCommitted(spark: SparkSession, dir: String): Boolean =
+    fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/$Marker"))
 
-  /** Per-tree JVM locks shared by every mutating recovery protocol in
-    * the engine ([[BucketRewrite]]'s journal recover/apply and the
-    * swap protocol below): recovery is called from READ paths, so two
-    * concurrent queries discovering the same committed journal/swap
-    * must not race the re-apply — the r18 review found the unlocked
-    * double-swap deletes BOTH copies of the tree. Keyed by the
-    * target's path; reentrant (JVM monitors). ACROSS processes the
+  /** Per-tree JVM locks for the mutating faces: [[Manifest]]'s commits
+    * and [[Compact]]'s read→append→commit span. Keyed by the target's
+    * path; reentrant (JVM monitors). ACROSS processes the
     * single-maintainer contract applies: exactly one application owns
-    * a tree's mutations, recovery included. */
+    * a tree's mutations. */
   private val treeLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
   def withTreeLock[A](treeDir: String)(body: => A): A =
     treeLocks.getOrElseUpdate(treeDir, new Object).synchronized(body)
-
-  // -------------------------------------------------------------------
-  // The shared atomic-swap protocol (one copy — r18 review finding: it
-  // was hand-rolled twice, in TextIndex's stats ledger and the IVF+PQ
-  // rebuild, each without the lock). A maintainer builds a replacement
-  // tree at `<target>.swap`, commits it with the sentinel, then swaps
-  // it in via delete-then-rename; every reader runs [[swapRecover]]
-  // first, so both crash windows converge:
-  //  - no sentinel → the build never finished; the swap tree is
-  //    IGNORED (not deleted: an in-flight builder in another thread may
-  //    still be writing it — only the maintainer clears stale builds,
-  //    via [[clearSwap]] at its own entry) and the standing target
-  //    serves untouched;
-  //  - sentinel present → the swap is the committed truth; finish the
-  //    delete-then-rename (crash after the target delete but before
-  //    the rename heals the same way: target absent, swap committed).
-  // -------------------------------------------------------------------
-
-  private def swapDirOf(targetDir: String) = s"$targetDir.swap"
-
-  /** Complete a committed swap of `targetDir`; ignore an uncommitted
-    * one. Cheap no-op (one exists check) when healthy; locked against
-    * concurrent recoveries and the maintainer's own [[commitSwap]]. */
-  def swapRecover(spark: SparkSession, targetDir: String): Unit =
-    withTreeLock(targetDir) {
-      val swap = swapDirOf(targetDir)
-      val swapPath = new org.apache.hadoop.fs.Path(swap)
-      val fs = fsOf(spark, targetDir)
-      if (fs.exists(swapPath) && isCommitted(spark, swap)) {
-        fs.delete(new org.apache.hadoop.fs.Path(targetDir), true)
-        // rename failure surfaces as a named error, not a silent false
-        // (r18 advisory): Hadoop FileSystems often return false instead
-        // of throwing — e.g. the destination reappeared because a
-        // cross-process writer recreated it — and swallowing it leaves
-        // the target deleted with the swap still pending, a state that
-        // converges only on a later read and loops forever if the
-        // failure is persistent
-        if (!fs.rename(swapPath, new org.apache.hadoop.fs.Path(targetDir)))
-          sys.error(s"Commit.swapRecover: rename $swap -> $targetDir " +
-            "returned false (destination recreated by another writer, or " +
-            "a filesystem refusal); the committed swap is still pending")
-      }
-    }
-
-  /** Maintainer-only: drop any swap tree (a stale uncommitted build
-    * from a dead run, or a committed one a full rebuild invalidates)
-    * before starting a fresh build at `<target>.swap`. */
-  def clearSwap(spark: SparkSession, targetDir: String): Unit =
-    withTreeLock(targetDir) {
-      fsOf(spark, targetDir)
-        .delete(new org.apache.hadoop.fs.Path(swapDirOf(targetDir)),
-          true): Unit
-    }
-
-  /** Maintainer-only: flip a fully-built `<target>.swap` authoritative
-    * and swap it in, holding the lock across mark → delete → rename so
-    * a concurrent reader's [[swapRecover]] can never interleave its
-    * own delete-then-rename with this one. */
-  def commitSwap(spark: SparkSession, targetDir: String): Unit =
-    withTreeLock(targetDir) {
-      val swap = swapDirOf(targetDir)
-      mark(spark, swap)
-      val fs = fsOf(spark, targetDir)
-      fs.delete(new org.apache.hadoop.fs.Path(targetDir), true)
-      // same named-error contract as swapRecover (r18 advisory)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(swap),
-          new org.apache.hadoop.fs.Path(targetDir)))
-        sys.error(s"Commit.commitSwap: rename $swap -> $targetDir " +
-          "returned false (destination recreated by another writer, or " +
-          "a filesystem refusal); the committed swap is still pending")
-    }
 }

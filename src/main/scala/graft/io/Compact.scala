@@ -12,32 +12,16 @@ import org.apache.spark.sql.functions._
   * `maxFilesPerBucket`) back to one file each, content-identical;
   * untouched buckets keep their files byte-for-byte.
   *
-  * Two protocols, picked by the tree's layout:
-  *
-  *  - MANIFEST trees (`manifestRoot` given and a committed [[Manifest]]
-  *    exists — every tree the r19+ build faces write): compaction is
-  *    ADDITIVE and reader-invisible across processes. The fragmented
-  *    buckets' live files are read through the current snapshot, the
-  *    consolidated (optionally deduplicated) content is APPENDED as new
-  *    files into the same bucket directories, and one manifest commit
-  *    retires the old files without deleting them — a concurrent reader
-  *    in any process pinned on the previous snapshot keeps serving
-  *    bit-identical results until [[Manifest.vacuum]] reclaims the
-  *    bytes on the maintenance cadence. No journal is needed: a crash
-  *    before the commit leaves invisible orphan files (adopted — as
-  *    exact-duplicate rows the serve paths already collapse — or
-  *    vacuumed), never a lost bucket.
-  *
-  *  - LEGACY trees (no manifest): the r17/r18 protocol — dynamic
-  *    partition overwrite journaled by [[BucketRewrite]] (the
-  *    delete-then-rename commit could otherwise lose a bucket to a
-  *    mid-commit crash), with the in-JVM per-tree lock held across the
-  *    whole list→read→pin→overwrite span so two in-JVM maintenance
-  *    faces cannot pin stale rows past each other's rewrite (r18
-  *    advisory). Cross-process, the single-maintainer contract must
-  *    extend to serving sessions (probe between maintenance windows or
-  *    retry on a lost-file failure) — the gap the manifest layout
-  *    exists to close.
+  * Compaction is ADDITIVE and reader-invisible across processes: the
+  * fragmented buckets' live files are read through the current
+  * [[Manifest]] snapshot of the family dir, the consolidated (optionally
+  * deduplicated) content is APPENDED as new files into the same bucket
+  * directories, and one manifest commit retires the old files without
+  * deleting them — a concurrent reader in any process pinned on the
+  * previous snapshot keeps serving bit-identical results until
+  * [[Manifest.vacuum]] reclaims the bytes on the maintenance cadence. A
+  * crash before the commit leaves invisible orphan files (vacuumed),
+  * never a lost bucket.
   *
   * `dedupCols` additionally collapses physically duplicated rows — the
   * residue a replayed streaming append can leave ([[BandIndex
@@ -50,32 +34,19 @@ object Compact {
   final case class CompactStats(
       bucketsCompacted: Int, filesBefore: Int, filesAfter: Int)
 
+  /** Compact `treeDir`, a subtree of the family dir `root` (its
+    * manifest root). `buildFace` names the family's build face in the
+    * [[Manifest.MissingManifestException]] a manifest-less dir fails
+    * with. */
   def compactTree(
-      spark: SparkSession, treeDir: String, bucketCol: String,
+      spark: SparkSession, root: String, buildFace: String,
+      treeDir: String, bucketCol: String,
       dedupCols: Option[Seq[String]] = None, maxFilesPerBucket: Int = 1,
-      manifestRoot: Option[String] = None, casRetries: Int = 0
-  ): CompactStats = {
-    require(maxFilesPerBucket >= 1, "a bucket keeps at least one file")
-    val snapRoot = manifestRoot.filter(Manifest.exists(spark, _))
-    snapRoot match {
-      case Some(root) =>
-        compactManifest(spark, root, treeDir, bucketCol, dedupCols,
-          maxFilesPerBucket, casRetries)
-      case None =>
-        compactLegacy(spark, treeDir, bucketCol, dedupCols,
-          maxFilesPerBucket)
-    }
-  }
-
-  /** The manifest protocol: read live files of the fragmented buckets
-    * through the snapshot, append consolidated files, retire+commit. */
-  private def compactManifest(
-      spark: SparkSession, root: String, treeDir: String, bucketCol: String,
-      dedupCols: Option[Seq[String]], maxFilesPerBucket: Int,
-      casRetries: Int
+      casRetries: Int = 0
   ): CompactStats = Commit.withTreeLock(treeDir) {
+    require(maxFilesPerBucket >= 1, "a bucket keeps at least one file")
     val subtree = relSubtree(root, treeDir)
-    val snap = Manifest.current(spark, root).get
+    val snap = Manifest.live(spark, root, buildFace)
     // fragmentation is judged on the LIVE file list, not the directory
     // (retired-but-unvacuumed files must not recount forever)
     val byBucket = snap.under(subtree)
@@ -120,49 +91,5 @@ object Compact {
     require(rel.nonEmpty && rel != treeDir,
       s"compactTree: $treeDir is not under manifest root $root")
     rel
-  }
-
-  /** The pre-manifest protocol (journaled dynamic overwrite), for trees
-    * written before the manifest existed. */
-  private def compactLegacy(
-      spark: SparkSession, treeDir: String, bucketCol: String,
-      dedupCols: Option[Seq[String]], maxFilesPerBucket: Int
-  // the whole list→read→pin→overwrite span holds the per-tree lock
-  // (r18 advisory): journaledOverwrite alone taking it let two in-JVM
-  // maintenance faces pin stale rows, then overwrite them into a tree
-  // the other had just rewritten — excluded by convention only. The
-  // monitor is reentrant, so the nested recover/overwrite locks are
-  // free.
-  ): CompactStats = Commit.withTreeLock(treeDir) {
-    BucketRewrite.recover(spark, treeDir, bucketCol)
-    val root = new org.apache.hadoop.fs.Path(treeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return CompactStats(0, 0, 0)
-    val dirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol="))
-    def parquetFiles(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    val fragmented = dirs
-      .map(d => d.getPath.getName.stripPrefix(s"$bucketCol=").toLong ->
-        parquetFiles(d.getPath))
-      .filter(_._2 > maxFilesPerBucket)
-    if (fragmented.isEmpty) return CompactStats(0, 0, 0)
-    val values = fragmented.map(_._1).toIndexedSeq
-    val base = spark.read.parquet(treeDir)
-      .filter(col(bucketCol).isin(values: _*))
-      .withColumn(bucketCol, col(bucketCol).cast("long"))
-    val deduped = dedupCols.fold(base)(ks => base.dropDuplicates(ks))
-    // pin before the self-overwrite (the CorpusStore.rewriteKeyed
-    // reasoning: sever the file-source lineage, never re-derive
-    // mid-write), then journal+overwrite: a bare dynamic overwrite's
-    // delete-then-rename commit could LOSE a bucket to a mid-commit
-    // crash (see [[BucketRewrite]])
-    val pinned = deduped.localCheckpoint()
-    try BucketRewrite.journaledOverwrite(spark, treeDir, bucketCol,
-      values, pinned)
-    finally graft.operators.Dedup.release(pinned)
-    val after = values.map(v => parquetFiles(
-      new org.apache.hadoop.fs.Path(s"$treeDir/$bucketCol=$v"))).sum
-    CompactStats(values.size, fragmented.map(_._2).sum, after)
   }
 }

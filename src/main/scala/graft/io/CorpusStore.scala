@@ -20,16 +20,14 @@ import org.apache.spark.sql.functions._
   * caveat).
   *
   * Crash posture (single WRITER — a streaming maintenance query — by
-  * contract; readers need no coordination on r19 manifest trees): both
+  * contract; readers need no coordination): both
   * [[upsert]] and [[delete]] are IDEMPOTENT keyed rewrites
   * (re-applying the same batch to any half-applied state converges to
   * the same final rows), so the replay protocol is just the
-  * [[Watermark]] gate. On manifest trees the rewrite is an ADDITIVE
-  * snapshot flip (see [[rewriteKeyed]]) — new files commit, old files
-  * retire undeleted, every crash window converges, and a reader in any
-  * process pinned on the previous snapshot is untouched; on legacy
-  * trees a torn dynamic overwrite heals via the [[BucketRewrite]]
-  * journal on the replayed apply. [[applyCurationBatch]] packages
+  * [[Watermark]] gate. The rewrite is an ADDITIVE snapshot flip (see
+  * [[rewriteKeyed]]) — new files commit, old files retire undeleted,
+  * every crash window converges, and a reader in any process pinned on
+  * the previous snapshot is untouched. [[applyCurationBatch]] packages
   * gate + upsert + evict + watermark as the foreachBatch body of
   * [[graft.streaming.Streaming.curateStream]].
   *
@@ -53,7 +51,6 @@ object CorpusStore {
       buckets: Int = DefaultBuckets): Unit = {
     require(buckets >= 1, "need at least one bucket")
     val spark = df.sparkSession
-    BucketRewrite.dropJournal(spark, s"$dir/rows")
     Watermark.clear(spark, dir)
     // fresh build → fresh snapshot lineage (v1 committed below)
     Manifest.reset(spark, dir)
@@ -71,38 +68,27 @@ object CorpusStore {
     spark.read.parquet(s"$dir/meta")
       .select(col("buckets").cast("int")).head().getInt(0)
 
-  /** The rows tree with a schema-stable `__graft_bucket: long` column —
-    * read through the schema sidecar, so an emptied store is an empty
-    * frame, not an inference error, and the partition column's
-    * dirname-inferred int never leaks into a union. */
-  private def rowsFrame(spark: SparkSession, dir: String): DataFrame = {
-    BucketRewrite.recover(spark, s"$dir/rows", "__graft_bucket",
-      manifestRoot = Some(dir))
+  private def live(spark: SparkSession, dir: String): Manifest.Snapshot =
+    Manifest.live(spark, dir, "CorpusStore.write")
+
+  /** The rows of snapshot `snap` with a schema-stable `__graft_bucket:
+    * long` column — read through the schema sidecar, so an emptied store
+    * (an empty sliver) is an empty frame, not an inference error, and
+    * the partition column's dirname-inferred int never leaks into a
+    * union. */
+  private def rowsFrame(spark: SparkSession, dir: String,
+      snap: Manifest.Snapshot): DataFrame = {
     val logical = spark.read.parquet(s"$dir/schema")
-    Manifest.current(spark, dir) match {
-      // manifest trees: the committed snapshot is the file list (an
-      // emptied store has an empty snapshot — same typed-empty serve)
-      case Some(snap) if snap.under("rows").isEmpty =>
-        logical.withColumn("__graft_bucket", lit(null).cast("long"))
-      case Some(snap) =>
-        Manifest.readSubtree(spark, dir, snap, "rows", Some(logical.schema))
-          .withColumn("__graft_bucket", col("__graft_bucket").cast("long"))
-      case None =>
-        val root = new org.apache.hadoop.fs.Path(s"$dir/rows")
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasBuckets = fs.exists(root) && fs.listStatus(root)
-          .exists(_.getPath.getName.startsWith("__graft_bucket="))
-        if (!hasBuckets)
-          logical.withColumn("__graft_bucket", lit(null).cast("long"))
-        else
-          spark.read.schema(logical.schema).parquet(s"$dir/rows")
-            .withColumn("__graft_bucket", col("__graft_bucket").cast("long"))
-    }
+    if (snap.under("rows").isEmpty)
+      logical.withColumn("__graft_bucket", lit(null).cast("long"))
+    else
+      Manifest.readSubtree(spark, dir, snap, "rows", Some(logical.schema))
+        .withColumn("__graft_bucket", col("__graft_bucket").cast("long"))
   }
 
   /** The standing corpus (layout column dropped). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    rowsFrame(spark, dir).drop("__graft_bucket")
+    rowsFrame(spark, dir, live(spark, dir)).drop("__graft_bucket")
 
   /** TIME TRAVEL: the corpus as committed manifest version `version`
     * saw it — every keyed rewrite commits a version, so a training run
@@ -171,52 +157,42 @@ object CorpusStore {
     * before the write: one derivation, and the write must not re-derive
     * its own input mid-flight.
     *
-    * MANIFEST trees (r19): the rewrite is ADDITIVE — the merged
-    * sliver's files append into the touched bucket directories and ONE
-    * snapshot commit makes them live while the buckets' previous files
-    * retire undeleted — so even the store's keyed maintenance is
-    * reader-invisible across processes (the last family to get there),
-    * a crash anywhere converges (orphans before the commit, vacuum
-    * sweep after), the LIVE per-bucket fan-in stays at one file (each
-    * rewrite's commit drops the previous), and no journal is needed:
-    * nothing is ever deleted on the write path, so there is no
-    * lost-bucket window to journal against. The journal write ALSO
-    * wrote the merged sliver twice (journal data + overwrite), so the
-    * additive path halves the store's maintenance write volume.
+    * The rewrite is ADDITIVE (r19): the merged sliver's files append
+    * into the touched bucket directories and ONE snapshot commit makes
+    * them live while the buckets' previous files retire undeleted — so
+    * the store's keyed maintenance is reader-invisible across
+    * processes, a crash anywhere converges (orphans before the commit,
+    * vacuum sweep after), the LIVE per-bucket fan-in stays at one file
+    * (each rewrite's commit drops the previous), and nothing is ever
+    * deleted on the write path, so there is no lost-bucket window.
     * Emptied buckets simply leave the live set; their directories are
-    * pruned by the vacuum face. LEGACY trees keep the journaled
-    * dynamic-overwrite protocol ([[BucketRewrite]]). */
+    * pruned by the vacuum face. */
   private def rewriteKeyed(spark: SparkSession, dir: String,
       changeKeys: DataFrame, install: Option[DataFrame], idCol: String): Unit = {
-    BucketRewrite.recover(spark, s"$dir/rows", "__graft_bucket",
-      manifestRoot = Some(dir))
+    val snap = live(spark, dir)
     val keys = changeKeys.localCheckpoint()
     try {
       val touched = keys.select(col("__graft_bucket")).distinct()
         .collect().map(_.getLong(0))
       if (touched.nonEmpty) {
-        val standing = rowsFrame(spark, dir)
+        val standing = rowsFrame(spark, dir, snap)
           .filter(col("__graft_bucket").isin(touched.toIndexedSeq: _*))
         val survivors = standing
           .join(keys.select(col(idCol)), Seq(idCol), "left_anti")
         val merged0 = install.fold(survivors)(survivors.unionByName(_))
         val merged = merged0.localCheckpoint()
-        try Manifest.current(spark, dir) match {
-          case Some(snap) =>
-            val before = Manifest.listFiles(spark, dir, "rows").toSet
-            merged.repartition(col("__graft_bucket"))
-              .write.mode("append").partitionBy("__graft_bucket")
-              .parquet(s"$dir/rows")
-            val added = Manifest.listFiles(spark, dir, "rows")
-              .filterNot(before)
-            val touchedDirs =
-              touched.map(b => s"rows/__graft_bucket=$b/").toSet
-            val dead = snap.under("rows")
-              .filter(f => touchedDirs.exists(f.startsWith))
-            Manifest.commitAdd(spark, dir, added, dead): Unit
-          case None =>
-            BucketRewrite.journaledOverwrite(spark, s"$dir/rows",
-              "__graft_bucket", touched.toIndexedSeq, merged)
+        try {
+          val before = Manifest.listFiles(spark, dir, "rows").toSet
+          merged.repartition(col("__graft_bucket"))
+            .write.mode("append").partitionBy("__graft_bucket")
+            .parquet(s"$dir/rows")
+          val added = Manifest.listFiles(spark, dir, "rows")
+            .filterNot(before)
+          val touchedDirs =
+            touched.map(b => s"rows/__graft_bucket=$b/").toSet
+          val dead = snap.under("rows")
+            .filter(f => touchedDirs.exists(f.startsWith))
+          Manifest.commitAdd(spark, dir, added, dead): Unit
         } finally graft.operators.Dedup.release(merged)
       }
     } finally graft.operators.Dedup.release(keys)

@@ -52,36 +52,4 @@ object Layout {
     df.write.mode("overwrite").format("parquet")
       .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
       .saveAsTable(table)
-
-  /** Read a partitioned data tree through a 0-row schema sidecar when
-    * one exists — the ONE copy of the day-zero read guard (r18 review:
-    * it was hand-rolled in [[TextIndex]] and [[BandIndex]]; the
-    * [[CorpusStore]] original keeps its own because it also rewrites
-    * the bucket column's type). A DAY-ZERO tree (built from an empty
-    * frame) has no parquet footer to infer a schema from, so inference
-    * throws; the sidecar — written by the build face as `limit(0)` of
-    * the exact tree shape — keeps the read well-typed and an empty
-    * tree serves an empty frame. Trees written before the sidecar
-    * existed fall back to inference, which works there: they were
-    * necessarily built non-empty. */
-  private[graft] def sidecarRead(
-      spark: org.apache.spark.sql.SparkSession,
-      dataDir: String, schemaDir: String): DataFrame =
-    sidecarSchema(spark, schemaDir) match {
-      case Some(s) => spark.read.schema(s).parquet(dataDir)
-      case None => spark.read.parquet(dataDir)
-    }
-
-  /** The 0-row sidecar's schema when one exists — shared by the
-    * listing read above and the [[Manifest]] snapshot reads (which
-    * need the schema separately, to type a day-zero empty sliver). */
-  private[graft] def sidecarSchema(
-      spark: org.apache.spark.sql.SparkSession, schemaDir: String
-  ): Option[org.apache.spark.sql.types.StructType] = {
-    val schemaPath = new org.apache.hadoop.fs.Path(schemaDir)
-    val fs = schemaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(schemaPath))
-      Some(spark.read.parquet(schemaDir).schema)
-    else None
-  }
 }

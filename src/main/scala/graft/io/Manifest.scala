@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.StructType
 
 /** Versioned file manifest for the persisted index families — the
   * snapshot-isolation layer (r18 verdict #1) that turns compaction,
-  * ledger consolidation, and rebuild swaps into READER-INVISIBLE
+  * ledger consolidation, and rebuilds into READER-INVISIBLE
   * operations across processes, the Iceberg/Delta move re-expressed at
   * the scale this engine needs (a file list, not a table format):
   *
@@ -48,9 +48,11 @@ import org.apache.spark.sql.types.StructType
   * fleet's longest query needs (the single-maintainer contract covers
   * WRITERS only; readers need no coordination at all).
   *
-  * Trees written before the manifest existed have no `manifest/` dir;
-  * every face falls back to directory-listing reads and the r17/r18
-  * maintenance-window contract there (the migration shape).
+  * Every build face resets the tree and commits v1, so every family
+  * dir this engine writes has a manifest. A dir without one fails
+  * every read and maintenance face with [[MissingManifestException]]
+  * ([[live]]), naming the dir and the build face that rebuilds it —
+  * never a silent directory-listing read.
   *
   * == What the manifest deliberately does NOT cover ==
   *
@@ -77,13 +79,11 @@ import org.apache.spark.sql.types.StructType
   *                               Bloom hit with the exact anti-join, so a
   *                               stale read is correctness-neutral;
   *                               watermark/ as above
-  * CorpusStore rows              meta/ - immutable; watermark/ as above;
-  *                               journal/ - LEGACY trees only (manifest
-  *                               trees' keyed rewrite is additive)
+  * CorpusStore rows              meta/ - immutable; watermark/ as above
   * IVF+PQ      g<N>/{centroids,  per-generation meta/ IS manifest-scoped
   *             codebooks,meta,   (immutable per generation); watermark/
-  *             codes} (+ flat    sits at the ROOT, outside every
-  *             legacy subtrees)  generation, because the rebuild flip
+  *             codes}            sits at the ROOT, outside every
+  *                               generation, because the rebuild flip
   *                               deliberately PRESERVES it (the stream's
   *                               replay gate outlives the quantizer)
   * gauge       (no manifest)     batch_id=<N>/ + commit marker per entry,
@@ -129,9 +129,9 @@ object Manifest {
   private def retiredDir(root: String) = s"$root/manifest/retired"
 
   // the random suffix makes two same-NUMBER versions distinguishable
-  // (a legacy whole-tree swap can replace one manifest tree with
-  // another at the same count — the cache must miss, not serve the
-  // old tree's file list); ordering rides the zero-padded number
+  // (a full rebuild resets the manifest and commits a fresh v1 — a
+  // cache holding the old tree's v1 must miss, not serve its file
+  // list); ordering rides the zero-padded number
   private val VersionName = "v([0-9]{12})-[0-9a-f]{8}".r
 
   /** In-JVM snapshot cache keyed by root: one listStatus per resolve
@@ -212,8 +212,9 @@ object Manifest {
     }
 
   /** The current committed snapshot, or None when the tree has no
-    * manifest (legacy layout — callers fall back to listing reads).
-    * Fails loudly on divergent same-number twins ([[resolveTwins]]). */
+    * manifest (a build face's own first commit; the family faces read
+    * through [[live]]). Fails loudly on divergent same-number twins
+    * ([[resolveTwins]]). */
   def current(spark: SparkSession, root: String): Option[Snapshot] = {
     val vs = versionFiles(spark, root)
     if (vs.isEmpty) None
@@ -230,8 +231,22 @@ object Manifest {
     }
   }
 
-  def exists(spark: SparkSession, root: String): Boolean =
-    versionFiles(spark, root).nonEmpty
+  /** A family dir with no committed manifest: every build face commits
+    * v1, so this is a dir no build face wrote, or one whose `manifest/`
+    * was removed. Its listing would serve retired and orphan files as
+    * live, so the family faces refuse it. */
+  final class MissingManifestException(root: String, buildFace: String)
+      extends IllegalStateException(
+        s"$root has no committed manifest ($root/manifest/v*): it was not " +
+          s"written by $buildFace, or its manifest/ was removed. Rebuild " +
+          s"it with $buildFace.")
+
+  /** The current snapshot of a family dir — what every read, append and
+    * compaction face resolves first. Fails with
+    * [[MissingManifestException]] when the dir has none. */
+  def live(spark: SparkSession, root: String, buildFace: String): Snapshot =
+    current(spark, root).getOrElse(
+      throw new MissingManifestException(root, buildFace))
 
   /** A SPECIFIC committed version — time travel (the capability the
     * snapshot layer gives away for free, and the one a training run
@@ -354,9 +369,9 @@ object Manifest {
     snap
   }
 
-  /** Bootstrap a manifest on a tree that has none: v1 = the current
-    * listing of `scopes` (correct for a legacy tree — nothing was ever
-    * retired, so the listing IS the live set). No-op if one exists. */
+  /** The build faces' first commit: v1 = the current listing of
+    * `scopes` (a freshly reset tree has retired nothing, so the listing
+    * IS the live set). No-op if a manifest exists. */
   def initFromListing(spark: SparkSession, root: String,
       scopes: Seq[String]): Snapshot = lock(root) {
     current(spark, root).getOrElse {

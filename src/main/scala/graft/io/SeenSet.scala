@@ -118,7 +118,6 @@ object SeenSet {
     require(fpp > 0 && fpp < 1, s"fpp=$fpp out of (0,1)")
     if (expectedUrls > 0L) requireBloomFits(expectedUrls, fpp)
     val spark = urls.sparkSession
-    BucketRewrite.dropJournal(spark, s"$dir/urls")
     Watermark.clear(spark, dir)
     // a fresh build invalidates the previous snapshot lineage wholesale
     // (the io-family full-rebuild rule), then commits v1 below
@@ -149,27 +148,16 @@ object SeenSet {
     org.apache.spark.sql.types.StructField("url_bucket",
       org.apache.spark.sql.types.LongType)))
 
-  /** The urls tree, empty-safe: a DAY-ZERO set (written from zero URLs
-    * — the steady-state loop's bootstrap shape) or a fully-drained one
-    * has no bucket directory and no parquet footer to infer from; the
-    * schema is fixed by contract (url string + the bucket key), so the
-    * guard is a typed empty frame, not a sidecar. */
+  private val BuildFace = "SeenSet.writeSet"
+
+  /** The urls tree through the committed snapshot (explicit file list —
+    * maintenance commits never invalidate an executing read). A DAY-ZERO
+    * set (written from zero URLs — the steady-state loop's bootstrap
+    * shape) has an empty sliver; the schema is fixed by contract (url
+    * string + the bucket key), so it serves a typed empty frame. */
   private def urlsFrame(spark: SparkSession, dir: String): DataFrame =
-    // manifest trees serve through the committed snapshot (explicit file
-    // list — maintenance commits never invalidate an executing read);
-    // legacy trees keep the listing read + typed day-zero guard
-    Manifest.current(spark, dir) match {
-      case Some(snap) =>
-        Manifest.readSubtree(spark, dir, snap, "urls", Some(urlsSchema))
-      case None =>
-        val root = new org.apache.hadoop.fs.Path(s"$dir/urls")
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasBuckets = fs.exists(root) && fs.listStatus(root)
-          .exists(_.getPath.getName.startsWith("url_bucket="))
-        if (hasBuckets) spark.read.parquet(s"$dir/urls")
-        else spark.range(0)
-          .select(lit("").cast("string").as("url"), lit(0L).as("url_bucket"))
-    }
+    Manifest.readSubtree(spark, dir, Manifest.live(spark, dir, BuildFace),
+      "urls", Some(urlsSchema))
 
   private def storedMeta(spark: SparkSession, dir: String): (Int, Long, Double) = {
     val r = spark.read.parquet(s"$dir/meta")
@@ -256,9 +244,7 @@ object SeenSet {
   def appendToSet(delta: DataFrame, urlCol: String, dir: String,
       casRetries: Int = 0): Unit = {
     val spark = delta.sparkSession
-    // recover BEFORE appending: replaying a compaction journal over a
-    // bucket that took this append would drop the appended rows
-    BucketRewrite.recover(spark, s"$dir/urls", "url_bucket", manifestRoot = Some(dir))
+    Manifest.live(spark, dir, BuildFace): Unit // fail before writing
     val (buckets, expected, fpp) = storedMeta(spark, dir)
     val u = delta.select(col(urlCol).as("url")).distinct().localCheckpoint()
     try {
@@ -273,17 +259,13 @@ object SeenSet {
       // before/after listing brackets the append so the manifest commit
       // adds PRECISELY the files this write produced (never a torn
       // run's orphans — those stay invisible until vacuum)
-      val before =
-        if (Manifest.exists(spark, dir))
-          Manifest.listFiles(spark, dir, "urls").toSet
-        else Set.empty[String]
+      val before = Manifest.listFiles(spark, dir, "urls").toSet
       u.withColumn("url_bucket", bucketOf(col("url"), buckets))
         .repartition(col("url_bucket"))
         .write.mode("append").partitionBy("url_bucket").parquet(s"$dir/urls")
-      if (Manifest.exists(spark, dir))
-        Manifest.commitAdd(spark, dir,
-          Manifest.listFiles(spark, dir, "urls").filterNot(before), Nil,
-          casRetries): Unit
+      Manifest.commitAdd(spark, dir,
+        Manifest.listFiles(spark, dir, "urls").filterNot(before), Nil,
+        casRetries): Unit
     } finally graft.operators.Dedup.release(u)
   }
 
@@ -314,9 +296,8 @@ object SeenSet {
     * membership is unchanged, probe fan-in and bytes shrink. */
   def compact(spark: SparkSession, dir: String,
       casRetries: Int = 0): Compact.CompactStats =
-    Compact.compactTree(spark, s"$dir/urls", "url_bucket",
-      dedupCols = Some(Seq("url")), manifestRoot = Some(dir),
-      casRetries = casRetries)
+    Compact.compactTree(spark, dir, BuildFace, s"$dir/urls", "url_bucket",
+      dedupCols = Some(Seq("url")), casRetries = casRetries)
 
   /** Replay-safe streaming novelty: probe the batch, EMIT the novel
     * sliver — ONE row per novel URL, an arbitrary representative when
@@ -332,13 +313,11 @@ object SeenSet {
     * every crash-replay interleaving, without a transaction log:
     *  - batchId ≤ watermark → the whole body is a no-op (the normal
     *    restart replay);
-    *  - emit dir exists WITHOUT a commit marker (torn mid-write emit;
-    *    a crash between a completed write and the mark reads COMMITTED
-    *    via the committer's legacy `_SUCCESS` where one exists — safe,
-    *    the content is complete — and recomputes otherwise) → the append
+    *  - emit dir exists WITHOUT a commit marker (torn mid-write emit,
+    *    or a crash between a completed write and the mark) → the append
     *    never ran (it only runs after a committed emit), so the set is
     *    unchanged and the probe re-computes the same novelty; the
-    *    overwrite discards the torn files;
+    *    overwrite discards the earlier files;
     *  - emit dir committed (crash before/inside the append or before
     *    the marker) → the novel sliver is read BACK from the emit dir
     *    instead of re-probed — probing again would return EMPTY if the
@@ -415,7 +394,9 @@ object SeenSet {
       batch: DataFrame, urlCol: String
   ): (DataFrame, DataFrame) = {
     graft.plans.GraftExtensions.register(spark)
-    BucketRewrite.recover(spark, s"$dir/urls", "url_bucket", manifestRoot = Some(dir))
+    // resolved before the batch pin below, so a manifest-less dir fails
+    // with nothing to release
+    val standing = urlsFrame(spark, dir)
     val (buckets, _, _) = storedMeta(spark, dir)
     val bfBytes = storedBloom(spark, dir)
     val outCols = batch.columns.map(col).toIndexedSeq
@@ -429,7 +410,7 @@ object SeenSet {
       .localCheckpoint()
     val probed = bb.filter(col("__graft_claimed"))
       .select(col("__graft_bucket")).distinct().collect().map(_.getLong(0))
-    val seen = urlsFrame(spark, dir)
+    val seen = standing
       .filter(col("url_bucket").isin(probed.toIndexedSeq: _*))
       .select(col("url").as("__graft_seen_url"))
     val novel = bb.filter(!col("__graft_claimed")).select(outCols: _*)

@@ -59,13 +59,6 @@ object TextIndex {
     new org.apache.hadoop.fs.Path(s"$dir/stats")
       .getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(s"$dir/stats"), true)
-    // ... and a stale stats swap is invalidated wholesale (the
-    // full-rebuild rule, r18 review finding): a committed swap left by
-    // a crashed consolidation of the PREVIOUS index would otherwise be
-    // resurrected OVER this fresh ledger by the first read's
-    // statsSwapRecover — old corpus totals (and possibly an old bucket
-    // count) silently corrupting every subsequent search and append
-    Commit.clearSwap(docs.sparkSession, s"$dir/stats")
     toks.agg(count(lit(1)).as("n_docs"),
         coalesce(sum(size(col("toks"))), lit(0L)).cast("long").as("sum_dl"))
       .withColumn("buckets", lit(buckets))
@@ -81,8 +74,7 @@ object TextIndex {
     // exist.
     // second partition level `ingest_batch`: every maintenance write owns
     // its own leaf directories, so appends never touch standing data and
-    // the streaming face is an idempotent batch-scoped overwrite with NO
-    // journal and NO standing read (see [[appendBatch]])
+    // the streaming face needs NO standing read (see [[appendBatch]])
     postings(toks, buckets)
       .withColumn("ingest_batch", lit("base"))
       .repartition(col("term_bucket"))
@@ -99,29 +91,23 @@ object TextIndex {
       Seq("postings", "stats")): Unit
   }
 
-  /** The postings tree, day-zero-safe: manifest trees serve through the
-    * resolved snapshot (ONE per serve call, so postings and stats are
-    * read from the same committed instant); legacy trees keep the
-    * listing read ([[Layout.sidecarRead]]). */
+  /** The postings tree through the resolved snapshot (ONE per serve
+    * call, so postings and stats are read from the same committed
+    * instant), typed by the 0-row schema sidecar so a day-zero index
+    * serves empty. */
   private def postingsFrame(spark: SparkSession, dir: String,
-      snap: Option[Manifest.Snapshot]): DataFrame =
-    snap match {
-      case Some(s) => Manifest.readSubtree(spark, dir, s, "postings",
-        Layout.sidecarSchema(spark, s"$dir/schema"))
-      case None => Layout.sidecarRead(spark, s"$dir/postings", s"$dir/schema")
-    }
+      snap: Manifest.Snapshot): DataFrame =
+    Manifest.readSubtree(spark, dir, snap, "postings",
+      Some(spark.read.parquet(s"$dir/schema").schema))
 
-  /** The stats ledger through the same snapshot (legacy trees run the
-    * swap recovery first — on manifest trees consolidation is a
-    * manifest commit, and no swap can exist). */
+  /** The stats ledger through the same snapshot. */
   private def statsFrame(spark: SparkSession, dir: String,
-      snap: Option[Manifest.Snapshot]): DataFrame =
-    snap match {
-      case Some(s) => Manifest.readSubtree(spark, dir, s, "stats", None)
-      case None =>
-        statsSwapRecover(spark, dir)
-        spark.read.parquet(s"$dir/stats")
-    }
+      snap: Manifest.Snapshot): DataFrame =
+    Manifest.readSubtree(spark, dir, snap, "stats", None)
+
+  /** The committed snapshot every face resolves first. */
+  private def live(spark: SparkSession, dir: String): Manifest.Snapshot =
+    Manifest.live(spark, dir, "TextIndex.writeIndex")
 
   /** Positional postings: (term, doc_id, tf, dl, positions) — positions
     * are the term's sorted 1-based token offsets, what phrase queries
@@ -135,21 +121,18 @@ object TextIndex {
       .withColumn("term_bucket", bucketOf(col("term"), buckets))
 
   /** The bucket count the index at `dir` was written with, from the stats
-    * sidecar; `fallback` covers indexes written before the count was
-    * persisted. A mismatched caller value would silently split a term's
+    * ledger. A mismatched caller value would silently split a term's
     * postings across two directories (append) or probe the wrong
-    * directory (search) — so every entry point resolves through here. */
-  private def storedBuckets(spark: SparkSession, dir: String, fallback: Int,
-      snap: Option[Manifest.Snapshot]): Int = {
-    val stats = statsFrame(spark, dir, snap)
-    if (stats.columns.contains("buckets"))
-      stats.agg(max(col("buckets").cast("int"))).head().getInt(0)
-    else fallback
-  }
+    * directory (search) — so every entry point resolves through here,
+    * and the faces' `buckets` arguments are not consulted. */
+  private def storedBuckets(spark: SparkSession, dir: String,
+      snap: Manifest.Snapshot): Int =
+    statsFrame(spark, dir, snap)
+      .agg(max(col("buckets").cast("int"))).head().getInt(0)
 
   /** Corpus totals aggregated over the stats ledger. */
   private def statsTotals(spark: SparkSession, dir: String,
-      snap: Option[Manifest.Snapshot]): (Long, Long) = {
+      snap: Manifest.Snapshot): (Long, Long) = {
     val r = statsFrame(spark, dir, snap)
       .agg(sum(col("n_docs").cast("long")), sum(col("sum_dl").cast("long")))
       .head()
@@ -157,64 +140,27 @@ object TextIndex {
       if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  /** Complete a committed ledger swap, ignore an uncommitted one (see
-    * [[consolidateStats]]) — the shared [[Commit.swapRecover]]
-    * protocol, LOCKED: the r18 review found the unlocked hand-rolled
-    * version let two concurrent in-JVM readers double-run the
-    * delete-then-rename and destroy the ledger outright. Called from
-    * every ledger read, so a crash mid-swap can never brick the
-    * index. */
-  private def statsSwapRecover(spark: SparkSession, dir: String): Unit =
-    Commit.swapRecover(spark, s"$dir/stats")
-
   /** Fold the stats ledger back to ONE row (r17 advisory): every append
     * adds a `stats/batch=*` directory forever, so without this the BM25
-    * normalizer read pays an ever-growing many-tiny-files scan. The
-    * totals are summed, written to a fresh `stats.swap` tree, committed
-    * ([[Commit]]), then swapped in via delete-then-rename — the
-    * [[statsSwapRecover]] protocol makes every crash window converge
-    * (uncommitted swap → dropped, committed swap → completed), and the
-    * single-maintainer contract keeps an append from racing the swap
-    * (an append's ledger row landing between the total read and the
-    * rename would be silently dropped — compaction and appends run from
-    * the same maintenance face, serialized). */
+    * normalizer read pays an ever-growing many-tiny-files scan. The fold
+    * is a NEW ledger row plus one commit that retires the old rows —
+    * nothing deleted, so a pinned reader keeps summing the old rows to
+    * the same totals. */
   private def consolidateStats(spark: SparkSession, dir: String,
-      casRetries: Int = 0): Unit =
-    Manifest.current(spark, dir) match {
-      case Some(snap) =>
-        // manifest protocol: the fold is a NEW ledger row + one commit
-        // that retires the old rows — no swap, nothing deleted, a
-        // pinned reader keeps summing the old rows to the same totals
-        val old = snap.under("stats")
-        if (old.size <= 1) return
-        val (nDocs, sumDl) = statsTotals(spark, dir, Some(snap))
-        val nBuckets = storedBuckets(spark, dir, DefaultBuckets, Some(snap))
-        val tag = s"c${java.util.UUID.randomUUID().toString.take(12)}"
-        spark.createDataFrame(Seq((nDocs, sumDl, nBuckets)))
-          .toDF("n_docs", "sum_dl", "buckets").coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/stats/batch=$tag")
-        Manifest.commitAdd(spark, dir,
-          Manifest.listFiles(spark, dir, s"stats/batch=$tag"), old,
-          casRetries): Unit
-      case None =>
-        statsSwapRecover(spark, dir)
-        val stats = new org.apache.hadoop.fs.Path(s"$dir/stats")
-        val fs = stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(stats)) return
-        val batchDirs = fs.listStatus(stats)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        if (batchDirs.length <= 1) return
-        val (nDocs, sumDl) = statsTotals(spark, dir, None)
-        val nBuckets = storedBuckets(spark, dir, DefaultBuckets, None)
-        // maintainer-only stale-build clear, then build, then the locked
-        // mark→delete→rename (Commit.commitSwap) — readers' swapRecover
-        // can never interleave its own swap with this one
-        Commit.clearSwap(spark, s"$dir/stats")
-        spark.createDataFrame(Seq((nDocs, sumDl, nBuckets)))
-          .toDF("n_docs", "sum_dl", "buckets").coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/stats.swap/batch=base")
-        Commit.commitSwap(spark, s"$dir/stats")
-    }
+      casRetries: Int): Unit = {
+    val snap = live(spark, dir)
+    val old = snap.under("stats")
+    if (old.size <= 1) return
+    val (nDocs, sumDl) = statsTotals(spark, dir, snap)
+    val nBuckets = storedBuckets(spark, dir, snap)
+    val tag = s"c${java.util.UUID.randomUUID().toString.take(12)}"
+    spark.createDataFrame(Seq((nDocs, sumDl, nBuckets)))
+      .toDF("n_docs", "sum_dl", "buckets").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/stats/batch=$tag")
+    Manifest.commitAdd(spark, dir,
+      Manifest.listFiles(spark, dir, s"stats/batch=$tag"), old,
+      casRetries): Unit
+  }
 
   /** Incremental maintenance: add a DELTA corpus (document ids disjoint
     * from the indexed ones) to an existing index. Delta postings append
@@ -234,23 +180,22 @@ object TextIndex {
     * operational one; the streaming face [[appendBatch]] uses the
     * batch id and is immune outright.)
     *
-    * On MANIFEST trees each attempt writes its own SUFFIXED tag
-    * (`a<hash>-<rand>`) and the commit retires every other attempt of
-    * the same content hash (r19 advisory: the old same-tag dynamic
-    * overwrite physically deleted the prior COMMITTED attempt's files
-    * before the new commit — the one write path that could yank bytes
-    * from under a pinned reader mid-scan when a caller retried after
-    * an ambiguous failure). Retired attempts stay on disk for pinned
-    * readers until [[vacuum]]; a torn attempt's files are orphans no
-    * snapshot ever references. Legacy trees keep the same-tag
-    * overwrite — there the physical overwrite IS the idempotence. */
+    * Each attempt writes its own SUFFIXED tag (`a<hash>-<rand>`) and
+    * the commit retires every other attempt of the same content hash
+    * (r19 advisory: a same-tag dynamic overwrite would physically
+    * delete the prior COMMITTED attempt's files before the new commit —
+    * yanking bytes from under a pinned reader mid-scan when a caller
+    * retried after an ambiguous failure). Retired attempts stay on disk
+    * for pinned readers until [[vacuum]]; a torn attempt's files are
+    * orphans no snapshot ever references. `buckets` is not consulted:
+    * the persisted count wins ([[storedBuckets]]). */
   def appendToIndex(
       delta: DataFrame, idCol: String, textCol: String, dir: String,
       buckets: Int = DefaultBuckets
   ): Unit = {
     val spark = delta.sparkSession
-    val snap = Manifest.current(spark, dir)
-    val nBuckets = storedBuckets(spark, dir, buckets, snap)
+    val snap = live(spark, dir)
+    val nBuckets = storedBuckets(spark, dir, snap)
     // pinned: feeds the content tag, the postings write, and the stats
     // row — without it the delta would tokenize three times
     val toks = delta.select(col(idCol).as("doc_id"),
@@ -264,7 +209,7 @@ object TextIndex {
         .agg(coalesce(bit_xor(xxhash64(col("doc_id"), col("toks"))), lit(0L)))
         .head().getLong(0)
       val base = "a" + java.lang.Long.toHexString(contentHash)
-      val tag = attemptTag(base, snap)
+      val tag = attemptTag(base)
       postings(toks, nBuckets)
         .withColumn("ingest_batch", lit(tag))
         .repartition(col("term_bucket"))
@@ -281,40 +226,34 @@ object TextIndex {
     } finally graft.operators.Dedup.release(toks)
   }
 
-  /** Manifest trees get a per-attempt suffix so a retry never
-    * overwrites committed leaf directories (see [[appendToIndex]]);
-    * legacy trees keep the bare tag — the same-tag overwrite is their
-    * idempotence mechanism. Bases never contain '-' (hex hashes,
-    * `b<id>` batch ids), so attempt-of-base matching is unambiguous. */
-  private def attemptTag(base: String,
-      snap: Option[Manifest.Snapshot]): String =
-    if (snap.isDefined)
-      s"$base-${java.util.UUID.randomUUID().toString.take(8)}"
-    else base
+  /** A per-attempt suffix, so a retry never overwrites committed leaf
+    * directories (see [[appendToIndex]]). Bases never contain '-' (hex
+    * hashes, `b<id>` batch ids), so attempt-of-base matching is
+    * unambiguous. */
+  private def attemptTag(base: String): String =
+    s"$base-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** One snapshot commit per append: adopt the fresh ATTEMPT's files,
     * drop every prior attempt of the same BASE tag (a retried append —
     * its prior attempt may have committed even though the caller saw a
     * failure, the ambiguous-failure retry). Postings and stats flip
-    * together, so a reader never sees one without the other. No-op on
-    * legacy trees. */
+    * together, so a reader never sees one without the other. */
   private def commitAppend(spark: SparkSession, dir: String,
-      snap: Option[Manifest.Snapshot], base: String, tag: String): Unit =
-    snap.foreach { s =>
-      val ofBase = (f: String) =>
-        f.contains(s"/ingest_batch=$base/") ||
-          f.contains(s"/ingest_batch=$base-") ||
-          f.startsWith(s"stats/batch=$base/") ||
-          f.startsWith(s"stats/batch=$base-")
-      val ofTag = (f: String) =>
-        f.contains(s"/ingest_batch=$tag/") || f.startsWith(s"stats/batch=$tag/")
-      val stale = s.files.filter(ofBase)
-      // precise add: only this attempt's freshly-written files (a
-      // tag-scoped filter over the listing — never a blind adoption)
-      val added = (Manifest.listFiles(spark, dir, "postings")
-        ++ Manifest.listFiles(spark, dir, "stats")).filter(ofTag)
-      Manifest.commitAdd(spark, dir, added, stale): Unit
-    }
+      snap: Manifest.Snapshot, base: String, tag: String): Unit = {
+    val ofBase = (f: String) =>
+      f.contains(s"/ingest_batch=$base/") ||
+        f.contains(s"/ingest_batch=$base-") ||
+        f.startsWith(s"stats/batch=$base/") ||
+        f.startsWith(s"stats/batch=$base-")
+    val ofTag = (f: String) =>
+      f.contains(s"/ingest_batch=$tag/") || f.startsWith(s"stats/batch=$tag/")
+    val stale = snap.files.filter(ofBase)
+    // precise add: only this attempt's freshly-written files (a
+    // tag-scoped filter over the listing — never a blind adoption)
+    val added = (Manifest.listFiles(spark, dir, "postings")
+      ++ Manifest.listFiles(spark, dir, "stats")).filter(ofTag)
+    Manifest.commitAdd(spark, dir, added, stale): Unit
+  }
 
   /** EXACTLY-ONCE streaming maintenance (the foreachBatch body of
     * [[graft.streaming.Streaming.textIndexMaintenance]], parity harness
@@ -322,15 +261,15 @@ object TextIndex {
     * tolerate-and-heal posture, because this index cannot tolerate
     * duplicates at all: a double-appended posting doubles `tf` and a
     * double-added stats row corrupts the BM25 normalizers. The layout
-    * does the work — every write owns batch-scoped leaf directories
-    * (`term_bucket=X/ingest_batch=b<id>`), so:
-    *  - the postings write is a dynamic partition overwrite of THIS
-    *    batch's own directories — a replay overwrites them with the
-    *    identical recomputed content, and standing directories are
-    *    never touched (delta-proportional: no standing read, no
-    *    journal, nothing to lose);
-    *  - the stats delta is a batch-scoped ledger row
-    *    (`stats/batch=b<id>`, overwritten in place — idempotent);
+    * does the work — every attempt owns attempt-tagged leaf directories
+    * (`term_bucket=X/ingest_batch=b<id>-<rand>`, `stats/batch=b<id>-
+    * <rand>`), so:
+    *  - the postings and the stats row are written into fresh
+    *    directories — standing ones are never touched
+    *    (delta-proportional: no standing read, nothing to lose);
+    *  - one manifest commit adopts this attempt and retires every
+    *    other attempt of batch `b<id>`, so a replay leaves exactly one
+    *    live copy of the batch;
     *  - the [[Watermark]] gate skips batches already marked done.
     * Every crash interleaving converges on the replayed apply. Returns
     * true iff the batch was applied. */
@@ -340,19 +279,18 @@ object TextIndex {
   ): Boolean = {
     val spark = delta.sparkSession
     MaintenanceFace.gated(spark, dir, batchId) {
-      val snap = Manifest.current(spark, dir)
-      val nBuckets = storedBuckets(spark, dir, DefaultBuckets, snap)
+      val snap = live(spark, dir)
+      val nBuckets = storedBuckets(spark, dir, snap)
       // pinned: feeds the postings write and the stats row
       val toks = delta.select(col(idCol).as("doc_id"),
         TextFunctions.tokens(textCol).as("toks")).localCheckpoint()
       try if (!toks.isEmpty) {
-        // manifest trees: attempt-suffixed like [[appendToIndex]] — a
-        // replay after a crash between the manifest commit and the
-        // watermark mark must not overwrite the committed attempt's
-        // live files (it writes a fresh attempt; the commit retires
-        // the old one). Legacy trees keep the bare-tag overwrite.
+        // attempt-suffixed like [[appendToIndex]] — a replay after a
+        // crash between the manifest commit and the watermark mark must
+        // not overwrite the committed attempt's live files (it writes a
+        // fresh attempt; the commit retires the old one)
         val base = s"b$batchId"
-        val tag = attemptTag(base, snap)
+        val tag = attemptTag(base)
         postings(toks, nBuckets)
           .withColumn("ingest_batch", lit(tag))
           .repartition(col("term_bucket"))
@@ -372,38 +310,24 @@ object TextIndex {
 
   /** Consolidate the batch-scoped layout: every append leaves its own
     * `ingest_batch=<tag>` leaf under each touched bucket, so fan-in
-    * grows with append count; compaction reads the whole tree, collapses
-    * (term, doc_id) duplicates (a torn previous consolidation's residue —
-    * identical rows, so the collapse is content-free), writes everything
-    * as ONE fresh consolidated tag (dynamic overwrite of the new tag's
-    * directories only — standing tags untouched until the write commits),
-    * then deletes the old tags. Crash anywhere leaves duplicates the
-    * search faces collapse at read ([[bm25SearchIndex]]/
-    * [[phraseSearchIndex]] dropDuplicates on the pruned sliver), and the
-    * next compact converges. A no-op when a single tag remains.
+    * grows with append count; compaction reads the live postings,
+    * collapses (term, doc_id) duplicates (a torn previous
+    * consolidation's residue — identical rows, so the collapse is
+    * content-free), and writes everything as ONE fresh consolidated tag
+    * (dynamic overwrite of the new tag's directories only, additive with
+    * respect to every standing file). One [[Manifest]] commit then
+    * retires the old tags without deleting them: snapshot-pinned
+    * readers keep serving them bit-identically until
+    * [[Manifest.vacuum]]. A crash before the commit leaves orphans no
+    * snapshot references. A no-op when a single tag remains.
     *
     * Also folds the STATS LEDGER back to one row ([[consolidateStats]]
     * — r17 advisory: without it every append's batch dir lives
     * forever and the normalizer read decays into a many-tiny-files
-    * scan).
-    *
-    * On MANIFEST trees (every index the r19+ [[writeIndex]] builds)
-    * both folds are reader-invisible across processes: the
-    * consolidated tag/ledger row is written additively, one
-    * [[Manifest]] commit flips the live set, and the superseded files
-    * stay on disk for snapshot-pinned readers until
-    * [[Manifest.vacuum]]. Legacy trees keep the delete-after-write
-    * protocol and its maintenance-window/retry contract for external
-    * readers. */
+    * scan), by the same additive write and commit. */
   def compact(spark: SparkSession, dir: String,
-      casRetries: Int = 0): Compact.CompactStats =
-    Manifest.current(spark, dir) match {
-      case Some(snap) => compactManifest(spark, dir, snap, casRetries)
-      case None => compactLegacy(spark, dir)
-    }
-
-  private def compactManifest(spark: SparkSession, dir: String,
-      snap: Manifest.Snapshot, casRetries: Int): Compact.CompactStats = {
+      casRetries: Int = 0): Compact.CompactStats = {
+    val snap = live(spark, dir)
     val oldPostings = snap.under("postings")
     val tagOf = (f: String) => f.split('/')
       .find(_.startsWith("ingest_batch=")).getOrElse("")
@@ -412,16 +336,12 @@ object TextIndex {
     val oldBuckets = oldPostings
       .map(_.stripPrefix("postings/").takeWhile(_ != '/')).distinct
     val tag = s"c${java.util.UUID.randomUUID().toString.take(12)}"
-    val consolidated = postingsFrame(spark, dir, Some(snap))
+    val consolidated = postingsFrame(spark, dir, snap)
       .drop("ingest_batch")
       .dropDuplicates("term", "doc_id")
       .withColumn("term_bucket", col("term_bucket").cast("long"))
       .withColumn("ingest_batch", lit(tag))
       .localCheckpoint() // one derivation for the one write
-    // the new tag's directories are fresh — the dynamic overwrite is
-    // additive with respect to every standing file; the commit retires
-    // the old tags without deleting them (snapshot-pinned readers keep
-    // serving them bit-identically until vacuum)
     try
       consolidated.repartition(col("term_bucket"))
         .write.mode("overwrite")
@@ -436,44 +356,6 @@ object TextIndex {
       next.under("postings").size)
   }
 
-  private def compactLegacy(spark: SparkSession, dir: String)
-      : Compact.CompactStats = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/postings")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Compact.CompactStats(0, 0, 0)
-    val bucketDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("term_bucket="))
-    def leaves(b: org.apache.hadoop.fs.Path) = fs.listStatus(b)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_batch="))
-    val oldTags = bucketDirs.flatMap(b => leaves(b.getPath))
-      .map(_.getPath.getName.stripPrefix("ingest_batch=")).distinct
-    if (oldTags.length <= 1) return Compact.CompactStats(0, 0, 0)
-    def fileCount() = bucketDirs.map(b => leaves(b.getPath)
-      .map(l => fs.listStatus(l.getPath)
-        .count(_.getPath.getName.endsWith(".parquet"))).sum).sum
-    val before = fileCount()
-    val tag = s"c${java.util.UUID.randomUUID().toString.take(12)}"
-    val consolidated = spark.read.parquet(root.toString)
-      .drop("ingest_batch")
-      .dropDuplicates("term", "doc_id")
-      .withColumn("term_bucket", col("term_bucket").cast("long"))
-      .withColumn("ingest_batch", lit(tag))
-      .localCheckpoint() // sever the self-overwrite lineage
-    try
-      consolidated.repartition(col("term_bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("term_bucket", "ingest_batch").parquet(root.toString)
-    finally graft.operators.Dedup.release(consolidated)
-    bucketDirs.foreach { b =>
-      leaves(b.getPath)
-        .filter(_.getPath.getName != s"ingest_batch=$tag")
-        .foreach(l => fs.delete(l.getPath, true): Unit)
-    }
-    consolidateStats(spark, dir)
-    Compact.CompactStats(bucketDirs.length, before, fileCount())
-  }
-
   /** Physically reclaim superseded bytes — old batch tags and ledger
     * rows [[compact]] retired for snapshot-pinned readers, plus any
     * torn run's orphans — on the serving fleet's retention cadence
@@ -486,14 +368,14 @@ object TextIndex {
   /** BM25 top-k against a persisted index: the query terms' buckets
     * become a literal partition predicate (query metadata, not row
     * data), postings filter to the exact terms inside those directories,
-    * and scoring matches `Keywords.bm25Search` bit-for-bit. */
+    * and scoring matches `Keywords.bm25Search` bit-for-bit. `buckets`
+    * is not consulted: the persisted count wins ([[storedBuckets]]). */
   def bm25SearchIndex(
       spark: SparkSession, dir: String, queryTerms: Seq[String], k: Int,
       buckets: Int = DefaultBuckets,
       k1: Double = 1.2, b: Double = 0.75
   ): DataFrame =
-    bm25Core(spark, dir, Manifest.current(spark, dir), queryTerms, k,
-      buckets, k1, b)
+    bm25Core(spark, dir, live(spark, dir), queryTerms, k, k1, b)
 
   /** [[bm25SearchIndex]] pinned to a COMMITTED VERSION — the
     * reproducible-eval face (r20, the index-family counterpart of
@@ -513,13 +395,12 @@ object TextIndex {
         s"${Manifest.versions(spark, dir).mkString(",")}) — it was never " +
         "committed, or vacuum reclaimed it; raise vacuum's retainVersions " +
         "to keep the eval horizon"))
-    bm25Core(spark, dir, Some(snap), queryTerms, k, DefaultBuckets, k1, b)
+    bm25Core(spark, dir, snap, queryTerms, k, k1, b)
   }
 
   private def bm25Core(
-      spark: SparkSession, dir: String, snap: Option[Manifest.Snapshot],
-      queryTerms: Seq[String], k: Int, buckets: Int,
-      k1: Double, b: Double
+      spark: SparkSession, dir: String, snap: Manifest.Snapshot,
+      queryTerms: Seq[String], k: Int, k1: Double, b: Double
   ): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
     require(k > 0, "k must be positive")
@@ -529,7 +410,7 @@ object TextIndex {
     // commit can never invalidate this query's file list
     // NOTE: named nBuckets, not b — `b` is the BM25 length-normalization
     // parameter in scope here
-    val nBuckets = storedBuckets(spark, dir, buckets, snap)
+    val nBuckets = storedBuckets(spark, dir, snap)
     // bucket ids are computable driver-side: same hash, tiny input
     val probed = terms.map { t =>
       math.floorMod(graft.functions.Winnow60.hash60(
@@ -587,12 +468,13 @@ object TextIndex {
     *
     * Repeated terms in the phrase read ONE posting (the join dedups by
     * term), and a document lacking any phrase term drops at the inner
-    * join — so the work is |phrase| posting lookups, corpus-size-free. */
+    * join — so the work is |phrase| posting lookups, corpus-size-free.
+    * `buckets` is not consulted, as in [[bm25SearchIndex]]. */
   def phraseSearchIndex(
       spark: SparkSession, dir: String, phrase: Seq[String],
       buckets: Int = DefaultBuckets
   ): DataFrame =
-    phraseCore(spark, dir, Manifest.current(spark, dir), phrase, buckets)
+    phraseCore(spark, dir, live(spark, dir), phrase)
 
   /** [[phraseSearchIndex]] pinned to a COMMITTED VERSION — see
     * [[bm25SearchIndexAt]] for the reproducible-eval contract. */
@@ -605,16 +487,16 @@ object TextIndex {
         s"${Manifest.versions(spark, dir).mkString(",")}) — it was never " +
         "committed, or vacuum reclaimed it; raise vacuum's retainVersions " +
         "to keep the eval horizon"))
-    phraseCore(spark, dir, Some(snap), phrase, DefaultBuckets)
+    phraseCore(spark, dir, snap, phrase)
   }
 
   private def phraseCore(
-      spark: SparkSession, dir: String, snap: Option[Manifest.Snapshot],
-      phrase: Seq[String], buckets: Int
+      spark: SparkSession, dir: String, snap: Manifest.Snapshot,
+      phrase: Seq[String]
   ): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
     val terms = phrase.distinct
-    val nBuckets = storedBuckets(spark, dir, buckets, snap)
+    val nBuckets = storedBuckets(spark, dir, snap)
     val probed = terms.map { t =>
       math.floorMod(graft.functions.Winnow60.hash60(
         org.apache.spark.unsafe.types.UTF8String.fromString(t)), nBuckets.toLong)

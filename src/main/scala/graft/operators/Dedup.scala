@@ -1155,7 +1155,28 @@ object Dedup {
     * No-op for non-checkpoint-backed frames. The frame is NOT recomputable
     * afterwards (its lineage was truncated) — release only when done. */
   def release(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(blocking = false))
+    checkpointRdd(df).foreach(unpersistQuietly(_, blocking = false))
+
+  private val quietLock = new Object
+
+  /** Unpersist `rdd` without the WARN Spark logs for every freed local
+    * checkpoint ("RDD N was locally checkpointed, its lineage has been
+    * truncated"): freeing a checkpoint this engine took is the point, so
+    * that one logger — the RDD's own class — is raised to ERROR for the
+    * call and restored after, and the same warning elsewhere still
+    * shows. Serialized, so two overlapping calls cannot restore each
+    * other's raised level. */
+  private[graft] def unpersistQuietly(
+      rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
+    quietLock.synchronized {
+      val log = rdd.getClass.getName
+      val level = org.apache.logging.log4j.LogManager.getLogger(log).getLevel
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        log, org.apache.logging.log4j.Level.ERROR)
+      try rdd.unpersist(blocking)
+      finally
+        org.apache.logging.log4j.core.config.Configurator.setLevel(log, level)
+    }
 
   /** Runs `body`, handing it an eager-localCheckpoint function `ck` that
     * records the EXACT RDD each checkpoint persisted; on completion every
@@ -1178,20 +1199,8 @@ object Dedup {
     }
     val result = body(ck)
     val keep = checkpointRdd(result).map(_.id).toSet
-    // freeing a local checkpoint intentionally truncates an unrecomputable
-    // lineage — Spark logs a WARN per RDD for it; silence that one logger
-    // (the RDD's own class name) only for this deliberate, tracked case,
-    // restoring the caller's level afterwards so the suppression cannot
-    // leak into unrelated code that hits a real lineage-truncation bug
-    val rddLogger = "org.apache.spark.rdd.MapPartitionsRDD"
-    val prevLevel =
-      org.apache.logging.log4j.LogManager.getLogger(rddLogger).getLevel
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      rddLogger, org.apache.logging.log4j.Level.ERROR)
-    try
-      created.filterNot(r => keep.contains(r.id)).foreach(_.unpersist(blocking = false))
-    finally
-      org.apache.logging.log4j.core.config.Configurator.setLevel(rddLogger, prevLevel)
+    created.filterNot(r => keep.contains(r.id))
+      .foreach(unpersistQuietly(_, blocking = false))
     result
   }
 

@@ -996,44 +996,37 @@ object Similarity {
       iters: Int = 2
   ): Unit = {
     val spark = corpus.sparkSession
-    // a committed journal left by a torn compaction of the PREVIOUS
-    // index must not be replayed over the rebuild (legacy flat trees;
-    // generation trees get fresh directories, so no stale journal can
-    // exist there)
-    graft.io.BucketRewrite.dropJournal(spark, s"$dir/codes")
-    // ... and a stale legacy rebuild swap is invalidated wholesale,
-    // except when THIS build is itself targeting a swap tree (the
-    // legacy rebuild path owns that lifecycle)
-    if (!dir.endsWith(".swap")) graft.io.Commit.clearSwap(spark, dir)
     // a stale batch-id watermark from a previous stream would silently
     // drop the first batches of a NEW stream whose checkpoint restarts
     // ids at 0 (the io-family full-rebuild rule; the in-stream
     // [[ivfPqIndexRebuild]] deliberately PRESERVES the watermark)
     graft.io.Watermark.clear(spark, dir)
-    ivfPqBuildGen(corpus, idCol, vecCol, dir, dims, nCentroids, m, codes,
+    ivfPqBuildGen(corpus, idCol, vecCol, dir,
+      graft.io.Manifest.current(spark, dir), dims, nCentroids, m, codes,
       iters)
   }
 
   private val IvfPqGenName = "g([0-9]{6})".r
+  private val IvfPqBuildFace = "Similarity.ivfPqIndexWrite"
 
   /** Build a fresh GENERATION subtree (`<dir>/g<NNNNNN>/{centroids,
     * codebooks,meta,codes}`) and flip the family [[graft.io.Manifest]]
     * to it — the shared mechanics of [[ivfPqIndexWrite]] (bootstrap)
     * and [[ivfPqIndexRebuild]] (re-train): one manifest commit makes
     * the new generation the live index and RETIRES the previous one
-    * (or the flat legacy subtrees, on first migration) without
-    * deleting a byte — a reader in any process pinned on the previous
-    * snapshot keeps serving the old generation bit-identically until
+    * (`prev`, None on a first build) without deleting a byte — a
+    * reader in any process pinned on the previous snapshot keeps
+    * serving the old generation bit-identically until
     * [[ivfPqIndexVacuum]]. A crash mid-build leaves an orphan
     * generation directory no snapshot references (swept by vacuum);
     * generation numbers always advance past every directory on disk,
     * committed or not, so a torn build's directory is never reused. */
   private def ivfPqBuildGen(
       corpus: DataFrame, idCol: String, vecCol: String, dir: String,
+      prev: Option[graft.io.Manifest.Snapshot],
       dims: Int, nCentroids: Int, m: Int, codes: Int, iters: Int
   ): Unit = {
     val spark = corpus.sparkSession
-    val prev = graft.io.Manifest.current(spark, dir)
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existing =
@@ -1048,13 +1041,12 @@ object Similarity {
     val subtrees = Seq("centroids", "codebooks", "meta", "codes")
     val files = subtrees
       .flatMap(s => graft.io.Manifest.listFiles(spark, dir, s"$gen/$s"))
-    val retire = prev.map(_.files.toSeq).getOrElse(
-      subtrees.flatMap(s => graft.io.Manifest.listFiles(spark, dir, s)))
-    graft.io.Manifest.commitSet(spark, dir, files, retire): Unit
+    graft.io.Manifest.commitSet(spark, dir, files,
+      prev.fold(Seq.empty[String])(_.files)): Unit
   }
 
   /** The four-subtree write into `treeRoot` — pure layout, no
-    * lifecycle (journals/watermarks/manifests are the callers'). */
+    * lifecycle (watermarks/manifests are the callers'). */
   private def ivfPqWriteTree(
       corpus: DataFrame, idCol: String, vecCol: String, treeRoot: String,
       dims: Int, nCentroids: Int, m: Int, codes: Int, iters: Int
@@ -1081,44 +1073,33 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cent_id").parquet(s"$treeRoot/codes")
   }
 
-  /** A resolved IVF+PQ tree: `root` is where the four subtrees live —
-    * the manifest's live generation, or the family dir itself on a
-    * legacy flat layout — and `snap` pins the file list every read of
-    * this serve call goes through (so a concurrent rebuild/compaction
-    * commit can never mix generations inside one call). */
-  private final case class IvfPqTree(dir: String, root: String,
-      snap: Option[graft.io.Manifest.Snapshot], gen: String) {
+  /** A resolved IVF+PQ tree: `gen` is the manifest's live generation,
+    * where the four subtrees live, and `snap` pins the file list every
+    * read of this serve call goes through (so a concurrent
+    * rebuild/compaction commit can never mix generations inside one
+    * call). */
+  private final case class IvfPqTree(dir: String,
+      snap: graft.io.Manifest.Snapshot, gen: String) {
+    def root: String = s"$dir/$gen"
     def codesDir: String = s"$root/codes"
   }
 
   private def ivfPqResolve(
-      spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqTree =
-    graft.io.Manifest.current(spark, dir) match {
-      case Some(s) =>
-        val gen = s.files.headOption.map(_.takeWhile(_ != '/')).getOrElse(
-          sys.error(s"IVF+PQ index at $dir: the committed manifest lists " +
-            "no files — an IVF+PQ index is never legitimately empty (an " +
-            "empty training corpus fails loudly at build), so this is a " +
-            "corrupted manifest; rebuild the index"))
-        IvfPqTree(dir, s"$dir/$gen", Some(s), gen)
-      case None =>
-        // legacy flat layout: complete a torn swap first (the swap may
-        // install a manifest tree — the migration edge), then re-check
-        ivfPqSwapRecover(spark, dir)
-        graft.io.Manifest.current(spark, dir) match {
-          case Some(_) => ivfPqResolve(spark, dir)
-          case None => IvfPqTree(dir, dir, None, "")
-        }
-    }
+      spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqTree = {
+    val s = graft.io.Manifest.live(spark, dir, IvfPqBuildFace)
+    val gen = s.files.headOption.map(_.takeWhile(_ != '/')).getOrElse(
+      sys.error(s"IVF+PQ index at $dir: the committed manifest lists " +
+        "no files — an IVF+PQ index is never legitimately empty (an " +
+        "empty training corpus fails loudly at build), so this is a " +
+        "corrupted manifest; rebuild the index"))
+    IvfPqTree(dir, s, gen)
+  }
 
-  /** The codes tree through the resolved snapshot (legacy: listing). */
+  /** The codes tree through the resolved snapshot. */
   private def ivfPqCodesFrame(
       spark: org.apache.spark.sql.SparkSession, tree: IvfPqTree): DataFrame =
-    tree.snap match {
-      case Some(s) => graft.io.Manifest.readSubtree(spark, tree.dir, s,
-        s"${tree.gen}/codes", None)
-      case None => spark.read.parquet(tree.codesDir)
-    }
+    graft.io.Manifest.readSubtree(spark, tree.dir, tree.snap,
+      s"${tree.gen}/codes", None)
 
   /** Per-cell code counts of the LIVE index — the layout inspection
     * face (ir3's build witness): (cent_id, n_vecs) through the resolved
@@ -1150,8 +1131,7 @@ object Similarity {
   ): (Int, Int, Array[Array[Double]], Array[Array[Array[Double]]]) = {
     // a generation is immutable once committed (appends touch only
     // codes/), so plain directory reads inside the resolved root are
-    // snapshot-consistent; legacy trees healed any torn swap when the
-    // caller resolved the tree
+    // snapshot-consistent
     val root = tree.root
     val meta = spark.read.parquet(s"$root/meta")
       .select("dims", "n_centroids", "m", "codes").head()
@@ -1178,12 +1158,6 @@ object Similarity {
       nProbe: Int = 4
   ): DataFrame = {
     graft.plans.GraftExtensions.register(spark)
-    // resolve (manifest snapshot, or legacy swap-heal) BEFORE the
-    // journal recover: a completed swap replaces the tree the journal
-    // belonged to; re-resolve after a heal so the snapshot reflects it
-    graft.io.BucketRewrite.recover(spark,
-      ivfPqResolve(spark, dir).codesDir, "cent_id",
-      manifestRoot = Some(dir))
     val tree = ivfPqResolve(spark, dir)
     val (m, codes, coarse, books) = ivfPqArtifacts(spark, tree)
     val d = coarse(0).length / m
@@ -1261,26 +1235,17 @@ object Similarity {
       dir: String
   ): Unit = {
     val spark = delta.sparkSession
-    // resolve first (legacy: heals a committed rebuild swap — it
-    // replaces the whole tree), THEN the journal recover, BEFORE
-    // appending (the io-family append discipline: a torn compaction's
-    // journal replayed over this append would drop it)
-    graft.io.BucketRewrite.recover(spark,
-      ivfPqResolve(spark, dir).codesDir, "cent_id",
-      manifestRoot = Some(dir))
     val tree = ivfPqResolve(spark, dir)
     // before/after listing brackets the append so the snapshot commit
     // adds precisely this write's files (the io-family discipline)
-    val before = tree.snap.map(_ =>
-      graft.io.Manifest.listFiles(spark, dir, s"${tree.gen}/codes").toSet)
+    val before =
+      graft.io.Manifest.listFiles(spark, dir, s"${tree.gen}/codes").toSet
     ivfPqEncodeTree(spark, tree, delta, idCol, vecCol)
       .repartition(col("cent_id"))
       .write.mode("append").partitionBy("cent_id").parquet(tree.codesDir)
-    before.foreach { b =>
-      graft.io.Manifest.commitAdd(spark, dir,
-        graft.io.Manifest.listFiles(spark, dir, s"${tree.gen}/codes")
-          .filterNot(b), Nil): Unit
-    }
+    graft.io.Manifest.commitAdd(spark, dir,
+      graft.io.Manifest.listFiles(spark, dir, s"${tree.gen}/codes")
+        .filterNot(before), Nil): Unit
   }
 
   /** Replay-safe streaming append for the vector index (the
@@ -1313,16 +1278,16 @@ object Similarity {
   def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String): graft.io.Compact.CompactStats = {
     val tree = ivfPqResolve(spark, dir)
-    graft.io.Compact.compactTree(spark, tree.codesDir, "cent_id",
-      dedupCols = Some(Seq("neighbor_id")), manifestRoot = Some(dir))
+    graft.io.Compact.compactTree(spark, dir, IvfPqBuildFace,
+      tree.codesDir, "cent_id", dedupCols = Some(Seq("neighbor_id")))
   }
 
   /** Physically reclaim non-live bytes — generations a rebuild retired
     * for snapshot-pinned readers, compaction-superseded cell files, and
     * torn builds' orphan generation dirs — [[graft.io.Manifest.vacuum]]
-    * over every generation on disk plus the flat legacy subtrees a
-    * migration left behind. The declared pin-expiry point: run it on a
-    * retention cadence longer than the serving fleet's longest query. */
+    * over every generation on disk. The declared pin-expiry point: run
+    * it on a retention cadence longer than the serving fleet's longest
+    * query. */
   def ivfPqIndexVacuum(spark: org.apache.spark.sql.SparkSession,
       dir: String, retainVersions: Int = 0,
       orphanGraceMs: Long = 0L): graft.io.Manifest.VacuumStats = {
@@ -1336,9 +1301,9 @@ object Similarity {
             case _ => false
           }
       else Seq.empty
-    val flat = Seq("centroids", "codebooks", "meta", "codes")
     graft.io.Manifest.vacuum(spark, dir,
-      gens.flatMap(g => flat.map(s => s"$g/$s")) ++ flat,
+      gens.flatMap(g => Seq("centroids", "codebooks", "meta", "codes")
+        .map(s => s"$g/$s")),
       retainVersions, orphanGraceMs)
   }
 
@@ -1416,8 +1381,7 @@ object Similarity {
     * rebuild face the drift gauge's decay (see
     * [[graft.streaming.Streaming.shouldRebuild]]) triggers.
     *
-    * On MANIFEST trees (every index the r19+ [[ivfPqIndexWrite]]
-    * builds) the rebuild is a GENERATION FLIP ([[ivfPqBuildGen]]): the
+    * The rebuild is a GENERATION FLIP ([[ivfPqBuildGen]]): the
     * new index trains and writes completely under `<dir>/g<N+1>/`, one
     * manifest commit makes it live, and the old generation stays on
     * disk — READER-INVISIBLE ACROSS PROCESSES: a serve call in any
@@ -1429,15 +1393,7 @@ object Similarity {
     * (the [[graft.streaming.Streaming.vectorIndexMaintenance]] /
     * steady-state loop shape) must keep gating the same stream's
     * replays; a genuinely new stream starts with [[ivfPqIndexWrite]],
-    * which clears it.
-    *
-    * LEGACY flat trees keep the r18 swap protocol — build a sibling
-    * `<dir>.swap`, sentinel-commit, locked delete-then-rename, healed
-    * by every entry point's resolve — and MIGRATE: the swapped-in tree
-    * is generation-layout with a manifest, so the next rebuild is
-    * already a flip. (The swap window on a legacy tree keeps the old
-    * same-process guarantees; cross-process reader isolation starts at
-    * the first manifest commit.) */
+    * which clears it. */
   def ivfPqIndexRebuild(
       corpus: DataFrame,
       idCol: String,
@@ -1450,30 +1406,9 @@ object Similarity {
       iters: Int = 2
   ): Unit = {
     val spark = corpus.sparkSession
-    if (graft.io.Manifest.exists(spark, dir)) {
-      ivfPqBuildGen(corpus, idCol, vecCol, dir, dims, nCentroids, m,
-        codes, iters)
-      return
-    }
-    ivfPqSwapRecover(spark, dir)
-    // maintainer-only: drop a stale build from a dead run, build the
-    // replacement, then the LOCKED mark→delete→rename — a concurrent
-    // serve's swapRecover can never interleave its own swap (the r18
-    // review's double-swap race, fixed in graft.io.Commit once)
-    graft.io.Commit.clearSwap(spark, dir)
-    ivfPqIndexWrite(corpus, idCol, vecCol, s"$dir.swap", dims, nCentroids,
-      m, codes, iters)
-    // BOTH locks, root-then-subtree (see [[ivfPqSwapRecover]]): the
-    // whole-tree delete inside commitSwap must not interleave with a
-    // concurrent serve thread's committed-journal re-apply on
-    // `$dir/codes` — an overwrite running mid-delete would recreate the
-    // codes subtree, the rename would find the target present and fail,
-    // and the index would be left a zombie (r18 review finding)
-    graft.io.Commit.withTreeLock(dir) {
-      graft.io.Commit.withTreeLock(s"$dir/codes") {
-        graft.io.Commit.commitSwap(spark, dir)
-      }
-    }
+    ivfPqBuildGen(corpus, idCol, vecCol, dir,
+      Some(graft.io.Manifest.live(spark, dir, IvfPqBuildFace)), dims,
+      nCentroids, m, codes, iters)
   }
 
   /** [[ivfPqIndexRebuild]] at the LIVE index's OWN geometry — the
@@ -1510,24 +1445,6 @@ object Similarity {
       .select("dims", "n_centroids", "m", "codes").head()
     (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3))
   }
-
-  /** Complete a committed [[ivfPqIndexRebuild]] swap, ignore an
-    * uncommitted one (an in-flight builder may still be writing it;
-    * only the rebuild clears stale builds) — the shared LOCKED
-    * [[graft.io.Commit.swapRecover]] protocol on the whole index tree.
-    * This is the engine's one NESTED-tree swap (the codes SUBTREE has
-    * its own journal lock), so the swap takes both locks in a fixed
-    * root-then-subtree order — journal recovery takes only the subtree
-    * lock, so no cycle — keeping a whole-tree delete-then-rename from
-    * interleaving with a committed-journal re-apply on codes/. Cheap
-    * no-op when healthy. */
-  private def ivfPqSwapRecover(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    graft.io.Commit.withTreeLock(dir) {
-      graft.io.Commit.withTreeLock(s"$dir/codes") {
-        graft.io.Commit.swapRecover(spark, dir)
-      }
-    }
 
   /** IVF + PQ with RESIDUAL encoding — the Jégou et al. §IV refinement
     * (IVFADC proper) that [[ivfPqTopK]] deliberately skips: the PQ

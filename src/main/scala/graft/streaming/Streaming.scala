@@ -624,8 +624,8 @@ object Streaming {
     * [[graft.io.TextIndex.appendBatch]], which is EXACTLY-ONCE (not
     * tolerate-and-heal like #14: a doubled posting doubles tf and a
     * doubled stats row corrupts the BM25 normalizers, so duplicates are
-    * structurally impossible — journaled bucket overwrite with
-    * identical-row collapse + a batch-scoped stats ledger row + the
+    * structurally impossible — attempt-tagged postings committed
+    * through the manifest + a batch-scoped stats ledger row + the
     * watermark gate; the interleaving argument lives on appendBatch).
     * Same `compactEvery` cadence as the other maintenance faces. Ids
     * must be disjoint from the indexed corpus (the append contract). */
@@ -657,8 +657,8 @@ object Streaming {
     * discovery→novelty→fetch-queue edge with no re-fetching, live.
     *
     * All the replay machinery lives in
-    * [[graft.io.SeenSet.dedupBatch]] (batch-id watermark, `_SUCCESS`-
-    * gated emit-dir reuse, membership-idempotent re-append — see its
+    * [[graft.io.SeenSet.dedupBatch]] (batch-id watermark, commit-
+    * sentinel-gated emit-dir reuse, membership-idempotent re-append — see its
     * scaladoc for the interleaving-by-interleaving argument);
     * StreamingSpec #15 pins streamed emissions == the batch
     * first-occurrence fold, replayed-batch no-op, committed-emit
@@ -881,7 +881,7 @@ object Streaming {
 
   /** [[gaugeLedgerDecision]] as the boolean the maintenance window
     * acts on: rebuild ([[graft.operators.Similarity.ivfPqIndexRebuild]]
-    * — a reader-invisible generation flip on r19 manifest trees) when
+    * — a reader-invisible generation flip) when
     * the recent gauge window's mean recall decays below `threshold`. */
   def shouldRebuild(
       spark: SparkSession, gaugeDir: String, threshold: Double,

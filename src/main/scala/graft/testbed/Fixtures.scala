@@ -6,8 +6,6 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CacheManager, CachedData}
 
@@ -84,13 +82,10 @@ object Fixtures {
           .uncacheQuery(classic, e.plan, cascade = false, blocking = true))
       val cached = cacheEntries(spark).map(_.cachedRepresentation.cacheBuilder)
         .filter(_.isCachedColumnBuffersLoaded).map(_.cachedColumnBuffers.id).toSet
-      sc.getPersistentRDDs.foreach { case (id, rdd) => if (!rddsBefore(id) && !cached(id)) {
-        // a freed local checkpoint warns that its lineage is gone; here that is the point
-        val log = rdd.getClass.getName
-        val level = LogManager.getLogger(log).getLevel
-        Configurator.setLevel(log, Level.ERROR)
-        try rdd.unpersist(blocking = true) finally Configurator.setLevel(log, level)
-      }}
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!rddsBefore(id) && !cached(id))
+          graft.operators.Dedup.unpersistQuietly(rdd, blocking = true)
+      }
       val leaks = sc.getPersistentRDDs.keySet.filterNot(rddsBefore).toSeq.sorted.map(id => s"rdd $id") ++
         dirs.filter(Files.exists(_)).map(d => s"dir $d")
       if (leaks.nonEmpty) errors(s"$label:leak") = leaks.mkString(", ")

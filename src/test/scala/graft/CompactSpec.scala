@@ -143,36 +143,6 @@ class CompactSpec extends SparkSpec {
       "vacuum changed membership")
   }
 
-  test("a probe heals a compaction torn mid-commit from the journal") {
-    import spark.implicits._
-    // the BucketRewrite journal under Compact: hand-craft the committed
-    // journal a crashed compaction would leave, delete the bucket the
-    // commit lost, and the next probe must serve as if nothing happened
-    val dir = SparkSpec.tempDir("graft-cmp-torn").toString
-    def url(i: Int) = s"http://t${i % 3}.com/p/$i"
-    SeenSet.writeSet((0 until 120).map(url).toDF("url"), "url", dir,
-      buckets = 8)
-    val batch = (60 until 180).map(url).toDF("url")
-    val novel = rowSet(SeenSet.probeNovel(spark, dir, batch, "url"))
-    val rows = spark.read.parquet(s"$dir/urls")
-      .withColumn("url_bucket", col("url_bucket").cast("long"))
-    val b = rows.select("url_bucket").head().getLong(0)
-    rows.filter(col("url_bucket") === b)
-      .select("url", "url_bucket")
-      .write.mode("overwrite").parquet(s"$dir/urls.journal/data")
-    Seq(b).toDF("bucket").write.mode("overwrite")
-      .parquet(s"$dir/urls.journal/touched")
-    // the writer's engine-owned commit sentinel (see BucketRewrite)
-    new java.io.File(s"$dir/urls.journal/_GRAFT_COMMIT").createNewFile()
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(s"$dir/urls/url_bucket=$b"))
-    assert(rowSet(SeenSet.probeNovel(spark, dir, batch, "url")) === novel,
-      "the lost bucket's URLs must not come back as novel")
-    assert(!new java.io.File(s"$dir/urls.journal").exists())
-  }
-
   test("only fragmented buckets are rewritten; compact buckets keep their files") {
     // the single-level compactTree (band index): a one-doc append
     // fragments only the buckets ITS bands hash to — the others must

@@ -1,11 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
+import graft.io.Manifest
 import graft.operators.Similarity
 
 /** [[Similarity.ivfPqIndexWrite]] / [[Similarity.ivfPqIndexTopK]]: the
@@ -26,22 +27,6 @@ class IvfPqIndexSpec extends SparkSpec {
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.matches("g[0-9]{6}"))
     if (gens.isEmpty) dir else s"$dir/${gens.map(_.getName).max}"
-  }
-
-  /** Flatten a gen-layout tree back to the pre-manifest FLAT layout
-    * (subtrees at the root, no manifest) — the fixture the legacy
-    * swap-protocol pins below run against. */
-  private def toLegacy(dir: String): Unit = {
-    val root = new java.io.File(dir)
-    val gen = root.listFiles()
-      .filter(f => f.isDirectory && f.getName.matches("g[0-9]{6}")).head
-    gen.listFiles().foreach(s => java.nio.file.Files.move(
-      s.toPath, new java.io.File(root, s.getName).toPath))
-    gen.delete(): Unit
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(root, "manifest"))
   }
 
   test("index serve equals in-flight IVF+PQ and prunes to the probed cells") {
@@ -210,7 +195,7 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(g1.nonEmpty)
   }
 
-  test("rebuild swaps atomically: torn windows heal, readers never see halves") {
+  test("a completed rebuild serves exactly what a fresh full build serves") {
     val dir = SparkSpec.tempDir("graft-ivfpq-rb").toFile.getAbsolutePath
     val half = emb.filter(col("vec_id") < 150)
     Similarity.ivfPqIndexWrite(half, "vec_id", "embedding", dir,
@@ -218,7 +203,6 @@ class IvfPqIndexSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 5)
     def serve() = rowSet(Similarity.ivfPqIndexTopK(spark, dir, queries,
       "vec_id", "embedding", k = 3, nProbe = 4))
-    val v1 = serve()
 
     // a completed rebuild re-trains on the full corpus and serves what a
     // fresh full-corpus build serves
@@ -232,76 +216,50 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(v2 === rowSet(Similarity.ivfPqIndexTopK(spark, fresh, queries,
       "vec_id", "embedding", k = 3, nProbe = 4)),
       "a rebuilt index must serve exactly a fresh full-corpus build")
-
-    // torn window 1: crash BUILDING the swap (no commit sentinel) — the
-    // next serve IGNORES the junk (readers never delete an uncommitted
-    // swap: an in-flight builder in another thread may still be writing
-    // it — only the next rebuild clears stale builds) and the standing
-    // index serves untouched
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(dir)) // reset to v1
-    Similarity.ivfPqIndexWrite(half, "vec_id", "embedding", dir,
-      dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
-    Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", s"$dir.swap",
-      dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
-    // parquet jobs leave _SUCCESS inside the swap's SUBDIRS, but the
-    // swap-root sentinel is what commits the swap — absent here
-    new java.io.File(s"$dir.swap/_SUCCESS").delete()
-    assert(serve() === v1, "an uncommitted swap must not serve")
-    assert(new java.io.File(s"$dir.swap").exists(),
-      "readers leave the uncommitted swap for the maintainer")
-
-    // torn window 2: crash AFTER the sentinel, mid-swap (old tree
-    // already deleted) — the next serve COMPLETES the swap and the new
-    // index serves whole
-    Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", s"$dir.swap",
-      dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
-    new java.io.File(s"$dir.swap/_GRAFT_COMMIT").createNewFile()
-    rm(new java.io.File(dir))
-    assert(serve() === v2, "a committed swap must complete and serve whole")
-    assert(new java.io.File(dir).exists()
-      && !new java.io.File(s"$dir.swap").exists())
   }
 
-  test("two concurrent serves of one committed swap complete it exactly once") {
-    // the r18 review's double-swap race, pinned: both readers discover
-    // the committed swap; the shared per-tree lock serializes the
-    // delete-then-rename, so the second entrant re-checks and no-ops —
-    // unlocked, both would run it and delete BOTH copies of the index
-    val dir = SparkSpec.tempDir("graft-ivfpq-race").toFile.getAbsolutePath
-    Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") < 150),
-      "vec_id", "embedding", dir,
-      dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
-    // the swap protocol belongs to the pre-manifest flat layout
-    // (manifest trees rebuild by generation flip and never swap)
-    toLegacy(dir)
-    Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", s"$dir.swap",
-      dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
-    new java.io.File(s"$dir.swap/_GRAFT_COMMIT").createNewFile()
+  test("a torn rebuild's uncommitted generation never serves; the next rebuild numbers past it and vacuum sweeps it") {
+    val dir = SparkSpec.tempDir("graft-ivfpq-torn").toFile.getAbsolutePath
+    Similarity.ivfPqIndexWrite(emb.filter(col("vec_id") < 150), "vec_id",
+      "embedding", dir, dims = 64, nCentroids = 16, m = 4, codes = 16,
+      iters = 2)
     val queries = emb.filter(col("vec_id") < 5)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val readers = (1 to 2).map(_ => new Thread(() => {
-      gate.await()
-      try Similarity.ivfPqIndexTopK(spark, dir, queries,
-        "vec_id", "embedding", k = 3, nProbe = 4).count(): Unit
-      catch { case t: Throwable => errs.add(t): Unit }
-    }))
-    readers.foreach(_.start()); gate.countDown(); readers.foreach(_.join())
-    assert(errs.isEmpty, s"concurrent swap recovery crashed: ${errs.peek()}")
-    assert(new java.io.File(dir).exists()
-      && !new java.io.File(s"$dir.swap").exists(),
-      "exactly one completion: target present, swap consumed")
-    // and the swapped-in index serves whole (== a fresh full build)
-    val fresh = SparkSpec.tempDir("graft-ivfpq-race-f").toFile.getAbsolutePath
+    def serve() = rowSet(Similarity.ivfPqIndexTopK(spark, dir, queries,
+      "vec_id", "embedding", k = 3, nProbe = 4))
+    val v1 = serve()
+    val snap1 = Manifest.current(spark, dir).get
+    assert(snap1.files.forall(_.startsWith("g000001/")))
+
+    // the torn rebuild: a whole full-corpus generation written as
+    // g000002/ (every subtree, real parquet), then a crash before the
+    // manifest commit
+    val fresh = SparkSpec.tempDir("graft-ivfpq-torn-f").toFile.getAbsolutePath
     Similarity.ivfPqIndexWrite(emb, "vec_id", "embedding", fresh,
       dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
-    assert(rowSet(Similarity.ivfPqIndexTopK(spark, dir, queries,
+    val src = Paths.get(fresh, "g000001")
+    val walk = Files.walk(src)
+    try walk.forEach(p => Files.copy(p,
+      Paths.get(dir, "g000002").resolve(src.relativize(p))))
+    finally walk.close()
+    assert(serve() === v1,
+      "an uncommitted generation must not change what the index serves")
+    assert(Manifest.current(spark, dir).get === snap1)
+
+    // the next rebuild numbers past the torn directory, never reusing it
+    Similarity.ivfPqIndexRebuild(emb, "vec_id", "embedding", dir,
+      dims = 64, nCentroids = 16, m = 4, codes = 16, iters = 2)
+    assert(Manifest.current(spark, dir).get.files
+      .forall(_.startsWith("g000003/")))
+    val v2 = rowSet(Similarity.ivfPqIndexTopK(spark, fresh, queries,
       "vec_id", "embedding", k = 3, nProbe = 4))
-      === rowSet(Similarity.ivfPqIndexTopK(spark, fresh, queries,
-        "vec_id", "embedding", k = 3, nProbe = 4)))
+    assert(serve() === v2)
+
+    // vacuum sweeps the torn generation with the retired one
+    assert(Similarity.ivfPqIndexVacuum(spark, dir).filesDeleted > 0)
+    assert(!new java.io.File(s"$dir/g000002").exists(),
+      "vacuum must remove the torn generation directory")
+    assert(!new java.io.File(s"$dir/g000001").exists())
+    assert(serve() === v2)
   }
 
   test("an empty training corpus fails loudly at build, not obscurely later") {

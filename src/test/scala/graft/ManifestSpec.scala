@@ -306,4 +306,81 @@ class ManifestSpec extends SparkSpec {
     assert(TextIndex.bm25SearchIndex(spark, textDir,
       Seq("sidecar"), k = 5).count() === 5)
   }
+
+  test("every build face leaves a committed manifest, day-zero builds included") {
+    // the invariant the read, append and compaction faces rely on: no
+    // build face returns with a manifest-less tree, so there is no
+    // listing fallback to keep
+    import spark.implicits._
+    import graft.io.{BandIndex, CorpusStore}
+    def committed(dir: String) = Manifest.current(spark, dir).isDefined
+    def mkDir(p: String) = SparkSpec.tempDir(p).toString
+    val d0 = docs.filter(col("doc_id") < 40)
+    for (input <- Seq(d0, d0.limit(0))) {
+      val text = mkDir("graft-inv-text")
+      TextIndex.writeIndex(input, "doc_id", "text", text, buckets = 4)
+      assert(committed(text), "TextIndex.writeIndex")
+      val band = mkDir("graft-inv-band")
+      BandIndex.writeIndex(input, "doc_id", "text", band, buckets = 4)
+      assert(committed(band), "BandIndex.writeIndex")
+      val seen = mkDir("graft-inv-seen")
+      SeenSet.writeSet(input.select(col("text").as("url")), "url", seen,
+        buckets = 4)
+      assert(committed(seen), "SeenSet.writeSet")
+      val store = mkDir("graft-inv-store")
+      CorpusStore.write(input.select("doc_id", "text"), "doc_id", store,
+        buckets = 4)
+      assert(committed(store), "CorpusStore.write")
+    }
+    // IVF+PQ has no day-zero build (an empty training corpus fails at
+    // build — IvfPqIndexSpec pins it)
+    val vec = mkDir("graft-inv-vec")
+    val e0 = (0L until 40L).map(i =>
+      (i, (0 until 8).map(j => math.sin(i * 3.0 + j)))).toDF("vec_id", "v")
+    Similarity.ivfPqIndexWrite(e0, "vec_id", "v", vec,
+      dims = 8, nCentroids = 4, m = 2, codes = 8)
+    assert(committed(vec), "Similarity.ivfPqIndexWrite")
+  }
+
+  test("a manifest-less dir fails serving with the named error, never a listing read") {
+    import spark.implicits._
+    import graft.io.CorpusStore
+    def dropManifest(dir: String): Unit = {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
+      }
+      rm(new java.io.File(s"$dir/manifest"))
+    }
+    def named(dir: String, face: String)(serve: => Any): Unit = {
+      val e = intercept[Manifest.MissingManifestException](serve)
+      assert(e.getMessage.contains(dir) && e.getMessage.contains(face),
+        s"the error must name the dir and $face: ${e.getMessage}")
+    }
+    val text = SparkSpec.tempDir("graft-nomf-text").toString
+    TextIndex.writeIndex(docs.filter(col("doc_id") < 40), "doc_id", "text",
+      text, buckets = 4)
+    dropManifest(text)
+    named(text, "TextIndex.writeIndex") {
+      TextIndex.bm25SearchIndex(spark, text, Seq("the"), k = 3).collect()
+    }
+
+    val store = SparkSpec.tempDir("graft-nomf-store").toString
+    CorpusStore.write((0 until 20).map(i => (i.toLong, s"doc $i"))
+      .toDF("doc_id", "text"), "doc_id", store, buckets = 4)
+    dropManifest(store)
+    named(store, "CorpusStore.write") {
+      CorpusStore.read(spark, store).collect()
+    }
+
+    val vec = SparkSpec.tempDir("graft-nomf-vec").toString
+    val e0 = (0L until 40L).map(i =>
+      (i, (0 until 8).map(j => math.sin(i * 3.0 + j)))).toDF("vec_id", "v")
+    Similarity.ivfPqIndexWrite(e0, "vec_id", "v", vec,
+      dims = 8, nCentroids = 4, m = 2, codes = 8)
+    dropManifest(vec)
+    named(vec, "Similarity.ivfPqIndexWrite") {
+      Similarity.ivfPqIndexTopK(spark, vec, e0.limit(3), "vec_id", "v",
+        k = 3, nProbe = 2).collect()
+    }
+  }
 }

@@ -171,74 +171,6 @@ class TextIndexSpec extends SparkSpec {
     assert(statsBatchDirs(dir).length === 1 && search(dir, 8) === pre)
   }
 
-  test("a torn ledger swap recovers: committed completes, uncommitted drops") {
-    import org.apache.spark.sql.functions.{col, size}
-    import spark.implicits._
-    val dir = SparkSpec.tempDir("graft-ti-swap").toString
-    TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 8)
-    // the ledger SWAP protocol belongs to the pre-manifest legacy
-    // layout (manifest trees consolidate by snapshot commit and never
-    // swap) — construct that layout by stripping the manifest
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf); f.delete(): Unit
-    }
-    rmrf(new java.io.File(s"$dir/manifest"))
-    val pre = search(dir, 8)
-    val totals = docs.select(
-        graft.functions.TextFunctions.tokens("text").as("toks"))
-      .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.sum(size(col("toks"))).cast("long"))
-      .head()
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
-    }
-    // COMMITTED swap + stats already deleted (crash between the delete
-    // and the rename): the next read must complete the swap and serve
-    Seq((totals.getLong(0), totals.getLong(1), 8))
-      .toDF("n_docs", "sum_dl", "buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/stats.swap/batch=base")
-    new java.io.File(s"$dir/stats.swap/_GRAFT_COMMIT").createNewFile()
-    rm(new java.io.File(s"$dir/stats"))
-    assert(search(dir, 8) === pre, "a committed swap must complete and serve")
-    assert(new java.io.File(s"$dir/stats").exists())
-    assert(!new java.io.File(s"$dir/stats.swap").exists())
-    // UNCOMMITTED swap (crash before the mark — no sentinel at the swap
-    // ROOT; the batch subdir's own _SUCCESS does not commit the swap):
-    // ignored by readers (only the maintainer clears stale builds), the
-    // old ledger serves
-    Seq((1L, 1L, 8)).toDF("n_docs", "sum_dl", "buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/stats.swap/batch=base")
-    assert(search(dir, 8) === pre, "an uncommitted swap must be ignored")
-    assert(new java.io.File(s"$dir/stats.swap").exists(),
-      "readers leave the uncommitted swap for the maintainer")
-  }
-
-  test("a full rebuild invalidates a stale committed ledger swap") {
-    // the r18 review's resurrection window: a consolidation crash on the
-    // OLD index leaves a COMMITTED stats.swap; a from-scratch writeIndex
-    // must invalidate it, or the first read's swapRecover would install
-    // the old corpus's totals (and possibly bucket count) OVER the fresh
-    // ledger — silently corrupting every score
-    import spark.implicits._
-    val dir = SparkSpec.tempDir("graft-ti-stale").toString
-    TextIndex.writeIndex(docs.filter(
-      org.apache.spark.sql.functions.col("doc_id") < 100),
-      "doc_id", "text", dir, buckets = 8)
-    // the crashed old consolidation: committed, WRONG totals + buckets
-    Seq((999999L, 999999L, 4)).toDF("n_docs", "sum_dl", "buckets")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/stats.swap/batch=base")
-    new java.io.File(s"$dir/stats.swap/_GRAFT_COMMIT").createNewFile()
-    TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 8)
-    assert(!new java.io.File(s"$dir/stats.swap").exists(),
-      "the rebuild must drop the stale committed swap")
-    val dirRef = SparkSpec.tempDir("graft-ti-stale-f").toString
-    TextIndex.writeIndex(docs, "doc_id", "text", dirRef, buckets = 8)
-    assert(search(dir, 8) === search(dirRef, 8),
-      "the rebuilt index must serve its own totals, not the resurrection")
-  }
-
   test("day-zero index: built empty, serves empty, grows by append") {
     // the steady-state loop's bootstrap shape: the index exists before
     // any document does. Every face must work — search serves EMPTY
