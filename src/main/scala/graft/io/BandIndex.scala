@@ -194,13 +194,13 @@ object BandIndex {
 
   /** [[probe]] with a caller scope: `consume` runs against the
     * candidate-pair frame and the probe's internal pin is released on
-    * exit ([[Dedup.release]]). The frame must not escape `consume`. */
+    * exit ([[Pin.release]]). The frame must not escape `consume`. */
   def probeScoped[A](
       spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, textCol: String
   )(consume: DataFrame => A): A = {
     val (pairs, pin) = probePinned(spark, dir, batch, idCol, textCol)
-    try consume(pairs) finally Dedup.release(pin)
+    try consume(pairs) finally Pin.release(pin)
   }
 
   private def probePinned(

@@ -69,7 +69,7 @@ object Compact {
     try
       pinned.repartition(col(bucketCol))
         .write.mode("append").partitionBy(bucketCol).parquet(treeDir)
-    finally graft.operators.Dedup.release(pinned)
+    finally Pin.release(pinned)
     // DATA → COMMIT → RETIRE (the Manifest protocol): the old files
     // leave the live set but stay on disk for pinned readers until
     // vacuum

@@ -131,7 +131,7 @@ object CorpusStore {
       bucketOf(col(idCol), storedBuckets(spark, dir))).localCheckpoint()
     try rewriteKeyed(spark, dir,
       flagged.select(col(idCol), col("__graft_bucket")), Some(flagged), idCol)
-    finally graft.operators.Dedup.release(flagged)
+    finally Pin.release(flagged)
   }
 
   /** Keyed delete: standing rows whose id is in `ids` are removed;
@@ -193,9 +193,9 @@ object CorpusStore {
           val dead = snap.under("rows")
             .filter(f => touchedDirs.exists(f.startsWith))
           Manifest.commitAdd(spark, dir, added, dead): Unit
-        } finally graft.operators.Dedup.release(merged)
+        } finally Pin.release(merged)
       }
-    } finally graft.operators.Dedup.release(keys)
+    } finally Pin.release(keys)
   }
 
   /** Watermark-gated install + evict with the keep verdict computed by
@@ -226,7 +226,7 @@ object CorpusStore {
         rewriteKeyed(spark, dir,
           k.select(col(idCol), col("__graft_bucket")).unionByName(e),
           Some(k), idCol)
-      } finally graft.operators.Dedup.release(k)
+      } finally Pin.release(k)
     }
   }
 
@@ -273,8 +273,8 @@ object CorpusStore {
             .unionByName(evictKeys),
           Some(kept), idCol)
       } finally {
-        graft.operators.Dedup.release(gated)
-        graft.operators.Dedup.release(b)
+        Pin.release(gated)
+        Pin.release(b)
       }
     }
   }

@@ -137,7 +137,7 @@ object SeenSet {
         .repartition(col("url_bucket"))
         .write.mode("overwrite").partitionBy("url_bucket").parquet(s"$dir/urls")
       Manifest.initFromListing(spark, dir, Seq("urls")): Unit
-    } finally graft.operators.Dedup.release(u)
+    } finally Pin.release(u)
   }
 
   /** The urls tree's contract schema (url + the bucket key) — what the
@@ -266,7 +266,7 @@ object SeenSet {
       Manifest.commitAdd(spark, dir,
         Manifest.listFiles(spark, dir, "urls").filterNot(before), Nil,
         casRetries): Unit
-    } finally graft.operators.Dedup.release(u)
+    } finally Pin.release(u)
   }
 
   /** Rebuild the Bloom sidecar EXACTLY from the urls store — the
@@ -378,7 +378,7 @@ object SeenSet {
 
   /** [[probeNovel]] with a caller scope: `consume` runs against the
     * novel frame, and the probe's internal pin is released on exit —
-    * the [[graft.operators.Dedup.release]] discipline the batch faces
+    * the [[Pin.release]] discipline the batch faces
     * use, made available to serving callers. The frame must not escape
     * `consume` (its backing blocks are gone after). */
   def probeNovelScoped[A](
@@ -386,7 +386,7 @@ object SeenSet {
       batch: DataFrame, urlCol: String
   )(consume: DataFrame => A): A = {
     val (novel, pin) = probeNovelPinned(spark, dir, batch, urlCol)
-    try consume(novel) finally graft.operators.Dedup.release(pin)
+    try consume(novel) finally Pin.release(pin)
   }
 
   private def probeNovelPinned(

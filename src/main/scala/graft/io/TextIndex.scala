@@ -123,8 +123,8 @@ object TextIndex {
   /** The bucket count the index at `dir` was written with, from the stats
     * ledger. A mismatched caller value would silently split a term's
     * postings across two directories (append) or probe the wrong
-    * directory (search) — so every entry point resolves through here,
-    * and the faces' `buckets` arguments are not consulted. */
+    * directory (search) — so every entry point after the build resolves
+    * through here, and none takes a bucket count. */
   private def storedBuckets(spark: SparkSession, dir: String,
       snap: Manifest.Snapshot): Int =
     statsFrame(spark, dir, snap)
@@ -187,11 +187,10 @@ object TextIndex {
     * yanking bytes from under a pinned reader mid-scan when a caller
     * retried after an ambiguous failure). Retired attempts stay on disk
     * for pinned readers until [[vacuum]]; a torn attempt's files are
-    * orphans no snapshot ever references. `buckets` is not consulted:
-    * the persisted count wins ([[storedBuckets]]). */
+    * orphans no snapshot ever references. The bucket count is the
+    * persisted one ([[storedBuckets]]). */
   def appendToIndex(
-      delta: DataFrame, idCol: String, textCol: String, dir: String,
-      buckets: Int = DefaultBuckets
+      delta: DataFrame, idCol: String, textCol: String, dir: String
   ): Unit = {
     val spark = delta.sparkSession
     val snap = live(spark, dir)
@@ -223,7 +222,7 @@ object TextIndex {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/stats/batch=$tag")
       commitAppend(spark, dir, snap, base, tag)
-    } finally graft.operators.Dedup.release(toks)
+    } finally Pin.release(toks)
   }
 
   /** A per-attempt suffix, so a retry never overwrites committed leaf
@@ -304,7 +303,7 @@ object TextIndex {
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/stats/batch=$tag")
         commitAppend(spark, dir, snap, base, tag)
-      } finally graft.operators.Dedup.release(toks)
+      } finally Pin.release(toks)
     }
   }
 
@@ -347,7 +346,7 @@ object TextIndex {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("term_bucket", "ingest_batch").parquet(s"$dir/postings")
-    finally graft.operators.Dedup.release(consolidated)
+    finally Pin.release(consolidated)
     val added = Manifest.listFiles(spark, dir, "postings")
       .filter(_.contains(s"/ingest_batch=$tag/"))
     val next = Manifest.commitAdd(spark, dir, added, oldPostings, casRetries)
@@ -368,11 +367,10 @@ object TextIndex {
   /** BM25 top-k against a persisted index: the query terms' buckets
     * become a literal partition predicate (query metadata, not row
     * data), postings filter to the exact terms inside those directories,
-    * and scoring matches `Keywords.bm25Search` bit-for-bit. `buckets`
-    * is not consulted: the persisted count wins ([[storedBuckets]]). */
+    * and scoring matches `Keywords.bm25Search` bit-for-bit. The bucket
+    * count is the persisted one ([[storedBuckets]]). */
   def bm25SearchIndex(
       spark: SparkSession, dir: String, queryTerms: Seq[String], k: Int,
-      buckets: Int = DefaultBuckets,
       k1: Double = 1.2, b: Double = 0.75
   ): DataFrame =
     bm25Core(spark, dir, live(spark, dir), queryTerms, k, k1, b)
@@ -468,11 +466,9 @@ object TextIndex {
     *
     * Repeated terms in the phrase read ONE posting (the join dedups by
     * term), and a document lacking any phrase term drops at the inner
-    * join — so the work is |phrase| posting lookups, corpus-size-free.
-    * `buckets` is not consulted, as in [[bm25SearchIndex]]. */
+    * join — so the work is |phrase| posting lookups, corpus-size-free. */
   def phraseSearchIndex(
-      spark: SparkSession, dir: String, phrase: Seq[String],
-      buckets: Int = DefaultBuckets
+      spark: SparkSession, dir: String, phrase: Seq[String]
   ): DataFrame =
     phraseCore(spark, dir, live(spark, dir), phrase)
 

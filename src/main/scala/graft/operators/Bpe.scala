@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.io.Pin
 
 /** Byte-pair-encoding merge induction — the tokenizer-vocabulary
   * learning pass of a training-data pipeline (the SentencePiece/HF
@@ -124,13 +125,13 @@ object Bpe {
         val newSyms = syms.filter(!hasPair).unionByName(rewritten)
           .coalesce(symsParts)
           .localCheckpoint()
-        Dedup.release(pairs); Dedup.release(syms)
+        Pin.release(pairs); Pin.release(syms)
         pairs = newPairs
         syms = newSyms
       }
       r += 1
     }
-    Dedup.release(pairs); Dedup.release(syms)
+    Pin.release(pairs); Pin.release(syms)
     merges.result().toDF("round", "a", "b", "pair_count")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.io.Pin
 
 /** Document deduplication for large-scale corpus preparation: exact
   * (normalized content hash), n-gram Jaccard, and MinHash-LSH near-dup.
@@ -330,7 +331,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("n_shared"),
         round(col("jaccard"), 4).as("jaccard"))
       .localCheckpoint()
-    release(sh)
+    Pin.release(sh)
     out
   }
 
@@ -773,20 +774,17 @@ object Dedup {
     * chains at planetary scale the standard acceleration is
     * large-star/small-star; the loop shape below is the same.)
     * Returns (doc_id, component) for every node that appears in a pair.
+    * Runs in one [[Pin.scope]]: only the result's pin outlives the call
+    * (a `cc-*` spill under `checkpointDir` when set).
     */
   def connectedComponents(
       pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
       maxIterations: Int = 20, checkpointDir: Option[String] = None
-  ): DataFrame = (checkpointDir match {
-    // checkpointDir swaps the per-iteration pins from localCheckpoint
-    // blocks (die with their executor) to reliable parquet spills —
-    // the option the pipeline orchestrators thread through so their
-    // executor-loss-safety claim covers the CC iterations too
-    case Some(d) => freeingIntermediateSpills(pairs.sparkSession, d) _
-    case None => freeingIntermediateCheckpoints(pairs.sparkSession) _
-  }) { ck =>
-    // eager localCheckpoint (`ck`, tracked by the wrapper) instead of
-    // cache: each iteration references the previous labels twice, so
+  ): DataFrame = Pin.scope(pairs.sparkSession, checkpointDir, "cc") { ck =>
+    // `ck` pins eagerly — a localCheckpoint, or under checkpointDir a
+    // reliable parquet spill, so the pipeline orchestrators' executor-
+    // loss safety covers the CC iterations too — instead of caching:
+    // each iteration references the previous labels twice, so
     // without lineage truncation the logical plan DOUBLES per iteration —
     // exponential analyzer/explain cost that OOMs the driver on long
     // chains (near-dup cliques converge in 2-3 rounds and never showed it)
@@ -811,10 +809,10 @@ object Dedup {
       converged = changes == 0
       iterations += 1
     }
-    // the result is ITSELF an eager localCheckpoint: self-contained
-    // (MEMORY_AND_DISK) data, so the wrapper can free the iteration
-    // checkpoints it was computed from without risking an unrecomputable
-    // cache eviction; callers free it with [[release]] when done
+    // the result is ITSELF a pin: self-contained data, so the scope can
+    // free the iteration pins it was computed from without risking an
+    // unrecomputable cache eviction; callers free it with [[Pin.release]]
+    // when done, or an enclosing [[Pin.scope]] does
     ck(labels.select(col("node").as("doc_id"), col("comp").as("component")))
   }
 
@@ -1138,150 +1136,6 @@ object Dedup {
     emb.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** The persisted RDD backing a localCheckpoint'd DataFrame (None for any
-    * other plan shape): `Dataset.localCheckpoint` wraps exactly the RDD it
-    * persisted in a `LogicalRDD` leaf, so matching the analyzed plan
-    * identifies it without touching any global SparkContext state. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
-
-  /** Frees the persisted RDD backing a checkpoint-backed DataFrame returned
-    * by [[connectedComponents]]/[[connectedComponentsStar]] (plain
-    * `unpersist()` on such a Dataset is a no-op — it only drops
-    * CacheManager entries, and checkpoints persist the RDD directly).
-    * No-op for non-checkpoint-backed frames. The frame is NOT recomputable
-    * afterwards (its lineage was truncated) — release only when done. */
-  def release(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(unpersistQuietly(_, blocking = false))
-
-  private val quietLock = new Object
-
-  /** Unpersist `rdd` without the WARN Spark logs for every freed local
-    * checkpoint ("RDD N was locally checkpointed, its lineage has been
-    * truncated"): freeing a checkpoint this engine took is the point, so
-    * that one logger — the RDD's own class — is raised to ERROR for the
-    * call and restored after, and the same warning elsewhere still
-    * shows. Serialized, so two overlapping calls cannot restore each
-    * other's raised level. */
-  private[graft] def unpersistQuietly(
-      rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
-    quietLock.synchronized {
-      val log = rdd.getClass.getName
-      val level = org.apache.logging.log4j.LogManager.getLogger(log).getLevel
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        log, org.apache.logging.log4j.Level.ERROR)
-      try rdd.unpersist(blocking)
-      finally
-        org.apache.logging.log4j.core.config.Configurator.setLevel(log, level)
-    }
-
-  /** Runs `body`, handing it an eager-localCheckpoint function `ck` that
-    * records the EXACT RDD each checkpoint persisted; on completion every
-    * recorded RDD except the one backing the result is freed. Tracking the
-    * ids as they are created (instead of diffing global
-    * `sc.getPersistentRDDs`) keeps concurrent persists on the same
-    * SparkContext — a second CC call, a battery cache materializing — safe:
-    * this wrapper can only ever unpersist checkpoints it took itself.
-    * Without the freeing, the per-iteration checkpoint blocks of the CC
-    * loops would linger until driver GC — re-creating exactly the battery
-    * cache pressure the bench family barrier fixed. */
-  private def freeingIntermediateCheckpoints(
-      spark: org.apache.spark.sql.SparkSession)(
-      body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
-    val created = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    val ck: DataFrame => DataFrame = { df =>
-      val out = df.localCheckpoint(true)
-      checkpointRdd(out).foreach(created += _)
-      out
-    }
-    val result = body(ck)
-    val keep = checkpointRdd(result).map(_.id).toSet
-    created.filterNot(r => keep.contains(r.id))
-      .foreach(unpersistQuietly(_, blocking = false))
-    result
-  }
-
-  /** The RELIABLE twin of [[freeingIntermediateCheckpoints]]: each `ck`
-    * is a parquet round-trip under `dir` (survives executor loss on any
-    * Hadoop filesystem — localCheckpoint blocks die with their
-    * executor), and every spill EXCEPT the result's is deleted on
-    * completion. The result's spill is identified by matching the read
-    * paths the result plan actually references (the reliable analogue of
-    * `checkpointRdd(result)` in the localCheckpoint twin) — NOT by the
-    * "result is the last ck" position, which a body refactor could
-    * silently break by returning an earlier ck frame. On failure, ALL
-    * spills are deleted — a mid-CC exception must not leak one parquet
-    * tree per completed iteration under the caller's checkpointDir. The
-    * surviving result spill lives under `dir` for as long as the caller
-    * reads the frame: the caller owns `dir` retention (see
-    * [[graft.pipeline.CrawlPipelineConfig]]). */
-  private def freeingIntermediateSpills(
-      spark: org.apache.spark.sql.SparkSession, dir: String)(
-      body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
-    val paths = scala.collection.mutable.ArrayBuffer.empty[String]
-    val ck: DataFrame => DataFrame = { df =>
-      val p = s"$dir/cc-${java.util.UUID.randomUUID()}"
-      df.write.parquet(p)
-      paths += p
-      spark.read.parquet(p)
-    }
-    val hconf = spark.sessionState.newHadoopConf()
-    def delete(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      // best-effort: cleanup never masks the real failure — but only for
-      // NON-fatal errors; swallowing an OutOfMemoryError here would hide
-      // the real problem, and eating an InterruptedException would lose
-      // the thread's interrupt status (restore it and move on)
-      try hp.getFileSystem(hconf).delete(hp, true)
-      catch {
-        case _: InterruptedException => Thread.currentThread().interrupt()
-        case scala.util.control.NonFatal(_) => ()
-      }
-    }
-    var result: DataFrame = null
-    try {
-      result = body(ck)
-      // the paths the result's analyzed plan actually scans; every ck dir
-      // is UUID-named, so basename containment is collision-free.
-      // collectWithSubqueries, not collect: a spill referenced only
-      // through an IN/EXISTS/scalar subquery would otherwise read as
-      // intermediate and be deleted under the returned frame
-      val referenced = result.queryExecution.analyzed.collectWithSubqueries {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty[String]
-          }
-      }.flatten
-      val keep: String => Boolean = { p =>
-        val base = new org.apache.hadoop.fs.Path(p).getName
-        referenced.exists(_.contains(base))
-      }
-      // fall back to the last-ck convention only if plan inspection finds
-      // nothing (e.g. a body that returns a non-ck frame)
-      val survivors =
-        if (paths.exists(keep)) paths.filter(keep) else paths.takeRight(1)
-      paths.filterNot(survivors.contains).foreach(delete)
-      result
-    } catch {
-      // failure cleanup runs in a CATCH (with suppression), not a bare
-      // finally: a fatal error escaping delete() inside a finally would
-      // REPLACE the pending root-cause exception (classic finally
-      // masking); here it attaches as suppressed and the original
-      // failure always propagates
-      case e: Throwable =>
-        if (result == null) {
-          try paths.foreach(delete)
-          catch { case fatal: Throwable => e.addSuppressed(fatal) }
-        }
-        throw e
-    }
-  }
-
   /** Connected components via alternating large-star/small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14) — same output contract as [[connectedComponents]], but
@@ -1295,7 +1149,7 @@ object Dedup {
   def connectedComponentsStar(
       pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
       maxIterations: Int = 20
-  ): DataFrame = freeingIntermediateCheckpoints(pairs.sparkSession) { ck =>
+  ): DataFrame = Pin.scope(pairs.sparkSession, None, "cc") { ck =>
     // large-star: every neighbor v > u links to m(u) = min(N(u) ∪ {u})
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.io.Pin
+
 /** Link-graph analytics. PageRank is the web-curation quality signal the
   * large corpus pipelines derive from a crawl's link graph (harmonic/
   * PageRank centrality feeds quality weighting); here it runs over any
@@ -174,7 +176,7 @@ object Graph {
       .select(col("node"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .localCheckpoint()
-    Dedup.release(ornt)
+    Pin.release(ornt)
     und.unpersist()
     out
   }
@@ -401,7 +403,7 @@ object Graph {
     }
     val out = sp.createDataset(ArraySeq.unsafeWrapArray(outArr))
       .toDF("node", "outdeg", "rank")
-    Dedup.release(deg)
+    Pin.release(deg)
     e.unpersist()
     out
   }
@@ -460,7 +462,7 @@ object Graph {
         val prev = lastCk
         ranks = ranks.localCheckpoint()
         lastCk = Some(ranks)
-        prev.foreach(Dedup.release) // free the superseded checkpoint RDD
+        prev.foreach(Pin.release) // free the superseded checkpoint RDD
       }
     }
     val out = ranks.alias("rk")
@@ -469,8 +471,8 @@ object Graph {
         round(col("rk.rank"), 6).as("rank"))
       // materialize before dropping the caches the lineage leans on
       .localCheckpoint()
-    lastCk.foreach(Dedup.release)
-    Dedup.release(deg)
+    lastCk.foreach(Pin.release)
+    Pin.release(deg)
     e.unpersist()
     out
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.io.Pin
 
 /** TF-IDF keyword extraction: the top-k terms of each document scored by
   * term frequency x smoothed inverse document frequency — the standard
@@ -271,7 +272,7 @@ object Keywords {
       .localCheckpoint() // one weight pass feeds both serving sides
     val out = dsirServe(w, topK)
       .localCheckpoint() // materialize so the weight checkpoint can free
-    Dedup.release(w)
+    Pin.release(w)
     out
   }
 
@@ -426,8 +427,8 @@ object Keywords {
 
   /** [[stupidBackoffLogProb]] with a caller scope: `consume` runs
     * against the per-doc score frame and the LM count-table pins are
-    * released on exit ([[graft.operators.Dedup.release]]). The frame
-    * must not escape `consume`. */
+    * released on exit ([[Pin.release]]). The frame must not escape
+    * `consume`. */
   def stupidBackoffLogProbScoped[A](
       docs: DataFrame, idCol: String, textCol: String,
       lmDocs: DataFrame, alpha: Double = 0.4
@@ -435,7 +436,7 @@ object Keywords {
     val (scored, pins) =
       stupidBackoffPinned(docs, idCol, textCol, lmDocs, alpha)
     try consume(scored)
-    finally pins.foreach(graft.operators.Dedup.release)
+    finally pins.foreach(Pin.release)
   }
 
   private def stupidBackoffPinned(

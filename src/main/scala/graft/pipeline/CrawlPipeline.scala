@@ -24,11 +24,7 @@ final case class CrawlPipelineConfig(
     nearBands: Int = 4,
     nearMaxHamming: Int = 3,
     nearMaxBandFreq: Option[Int] = None,
-    checkpointDir: Option[String] = None,
-    // kept-frame semi-join tiers (see KeepJoin): raise on big-executor
-    // clusters, lower for memory-tight ones
-    keepIdsBroadcastLimit: Long = KeepJoin.BroadcastIdLimit,
-    keepIdsBloomLimit: Long = KeepJoin.BloomIdLimit)
+    checkpointDir: Option[String] = None)
 
 final case class CrawlPipelineResult(kept: DataFrame, summary: DataFrame)
 
@@ -39,26 +35,16 @@ final case class CrawlPipelineResult(kept: DataFrame, summary: DataFrame)
   * entirely from the oracle-gated operators, and returns both the kept
   * page records and a per-stage funnel summary (stage, n_in, n_out).
   *
-  * Execution contract (the [[DocPipeline]] id-set discipline, applied
-  * to a source whose "text" is buried inside binary WARC payloads): the
-  * WARC files are parsed in ONE scan, and every per-page signal any
-  * enabled stage decides on (url/host, extracted-text length, language,
-  * quality keep, content hash, simhash) is computed in that same pass;
-  * only the resulting metadata frame (~100 bytes/page, never the
-  * payloads or extracted text) is pinned — `localCheckpoint` by
-  * default, a RELIABLE parquet spill under `cfg.checkpointDir` when set
-  * (executor-loss-safe on a real cluster; see [[Pin]]). The robots
-  * decision — the one signal needing the per-host broadcast-join shape
-  * — runs over the checkpointed metadata ([[Robots.filterByRobots]]),
-  * not the corpus. The gate stages are then SEQUENTIAL SURVIVAL FLAGS
-  * on that one metadata frame, so the funnel through exact dedup counts
-  * in ONE aggregation job; only near-dedup — whose banded self-join +
-  * connected components need their own plan shapes — runs as its own
-  * jobs over the surviving (id, simhash) sliver (16 bytes/page). The
-  * kept frame is the WARC records re-parsed once and semi-joined
-  * against the final id set: at 100 TB the WARC bytes are read exactly
-  * twice and written zero times, and nothing wider than metadata ever
-  * shuffles.
+  * Execution contract: [[Funnel]], over a source whose "text" is buried
+  * inside binary WARC payloads. The WARC files are parsed in ONE scan
+  * that computes every signal an enabled gate decides on (url/host,
+  * canonical url, extracted-text length, language, quality keep, content
+  * hash, simhash); only that metadata (~100 bytes/page, never payloads or
+  * extracted text) is pinned, straight off the scan, so the robots
+  * decision (the per-host broadcast-join shape of
+  * [[Robots.filterByRobots]]) reads the pin, not the corpus. The kept
+  * frame re-parses the WARC records once: the WARC bytes are read
+  * exactly twice and written zero times.
   *
   * Page identity: `file_id * PageIdStride + rec_idx` — stable across
   * re-parses (WARC records are positional), monotone in (file, record)
@@ -110,9 +96,7 @@ object CrawlPipeline {
       robots: Option[DataFrame],
       cfg: CrawlPipelineConfig = CrawlPipelineConfig()
   ): CrawlPipelineResult = {
-    val spark = warcFiles.sparkSession
     val doRobots = cfg.robotsGate && robots.nonEmpty
-    val stages = Seq.newBuilder[(String, Long, Long)]
 
     // the ONE corpus-reading plan: WARC walk, response filter, page ids
     val responses = Warc.records(warcFiles, idCol)
@@ -120,19 +104,9 @@ object CrawlPipeline {
         col("http_body").isNotNull && col("target_uri").isNotNull)
       .withColumn("_id", pageId(col("id"), col("rec_idx")))
 
-    if (!cfg.dedupUrl && !doRobots && !cfg.extractGate && !cfg.langGate &&
-      !cfg.qualityGate && !cfg.dedupExact && !cfg.dedupNear) {
-      // nothing to decide: the page universe passes through untouched
-      val n = responses.count()
-      stages += (("00_responses", n, n))
-      return CrawlPipelineResult(responses.drop("_id"),
-        spark.createDataFrame(stages.result()).toDF("stage", "n_in", "n_out"))
-    }
-
     // the single signal projection over that scan: extracted text is an
     // intermediate column consumed in-plan (adjacent projects collapse),
-    // never checkpointed; only the signals enabled stages will read are
-    // computed
+    // never pinned; only the signals enabled stages will read are computed
     val withText = responses.select(col("_id"), col("target_uri").as("_url"),
       TextFunctions.htmlText(col("http_body")).as("text"))
     val sigCols: Seq[Column] =
@@ -156,173 +130,47 @@ object CrawlPipeline {
         else Nil) ++
         (if (cfg.dedupNear) Seq(TextFunctions.simHash("text").as("_sh"))
         else Nil)
-    // failure cleanup: every reliable spill created below (pins, the CC
-    // scratch subdir) is tracked, and an exception anywhere in the
-    // funnel drops them all instead of leaving superseded scratch behind
-    // for the caller's per-run-dir deletion to catch eventually. On
-    // SUCCESS nothing here runs — the pins the returned frames still
-    // read stay caller-owned, per the Pin contract. Already-dropped
-    // entries are harmless to re-drop (hadoop delete on a missing path
-    // is a no-op).
-    val scratch = scala.collection.mutable.ArrayBuffer.empty[String]
-    def cleanupOnFailure[T](body: => T): T =
-      try body
-      catch {
-        case e: Throwable =>
-          // the outer catch re-THROWS (fatal errors included) — it only
-          // adds cleanup; the per-path drop swallows non-fatal errors
-          // only, restoring interrupt status rather than eating it, and
-          // a FATAL error escaping a drop is attached as suppressed so
-          // it can never REPLACE the root-cause failure `e`
-          try scratch.foreach { p =>
-            try Pin.dropPath(spark, p)
-            catch {
-              case _: InterruptedException => Thread.currentThread().interrupt()
-              case scala.util.control.NonFatal(_) => ()
-            }
-          } catch { case fatal: Throwable => e.addSuppressed(fatal) }
-          throw e
-      }
-    def tracked(p: Pin.Pinned): Pin.Pinned = {
-      p.path.foreach(scratch += _); p
-    }
-
-    cleanupOnFailure {
-    val sigPin = tracked(Pin.pin(withText.select(sigCols: _*), cfg.checkpointDir))
-    var meta = sigPin.df
-
-    if (doRobots) {
-      // per-host legality over the metadata sliver — the robots table
-      // broadcasts inside filterByRobots; the metadata-sized join back
-      // onto `meta` is the same shape DocPipeline uses for contamination
-      val dec = Robots
+    def signals(pin: DataFrame => DataFrame): DataFrame = {
+      val meta = pin(withText.select(sigCols: _*))
+      if (!doRobots) meta
+      else meta.join(Robots
         .filterByRobots(meta, robots.get, "_id", "_url", col("_host"), cfg.agent)
-        .select(col("id").as("_id"), col("allowed").as("_allowed"))
-      meta = meta.join(dec, Seq("_id"))
+        .select(col("id").as("_id"), col("allowed").as("_allowed")), Seq("_id"))
     }
 
-    // sequential survival flags: each enabled gate ANDs its rule onto
-    // the previous stage's flag (the DocPipeline funnel contract)
-    var survive = lit(true)
-    val gateFlags = Seq.newBuilder[String]
-    val gateNames = Seq.newBuilder[String]
-    def gate(name: String, flag: String, enabled: Boolean)(rule: Column): Unit =
-      if (enabled) {
-        survive = survive && rule
-        meta = meta.withColumn(flag, survive)
-        gateFlags += flag; gateNames += name
-      }
-    if (cfg.dedupUrl) {
-      // canonical-URL keep, FIRST: the commonest crawl dup (one page
-      // under many URL aliases) never reaches the content stages. The
-      // canonical is the min-id fetch AMONG COPIES THAT PASS the other
-      // per-page gates (robots/extract/lang/quality — their signals are
-      // already in meta), falling back to the plain min id when no copy
-      // passes: a blocked or garbled fetch must never shadow a clean
-      // copy of the same page (the 50_exact_dedup principle, applied at
-      // URL grain — a plain min-id pick would silently LOSE the page).
-      // Still one metadata window; a page whose URL fails to
-      // canonicalize is its own identity (the null partition's min is
-      // never consulted).
-      val pagePass = Seq(
-        if (doRobots) Some(col("_allowed")) else None,
-        if (cfg.extractGate) Some(col("_extract_ok")) else None,
-        if (cfg.langGate) Some(col("_lang").isin(cfg.allowedLangs: _*))
-        else None,
-        if (cfg.qualityGate) Some(col("_keep_q")) else None
-      ).flatten.reduceOption(_ && _).getOrElse(lit(true))
-      val w = Window.partitionBy("_curl")
-      meta = meta.withColumn("_canon_curl",
-        coalesce(min(when(pagePass, col("_id"))).over(w),
-          min(col("_id")).over(w)))
-      gate("05_url_dedup", "_s_url", enabled = true)(
-        col("_curl").isNull || col("_id") === col("_canon_curl"))
-    }
-    gate("10_robots", "_s_robots", doRobots)(col("_allowed"))
-    gate("20_extract", "_s_extract", cfg.extractGate)(col("_extract_ok"))
-    gate("30_lang", "_s_lang", cfg.langGate)(
-      col("_lang").isin(cfg.allowedLangs: _*))
-    gate("40_quality", "_s_quality", cfg.qualityGate)(col("_keep_q"))
-    if (cfg.dedupExact) {
-      // canonical = min id AMONG SURVIVORS of the earlier gates — one
-      // window exchange on the metadata frame; rows already dead stay
-      // dead through the cumulative AND regardless of the window value
-      val priorSurvive = survive
-      meta = meta.withColumn("_canon",
-        min(when(priorSurvive, col("_id"))).over(Window.partitionBy("_hash")))
-      gate("50_exact_dedup", "_s_exact", enabled = true)(
-        col("_id") === col("_canon"))
-    }
+    // canonical-URL keep, FIRST: the commonest crawl dup (one page under
+    // many URL aliases) never reaches the content stages. The canonical is
+    // the min-id fetch AMONG COPIES THAT PASS the other per-page gates,
+    // falling back to the plain min id when no copy passes: a blocked or
+    // garbled fetch must never shadow a clean copy of the same page. A
+    // page whose URL fails to canonicalize is its own identity.
+    val pagePass = Seq(
+      if (doRobots) Some(col("_allowed")) else None,
+      if (cfg.extractGate) Some(col("_extract_ok")) else None,
+      if (cfg.langGate) Some(col("_lang").isin(cfg.allowedLangs: _*)) else None,
+      if (cfg.qualityGate) Some(col("_keep_q")) else None
+    ).flatten.reduceOption(_ && _).getOrElse(lit(true))
+    val byUrl = Window.partitionBy("_curl")
+    val gates = Seq(
+      cfg.dedupUrl -> Funnel.Gate("05_url_dedup", _ =>
+        col("_curl").isNull || col("_id") === coalesce(
+          min(when(pagePass, col("_id"))).over(byUrl), min(col("_id")).over(byUrl))),
+      doRobots -> Funnel.Gate("10_robots", _ => col("_allowed")),
+      cfg.extractGate -> Funnel.Gate("20_extract", _ => col("_extract_ok")),
+      cfg.langGate -> Funnel.Gate("30_lang", _ =>
+        col("_lang").isin(cfg.allowedLangs: _*)),
+      cfg.qualityGate -> Funnel.Gate("40_quality", _ => col("_keep_q")),
+      // canonical = min id AMONG SURVIVORS of the earlier gates
+      cfg.dedupExact -> Funnel.Gate("50_exact_dedup", prior =>
+        col("_id") === min(when(prior, col("_id"))).over(Window.partitionBy("_hash")))
+    ).collect { case (true, g) => g }
+    val near = if (!cfg.dedupNear) None else Some(Funnel.Step("60_near_dedup", surv =>
+      Dedup.simHashPairsFromHashes(
+        surv.select(col("_id").as("doc_id"), col("_sh").as("sh")),
+        cfg.nearBands, cfg.nearMaxHamming, cfg.nearMaxBandFreq)))
 
-    val flags = gateFlags.result()
-    val mPin = tracked(Pin.pin(meta, cfg.checkpointDir))
-    val m = mPin.df
-    // the signal pin is fully superseded by the flagged pin just written
-    Pin.drop(spark, sigPin)
-    // the whole gate funnel counted in ONE aggregation job
-    val countCols = count(lit(1)).as("_n0") +:
-      flags.map(f => sum(when(col(f), 1L).otherwise(0L)).as(s"_n$f"))
-    val countsRow = m.agg(countCols.head, countCols.tail: _*).collect()(0)
-    // sum() over zero rows is NULL — an empty crawl must produce an
-    // all-zero funnel
-    val funnel: Seq[Long] = (0 to flags.size).map(i =>
-      if (countsRow.isNullAt(i)) 0L else countsRow.getLong(i))
-    stages += (("00_responses", funnel.head, funnel.head))
-    gateNames.result().zipWithIndex.foreach { case (name, i) =>
-      stages += ((name, funnel(i), funnel(i + 1)))
-    }
-
-    val lastFlag = flags.lastOption.map(col).getOrElse(lit(true))
-    var finalIds = m.filter(lastFlag).select(col("_id"))
-    var finalCount = funnel.last
-    if (cfg.dedupNear) {
-      // near-dedup over the surviving (id, simhash) sliver: banded
-      // candidates, components, drop non-canonical members. Its own
-      // jobs — the self-join and the CC iterations have their own plan
-      // shapes — but still metadata-only work.
-      val sliver = m.filter(lastFlag)
-        .select(col("_id").as("doc_id"), col("_sh").as("sh"))
-      val pairs = Dedup.simHashPairsFromHashes(sliver, cfg.nearBands,
-        cfg.nearMaxHamming, cfg.nearMaxBandFreq)
-      // CC gets a scratch SUBDIR of the reliable checkpoint dir: its
-      // iteration spills self-clean, and the result spill — dead once
-      // the kept-id sliver below is pinned — is deleted wholesale here
-      val ccDir = cfg.checkpointDir
-        .map(d => s"$d/cc-scratch-${java.util.UUID.randomUUID()}")
-      ccDir.foreach(scratch += _)
-      val labels = Dedup.connectedComponents(pairs, checkpointDir = ccDir)
-      val dropIds = labels.filter(col("component") =!= col("doc_id"))
-        .select(col("doc_id").as("_drop_id"))
-      val kept = tracked(Pin.pin(
-        finalIds.join(dropIds, col("_id") === col("_drop_id"), "left_anti"),
-        // id-only frame (8 bytes/row) — pinning it lets the CC label
-        // checkpoint be released NOW instead of leaking for the JVM
-        // lifetime while `kept` lazily references it
-        cfg.checkpointDir)).df
-      val nNear = kept.count()
-      stages += (("60_near_dedup", funnel.last, nNear))
-      Dedup.release(labels)
-      ccDir.foreach(Pin.dropPath(spark, _))
-      finalIds = kept.select(col("_id"))
-      finalCount = nNear
-    }
-
-    // the second (and last) WARC read: the full records semi-joined
-    // against the final id set. SIZE-GATED (KeepJoin): the funnel
-    // already counted the kept ids, so the id sliver broadcasts when it
-    // fits — the re-parsed payloads stream through ONE stage and never
-    // serialize into shuffle files. The naive unhinted semi-join
-    // sort-merged here (the pinned id frame reports no size statistic),
-    // shuffling every kept-candidate payload — the sf10 decade
-    // rehearsal measured that as the pipeline's dominant cost
-    // (SCALE.md round-16).
-    val kept = KeepJoin.semi(responses, col("_id"),
-        finalIds, "_id", finalCount,
-        cfg.keepIdsBroadcastLimit, cfg.keepIdsBloomLimit)
-      .drop("_id")
-    val summary = spark.createDataFrame(stages.result())
-      .toDF("stage", "n_in", "n_out")
-    CrawlPipelineResult(kept, summary)
-    } // cleanupOnFailure
+    val (kept, summary) = Funnel.run(responses, col("_id"), "00_responses",
+      cfg.checkpointDir, signals, gates, near, None)
+    CrawlPipelineResult(kept.drop("_id"), summary)
   }
 }

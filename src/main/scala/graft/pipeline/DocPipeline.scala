@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,11 +22,7 @@ final case class DocPipelineConfig(
     nearBands: Int = 16,
     nearMinSigAgreement: Option[Double] = None,
     tokenBudget: Option[Long] = None,
-    checkpointDir: Option[String] = None,
-    // kept-frame semi-join tiers (see KeepJoin): raise on big-executor
-    // clusters, lower for memory-tight ones
-    keepIdsBroadcastLimit: Long = KeepJoin.BroadcastIdLimit,
-    keepIdsBloomLimit: Long = KeepJoin.BloomIdLimit)
+    checkpointDir: Option[String] = None)
 
 final case class DocPipelineResult(kept: DataFrame, summary: DataFrame)
 
@@ -43,28 +39,14 @@ final case class IncrementalCurationResult(
   * composed entirely from the oracle-gated operators, and returns both
   * the kept corpus and a per-stage funnel summary (stage, n_in, n_out).
   *
-  * Execution contract — the stages refine an ID SET, never the corpus:
-  * every per-document signal a stage decides on (content hash, quality
-  * keep flag, quality score, token count) is computed in ONE projection
-  * over the corpus text, and only that metadata frame (~50 bytes/doc;
-  * ~½ KB/doc when `dedupNear` adds the 64-minima MinHash signature) is
-  * ever pinned (`localCheckpoint` by default, a reliable parquet spill
-  * under `cfg.checkpointDir` when set — see [[Pin]]); the contamination
-  * fraction — the one signal
-  * needing its own aggregation shape (shingle explode + benchmark
-  * semi-join) — is doc-local, so it too is computed once up front and
-  * joined into the metadata regardless of what earlier stages drop.
-  * The gate stages are then SEQUENTIAL SURVIVAL FLAGS on that one
-  * metadata frame (each stage's flag = previous flag AND its own rule),
-  * so the whole funnel's n_in/n_out column is ONE aggregation job, not a
-  * checkpoint-and-count per stage; only the token-budget stage — whose
-  * greedy selection needs a sort + prefix sum — runs as its own job over
-  * the survivors. The kept corpus is a single final semi-join of the
-  * input against the surviving ids. At 100 TB the corpus text is READ
-  * exactly twice (signal projection; contamination scan — both
-  * column-pruned parquet scans) and WRITTEN/checkpointed zero times,
-  * where the previous design checkpointed the full text frame after
-  * every stage and computed the stats struct twice.
+  * Execution contract: [[Funnel]]. The signals, all from ONE projection
+  * over the corpus text: the normalized content hash, the quality keep
+  * flag, the MinHash signature (`dedupNear`), the quality score and token
+  * count (`tokenBudget`), plus the doc-local contamination fraction
+  * against `evalDocs`, joined in from its own shingle scan. The corpus
+  * text is read by those two scans and by the kept frame; the pinned
+  * metadata is ~50 bytes/doc (~½ KB/doc with the signature), and a
+  * `checkpointDir` makes the pins reliable parquet spills.
   *
   * Stage semantics (all identical to their standalone operators):
   *  - exact dedup: keep the min-id document per normalized content hash
@@ -100,22 +82,11 @@ object DocPipeline {
       evalDocs: Option[DataFrame],
       cfg: DocPipelineConfig = DocPipelineConfig()
   ): DocPipelineResult = {
-    val spark = docs.sparkSession
     val doDedup = cfg.dedupExact
     val doQuality = cfg.qualityGate
     val doDecon = cfg.decontaminate && evalDocs.nonEmpty
     val doNear = cfg.dedupNear
     val doBudget = cfg.tokenBudget.nonEmpty
-    val stages = Seq.newBuilder[(String, Long, Long)]
-
-    if (!doDedup && !doQuality && !doDecon && !doNear && !doBudget) {
-      // nothing to decide: the input passes through untouched (same frame,
-      // not a self-semi-join — duplicate ids survive as they arrived)
-      val n = docs.count()
-      stages += (("00_input", n, n))
-      return DocPipelineResult(docs,
-        spark.createDataFrame(stages.result()).toDF("stage", "n_in", "n_out"))
-    }
 
     // the single signal projection: only the signals enabled stages will
     // read are computed (md5-normalization is not free when dedup is off).
@@ -140,112 +111,43 @@ object DocPipeline {
             TextFunctions.textStats(textCol).getField("n_tokens")
               .cast("long").as("_nt"))
         else Nil)
-    var meta = docs.select(sigCols: _*)
-    if (doDecon) {
-      val frac = Dedup.contaminationScan(docs, evalDocs.get, idCol, textCol,
+    // the contamination fraction needs its own aggregation shape, but is
+    // doc-local: computed once and joined in, whatever earlier gates drop
+    def signals(pin: DataFrame => DataFrame): DataFrame = {
+      val meta = docs.select(sigCols: _*)
+      if (!doDecon) meta
+      else meta.join(Dedup.contaminationScan(docs, evalDocs.get, idCol, textCol,
           cfg.contaminationN)
-        .select(col("doc_id").as("_id"), col("contamination").as("_contam"))
-      meta = meta.join(frac, Seq("_id"), "left")
+        .select(col("doc_id").as("_id"), col("contamination").as("_contam")),
+        Seq("_id"), "left")
     }
 
-    // sequential survival flags: each enabled gate ANDs its rule onto the
-    // previous stage's flag. The dedup rule needs the per-hash min id —
-    // one window exchange inside the same plan. With dedupNear also on,
-    // the ~½ KB/doc signature rides this exchange; accepted DELIBERATELY:
-    // every alternative ships the same signature bytes through some other
-    // single metadata exchange instead (a narrow-window + join-back re-
-    // keys the wide frame by _hash or _id — same bytes; a separate sig
-    // sliver re-joining the survivors exchanges (id, sig) — same bytes;
-    // banding ALL docs and filtering pairs to survivors pays the 16-band
-    // explode on non-survivors — more). The near stage's own band
-    // exchange (~640 B/doc) dominates regardless, and everything here is
-    // still metadata — the corpus text never shuffles.
-    if (doDedup)
-      meta = meta.withColumn("_canon",
-        min(col("_id")).over(Window.partitionBy("_hash")))
-    var survive = lit(true)
-    val gateFlags = Seq.newBuilder[String]   // flag col per enabled gate
-    val gateNames = Seq.newBuilder[String]
-    def gate(name: String, flag: String, enabled: Boolean)(rule: Column): Unit =
-      if (enabled) {
-        survive = survive && rule
-        meta = meta.withColumn(flag, survive)
-        gateFlags += flag; gateNames += name
-      }
-    gate("10_exact_dedup", "_s_dedup", doDedup)(col("_id") === col("_canon"))
-    gate("20_quality_gate", "_s_qual", doQuality)(col("_keep"))
-    gate("30_decontaminate", "_s_decon", doDecon)(
+    // the dedup rule's per-hash min id is one window exchange inside the
+    // metadata plan. With dedupNear also on, the ~½ KB/doc signature rides
+    // this exchange; accepted DELIBERATELY: every alternative ships the
+    // same signature bytes through some other single metadata exchange,
+    // and the near stage's own band exchange (~640 B/doc) dominates
+    // regardless. The corpus text never shuffles.
+    val gates = Seq(
+      doDedup -> Funnel.Gate("10_exact_dedup", _ =>
+        col("_id") === min(col("_id")).over(Window.partitionBy("_hash"))),
+      doQuality -> Funnel.Gate("20_quality_gate", _ => col("_keep")),
       // null fraction (too short to shingle) keeps, like the standalone op
-      col("_contam").isNull || col("_contam") <= cfg.contaminationMaxFrac)
-
-    val flags = gateFlags.result()
-    val m = Pin.pin(meta, cfg.checkpointDir).df
-    // the whole gate funnel counted in ONE aggregation job
-    val countCols = count(lit(1)).as("_n0") +:
-      flags.map(f => sum(when(col(f), 1L).otherwise(0L)).as(s"_n$f"))
-    val countsRow = m.agg(countCols.head, countCols.tail: _*).collect()(0)
-    // sum() over zero rows is NULL, not 0 — an empty corpus must produce
-    // an all-zero funnel, not an NPE
-    val funnel: Seq[Long] = (0 to flags.size).map(i =>
-      if (countsRow.isNullAt(i)) 0L else countsRow.getLong(i))
-    stages += (("00_input", funnel.head, funnel.head))
-    gateNames.result().zipWithIndex.foreach { case (name, i) =>
-      stages += ((name, funnel(i), funnel(i + 1)))
-    }
-
-    val lastFlag = flags.lastOption.map(col).getOrElse(lit(true))
-    var surv = m.filter(lastFlag)
-    var nCur = funnel.last
-    if (doNear) {
-      // near-dedup over the surviving (id, signature) sliver — banded
-      // candidates, components, drop non-canonical members. Its own
-      // jobs (the banded self-join + CC iterations have their own plan
-      // shapes), but still metadata-only work: the signatures came off
-      // the one signal projection, the text is never re-read. Docs too
-      // short to shingle carry a NULL signature, pair with nothing, and
-      // survive as their own identity.
-      val pairs = Dedup.minHashCandidatesFromSignatures(
+      doDecon -> Funnel.Gate("30_decontaminate", _ =>
+        col("_contam").isNull || col("_contam") <= cfg.contaminationMaxFrac)
+    ).collect { case (true, g) => g }
+    // docs too short to shingle carry a NULL signature, pair with nothing,
+    // and survive as their own identity
+    val near = if (!doNear) None else Some(Funnel.Step("35_near_dedup", surv =>
+      Dedup.minHashCandidatesFromSignatures(
         surv.select(col("_id").as("doc_id"), col("_sig").as("sig")),
-        cfg.nearNumHashes, cfg.nearBands, cfg.nearMinSigAgreement)
-      val ccDir = cfg.checkpointDir
-        .map(d => s"$d/cc-scratch-${java.util.UUID.randomUUID()}")
-      val labels = Dedup.connectedComponents(pairs, checkpointDir = ccDir)
-      val dropIds = labels.filter(col("component") =!= col("doc_id"))
-        .select(col("doc_id").as("_drop_id"))
-      // id-only pin — lets the CC result be released/deleted NOW instead
-      // of leaking while downstream stages lazily reference it
-      val keptIds = Pin.pin(
-        surv.select(col("_id"))
-          .join(dropIds, col("_id") === col("_drop_id"), "left_anti"),
-        cfg.checkpointDir).df
-      val nNear = keptIds.count()
-      stages += (("35_near_dedup", nCur, nNear))
-      Dedup.release(labels)
-      ccDir.foreach(Pin.dropPath(spark, _))
-      surv = surv.join(keptIds.select(col("_id").as("_keep_id")),
-        col("_id") === col("_keep_id"), "left_semi")
-      nCur = nNear
-    }
-    var finalIds = surv.select(col("_id"))
-    var finalCount = nCur
-    cfg.tokenBudget.foreach { budget =>
-      val picked = Sampling
-        .selectByBudget(surv.select(col("_id"), col("_q"), col("_nt")),
-          "_id", "_q", "_nt", budget)
-        .select(col("_id"))
-      val nPicked = picked.count()
-      stages += (("40_token_budget", nCur, nPicked))
-      finalIds = picked
-      finalCount = nPicked
-    }
-    // size-gated final semi-join (KeepJoin): the funnel already counted
-    // the surviving ids, so the id sliver broadcasts when it fits and
-    // the corpus text never serializes into shuffle files — the same
-    // sf10-measured fix as CrawlPipeline's kept frame
-    val kept = KeepJoin.semi(docs, docs(idCol), finalIds, "_id", finalCount,
-      cfg.keepIdsBroadcastLimit, cfg.keepIdsBloomLimit)
-    val summary = spark.createDataFrame(stages.result())
-      .toDF("stage", "n_in", "n_out")
+        cfg.nearNumHashes, cfg.nearBands, cfg.nearMinSigAgreement)))
+    val budget = cfg.tokenBudget.map(b => Funnel.Step("40_token_budget", surv =>
+      Sampling.selectByBudget(surv.select(col("_id"), col("_q"), col("_nt")),
+        "_id", "_q", "_nt", b)))
+
+    val (kept, summary) = Funnel.run(docs, docs(idCol), "00_input",
+      cfg.checkpointDir, signals, gates, near, budget)
     DocPipelineResult(kept, summary)
   }
 

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The final corpus-vs-kept-ids semi-join both orchestrators end on —
+/** The final corpus-vs-kept-ids semi-join the curation [[Funnel]] ends on —
   * size-gated (the [[graft.operators.Graph]] three-path discipline) so
   * the CORPUS side never pays a full-width shuffle it doesn't have to.
   *
@@ -50,10 +50,9 @@ private[pipeline] object KeepJoin {
     * expression tree (and it rides into plan strings / the UI) for the
     * life of the query, on top of the executors' broadcast copies — the
     * ceiling is sized so that cost stays a fraction of a default driver
-    * heap, not a multiple. Raise `bloomLimit` explicitly (the pipeline
-    * configs expose it) only with driver memory provisioned for
-    * ~1.2 bytes/id; beyond the ceiling the plain sort-merge tier is the
-    * memory-safe exact path. */
+    * heap, not a multiple. A caller passing a higher `bloomLimit` needs
+    * driver memory provisioned for ~1.2 bytes/id; beyond the ceiling the
+    * plain sort-merge tier is the memory-safe exact path. */
   val BloomIdLimit: Long = 200000000L
 
   def semi(

@@ -787,7 +787,7 @@ object Streaming {
         val b = batch.toDF().localCheckpoint() // one source scan: append + gauge
         try vectorFaceStep(spark, b, batchId, idCol, vecCol, indexDir,
           compactEvery, gaugeEvery, gaugeDir, gaugeK, gaugeNProbe): Unit
-        finally graft.operators.Dedup.release(b)
+        finally graft.io.Pin.release(b)
       }
       .start()
   }
@@ -1144,9 +1144,9 @@ object Streaming {
                 .withColumn("__graft_dup", col("__graft_dup_id").isNotNull)
                 .drop("__graft_dup_id")
                 .write.mode("overwrite").parquet(cur)
-              finally graft.operators.Dedup.release(dupIds)
+              finally graft.io.Pin.release(dupIds)
               graft.io.Commit.mark(spark, cur)
-            } finally graft.operators.Dedup.release(gated)
+            } finally graft.io.Pin.release(gated)
           }
           spark.read.parquet(cur).localCheckpoint()
         }
@@ -1236,7 +1236,7 @@ object Streaming {
                   "next cadence")
           }
         }
-      } finally graft.operators.Dedup.release(verdicts)
+      } finally graft.io.Pin.release(verdicts)
       // retention rides the compaction cadence: replay-dead emissions
       // (strictly below every face's committed watermark) reclaim; the
       // gauge ledger keeps a decision window's worth of extra history
@@ -1251,7 +1251,7 @@ object Streaming {
           emissionRetention(spark, Seq(gaugeDir), faces,
             retainTrailing = gaugeEvery * 8): Unit
       }
-    } finally graft.operators.Dedup.release(b)
+    } finally graft.io.Pin.release(b)
   }
 
   /** Running per-key count/sum with custom state; emits updated stats on

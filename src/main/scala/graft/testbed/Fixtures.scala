@@ -84,7 +84,7 @@ object Fixtures {
         .filter(_.isCachedColumnBuffersLoaded).map(_.cachedColumnBuffers.id).toSet
       sc.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!rddsBefore(id) && !cached(id))
-          graft.operators.Dedup.unpersistQuietly(rdd, blocking = true)
+          graft.io.Pin.unpersistQuietly(rdd, blocking = true)
       }
       val leaks = sc.getPersistentRDDs.keySet.filterNot(rddsBefore).toSeq.sorted.map(id => s"rdd $id") ++
         dirs.filter(Files.exists(_)).map(d => s"dir $d")

@@ -190,6 +190,24 @@ class CrawlPipelineSpec extends SparkSpec {
     assert(pins != null && pins.exists(_.getName.startsWith("pin-")))
   }
 
+  test("a local run leaves persisted exactly the pins its kept frame reads") {
+    val files = Seq(
+      (0L, Warc.build(Seq(page("http://x.com/p0", html(goodText))))),
+      (1L, Warc.build(Seq(page("http://x.com/p1", html(goodText))))),
+      (2L, Warc.build(Seq(page("http://x.com/p2", html(otherGoodText))))))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val res = CrawlPipeline.run(warcDf(files), "doc_id", None,
+      CrawlPipelineConfig(robotsGate = false))
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    val read = res.kept.queryExecution.analyzed.collectWithSubqueries {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(added.nonEmpty && added === read)
+    assert(res.kept.select("id").collect().map(_.getLong(0)).sorted === Array(0L, 2L))
+    added.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+  }
+
   test("robots gate without a robots table is a no-op stage") {
     val files = Seq(
       (30L, Warc.build(Seq(page("http://x.com/p", html(goodText))))))

@@ -62,6 +62,18 @@ class DocPipelineSpec extends SparkSpec {
     assert(pins != null && pins.exists(_.getName.startsWith("pin-")))
   }
 
+  test("a failed run leaves nothing under checkpointDir") {
+    // the agreement threshold's require fails after the metadata pin is
+    // written; the run's pins must go with it
+    val dir = SparkSpec.tempDir("graft-doc-fail").toString
+    intercept[IllegalArgumentException] {
+      DocPipeline.run(docs, "doc_id", "text", Some(evalSet),
+        DocPipelineConfig(dedupNear = true, checkpointDir = Some(dir),
+          nearMinSigAgreement = Some(2.0)))
+    }
+    assert(new java.io.File(dir).listFiles().toSeq === Nil)
+  }
+
   test("an empty corpus yields an all-zero funnel, not a null crash") {
     // sum() over zero rows is NULL; the funnel must read it as 0
     val r = DocPipeline.run(docs.filter(lit(false)), "doc_id", "text",

@@ -17,7 +17,7 @@ class TextIndexSpec extends SparkSpec {
     val dir = SparkSpec.tempDir("graft-textindex").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 32)
     val terms = Seq("hash", "join", "merge")
-    val fromIndex = TextIndex.bm25SearchIndex(spark, dir, terms, k = 15, buckets = 32)
+    val fromIndex = TextIndex.bm25SearchIndex(spark, dir, terms, k = 15)
       .collect().map(_.toSeq).toSeq
     val fromScan = Keywords.bm25Search(docs, "doc_id", "text", terms, k = 15)
       .collect().map(_.toSeq).toSeq
@@ -28,7 +28,7 @@ class TextIndexSpec extends SparkSpec {
   test("the postings scan is pruned to the probed buckets") {
     val dir = SparkSpec.tempDir("graft-textindex2").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 32)
-    val q = TextIndex.bm25SearchIndex(spark, dir, Seq("hash"), k = 5, buckets = 32)
+    val q = TextIndex.bm25SearchIndex(spark, dir, Seq("hash"), k = 5)
     // AQE wraps finished stages in QueryStageExec leaves (the IvfIndexSpec
     // collector): force execution, then recurse through them
     q.count()
@@ -57,10 +57,9 @@ class TextIndexSpec extends SparkSpec {
     val dir = SparkSpec.tempDir("graft-textindex4").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 250), "doc_id", "text",
       dir, buckets = 16)
-    TextIndex.appendToIndex(docs.filter(col("doc_id") >= 250), "doc_id", "text",
-      dir, buckets = 16)
+    TextIndex.appendToIndex(docs.filter(col("doc_id") >= 250), "doc_id", "text", dir)
     val terms = Seq("hash", "join", "merge")
-    val incremental = TextIndex.bm25SearchIndex(spark, dir, terms, k = 15, buckets = 16)
+    val incremental = TextIndex.bm25SearchIndex(spark, dir, terms, k = 15)
       .collect().map(_.toSeq).toSeq
     val full = Keywords.bm25Search(docs, "doc_id", "text", terms, k = 15)
       .collect().map(_.toSeq).toSeq
@@ -72,7 +71,7 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 16)
     for (phrase <- Seq(Seq("table", "table"), Seq("fast", "key"),
         Seq("value", "table", "part"), Seq("no-such-term", "table"))) {
-      val fromIndex = TextIndex.phraseSearchIndex(spark, dir, phrase, buckets = 16)
+      val fromIndex = TextIndex.phraseSearchIndex(spark, dir, phrase)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       val fromScan = Keywords.phraseSearch(docs, "doc_id", "text", phrase)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -81,44 +80,41 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("append/search use the PERSISTED bucket count, not the caller's") {
-    // a mismatched caller value used to split a term's postings across two
+    // a caller-supplied count used to split a term's postings across two
     // directories (append) or probe the wrong directory (search); the
-    // stats sidecar now records the layout and every entry point resolves
-    // through it
+    // stats sidecar records the layout, and the faces after the build take
+    // no count at all, so they must read the stored 16, not the default 64
     import org.apache.spark.sql.functions.col
     val dir = SparkSpec.tempDir("graft-textindex6").toString
     TextIndex.writeIndex(docs.filter(col("doc_id") < 250), "doc_id", "text",
       dir, buckets = 16)
-    // deliberately wrong bucket counts everywhere downstream
-    TextIndex.appendToIndex(docs.filter(col("doc_id") >= 250), "doc_id", "text",
-      dir, buckets = 64)
+    TextIndex.appendToIndex(docs.filter(col("doc_id") >= 250), "doc_id", "text", dir)
     val terms = Seq("hash", "join", "merge")
-    val viaWrong = TextIndex.bm25SearchIndex(spark, dir, terms, k = 15, buckets = 8)
+    val viaStored = TextIndex.bm25SearchIndex(spark, dir, terms, k = 15)
       .collect().map(_.toSeq).toSeq
     val full = Keywords.bm25Search(docs, "doc_id", "text", terms, k = 15)
       .collect().map(_.toSeq).toSeq
-    assert(viaWrong === full)
-    val phraseWrong = TextIndex.phraseSearchIndex(spark, dir, Seq("fast", "key"),
-        buckets = 4)
+    assert(viaStored === full)
+    val phraseStored = TextIndex.phraseSearchIndex(spark, dir, Seq("fast", "key"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val phraseScan = Keywords.phraseSearch(docs, "doc_id", "text", Seq("fast", "key"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(phraseWrong === phraseScan)
+    assert(phraseStored === phraseScan)
   }
 
   test("a disjoint query over the same index finds its own postings") {
     val dir = SparkSpec.tempDir("graft-textindex3").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dir, buckets = 8)
-    val out = TextIndex.bm25SearchIndex(spark, dir, Seq("customer"), k = 3, buckets = 8)
+    val out = TextIndex.bm25SearchIndex(spark, dir, Seq("customer"), k = 3)
       .collect()
     val scan = Keywords.bm25Search(docs, "doc_id", "text", Seq("customer"), k = 3)
       .collect()
     assert(out.map(_.toSeq).toSeq === scan.map(_.toSeq).toSeq)
   }
 
-  private def search(dir: String, buckets: Int): Seq[Seq[Any]] =
+  private def search(dir: String): Seq[Seq[Any]] =
     TextIndex.bm25SearchIndex(spark, dir,
-      Seq("hash", "join", "merge"), k = 15, buckets = buckets)
+      Seq("hash", "join", "merge"), k = 15)
       .collect().map(_.toSeq).toSeq
 
   test("appendToIndex retry is idempotent: content tag overwrites itself") {
@@ -132,14 +128,14 @@ class TextIndexSpec extends SparkSpec {
     val delta = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 5 === 0)
     TextIndex.writeIndex(base, "doc_id", "text", dir, buckets = 16)
     TextIndex.appendToIndex(delta, "doc_id", "text", dir)
-    val once = search(dir, 16)
+    val once = search(dir)
     TextIndex.appendToIndex(delta, "doc_id", "text", dir) // the naive retry
-    assert(search(dir, 16) === once,
+    assert(search(dir) === once,
       "a retried append must not change tf or the stats ledger")
     // and both equal the from-scratch index (normalizers counted once)
     val dirFull = SparkSpec.tempDir("graft-ti-retry-f").toString
     TextIndex.writeIndex(docs, "doc_id", "text", dirFull, buckets = 16)
-    assert(once === search(dirFull, 16))
+    assert(once === search(dirFull))
   }
 
   private def statsBatchDirs(dir: String): Seq[String] =
@@ -157,18 +153,18 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.appendToIndex(docs.filter(col("doc_id") % 3 === 2),
       "doc_id", "text", dir)
     assert(statsBatchDirs(dir).length === 3, "one ledger row per append")
-    val pre = search(dir, 8)
+    val pre = search(dir)
     TextIndex.compact(spark, dir)
-    assert(search(dir, 8) === pre, "consolidated totals must be exact")
+    assert(search(dir) === pre, "consolidated totals must be exact")
     // the fold is logical (snapshot-pinned readers keep the old rows);
     // vacuum is the physical reclaim that leaves ONE ledger row on disk
     TextIndex.vacuum(spark, dir): Unit
     assert(statsBatchDirs(dir).length === 1,
       "compaction must consolidate the ledger, not let it grow forever")
-    assert(search(dir, 8) === pre, "vacuum changed the served totals")
+    assert(search(dir) === pre, "vacuum changed the served totals")
     // idempotent: a second compact is a no-op on a single-row ledger
     TextIndex.compact(spark, dir)
-    assert(statsBatchDirs(dir).length === 1 && search(dir, 8) === pre)
+    assert(statsBatchDirs(dir).length === 1 && search(dir) === pre)
   }
 
   test("day-zero index: built empty, serves empty, grows by append") {
@@ -179,15 +175,15 @@ class TextIndexSpec extends SparkSpec {
     val dir = SparkSpec.tempDir("graft-ti-zero").toString
     TextIndex.writeIndex(docs.limit(0), "doc_id", "text", dir, buckets = 8)
     assert(TextIndex.bm25SearchIndex(spark, dir,
-      Seq("hash"), k = 5, buckets = 8).isEmpty,
+      Seq("hash"), k = 5).isEmpty,
       "an empty index must serve empty, not throw")
     assert(TextIndex.phraseSearchIndex(spark, dir,
-      Seq("hash", "join"), buckets = 8).isEmpty)
+      Seq("hash", "join")).isEmpty)
     val half = docs.filter(org.apache.spark.sql.functions.col("doc_id") < 150)
     TextIndex.appendToIndex(half, "doc_id", "text", dir)
     val dirRef = SparkSpec.tempDir("graft-ti-zero-f").toString
     TextIndex.writeIndex(half, "doc_id", "text", dirRef, buckets = 8)
-    assert(search(dir, 8) === search(dirRef, 8),
+    assert(search(dir) === search(dirRef),
       "empty-then-append must equal the from-scratch build")
   }
 }

@@ -306,16 +306,15 @@ class ManifestHardeningSpec extends graft.SparkSpec {
     val terms = Seq("hash", "join", "merge")
     def res(d: DataFrame) = d.collect().map(_.toSeq).toSeq
     val bm25Pin = res(TextIndex.bm25SearchIndex(spark, dir, terms,
-      k = 15, buckets = 8))
+      k = 15))
     val phrasePin = res(TextIndex.phraseSearchIndex(spark, dir,
-      Seq("table", "table"), buckets = 8).orderBy("doc_id"))
+      Seq("table", "table")).orderBy("doc_id"))
     // maintenance: append the rest of the corpus (normalizers shift,
     // new docs enter), then compact (postings + ledger consolidate)
     TextIndex.appendToIndex(docs.filter(col("doc_id") >= 200),
       "doc_id", "text", dir)
     TextIndex.compact(spark, dir): Unit
-    assert(res(TextIndex.bm25SearchIndex(spark, dir, terms, k = 15,
-      buckets = 8)) !== bm25Pin,
+    assert(res(TextIndex.bm25SearchIndex(spark, dir, terms, k = 15)) !== bm25Pin,
       "fixture must actually change the live ranking")
     // the pinned eval re-executes bit-identically against v(N)
     assert(res(TextIndex.bm25SearchIndexAt(spark, dir, vPin, terms,
@@ -344,7 +343,7 @@ class ManifestHardeningSpec extends graft.SparkSpec {
     TextIndex.appendToIndex(delta, "doc_id", "text", dir)
     val vN = Manifest.current(spark, dir).get // references attempt 1
     def search() = TextIndex.bm25SearchIndex(spark, dir,
-      Seq("hash", "join", "merge"), k = 15, buckets = 8)
+      Seq("hash", "join", "merge"), k = 15)
       .collect().map(_.toSeq).toSeq
     val once = search()
     // the ambiguous-failure retry: the caller saw an error AFTER the
